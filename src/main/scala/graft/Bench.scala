@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main (driver contract — prints ONE JSON line on stdout).
   *
   * PROTOCOL (r15): the registry outgrew the driver's wall budget — r14's
@@ -159,7 +161,7 @@ object Bench {
       .findAllMatchIn(txt.substring(i + 11, txt.indexOf('}', i)))
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       System.err.println(s"[bench] prev artifact $path unreadable (${e.getMessage}) — deltas disabled")
       Map.empty
   }
@@ -181,7 +183,7 @@ object Bench {
       exec(nation.select(col("n_nationkey"),
         sum(col("n_nationkey")).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("n_regionkey")).orderBy(col("n_nationkey"))).as("rt")))
-    } catch { case e: Throwable => System.err.println(s"[bench warmup] ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench warmup] ${e.getMessage}") }
   }
 
   def main(args: Array[String]): Unit = {
@@ -215,7 +217,7 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         TempDirs.purgeAll()
         try exec(d.run(spark, warmDir))
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench warmup] ${d.name}: ${e.getMessage}")
         }
       }
@@ -249,7 +251,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { exec(d.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] ${d.name}: ${e.getMessage}")
           None
       }
@@ -286,6 +288,9 @@ object Bench {
     // left every heavy def single-rep in one run, a heavy-first queue
     // left every suspect uncorrected in another).
     var budgetHit = false
+    // noisy defs the adjudication pass could not afford (additions-only
+    // `adjudication_skipped` in the artifact)
+    val adjudicationSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
     if (maxReps > 1) {
       val t1 = times.toMap.view.mapValues(_.head).toMap
       val suspects = t1.collect {
@@ -330,6 +335,9 @@ object Bench {
           (1 to 2).foreach { _ =>
             measure(byName(name)).foreach { t => times(name) = times(name) :+ t; spent += t }
           }
+        } else {
+          budgetHit = true
+          adjudicationSkipped += name
         }
       }
     }
@@ -361,6 +369,7 @@ object Bench {
     val qs = results.collect { case (k, Some((v, _, _))) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val failed = crashed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val adjSkipped = adjudicationSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.flatMap(_._2.map(_._1)).sum
     // cross-round regression signal (VERDICT r13 #1): per-def median ratio
     // vs the previous committed artifact (floored at prev ≥ 0.05 s — ADVICE
@@ -387,7 +396,7 @@ object Bench {
     val calibMids = calibMid.map { case (o, c) => f"[$o%.1f,$c%.3f]" }
       .mkString("[", ",", "]")
     val line =
-      f"""{"t_off":$offMap,"queries_rep1":$rep1s,"noisy_reps":$noisy,"delta_vs_prev":$deltaMap,"spread":$spreads,"queries_min":$mins,"queries":$qs,"failed":$failed,"sf":"$sfDir","n_queries":$nQueries,"n_rep1":$nRep1,"budget_sec":$budgetSec%.0f,"budget_hit":$budgetHit,"measured_sec":$spent%.1f,"calib_mid":$calibMids,"delta_median_vs_prev":$deltaMedian%.2f,"n_delta_over_2x":$deltaOver2x,"calib_sec":$calib%.3f,"metric":"total","value":$total%.2f,"unit":"sec"}"""
+      f"""{"t_off":$offMap,"queries_rep1":$rep1s,"noisy_reps":$noisy,"delta_vs_prev":$deltaMap,"spread":$spreads,"queries_min":$mins,"queries":$qs,"failed":$failed,"sf":"$sfDir","n_queries":$nQueries,"n_rep1":$nRep1,"budget_sec":$budgetSec%.0f,"budget_hit":$budgetHit,"adjudication_skipped":$adjSkipped,"measured_sec":$spent%.1f,"calib_mid":$calibMids,"delta_median_vs_prev":$deltaMedian%.2f,"n_delta_over_2x":$deltaOver2x,"calib_sec":$calib%.3f,"metric":"total","value":$total%.2f,"unit":"sec"}"""
     println(line)
     // Full, untruncated copy for the repo (the stdout tail is lossy). The
     // path is anchored (env-overridable), not CWD-relative — a run launched
@@ -395,7 +404,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(benchOut)
       try w.println(line) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] $benchOut: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] $benchOut: ${e.getMessage}") }
     spark.stop()
   }
 }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Plan-evidence dumper (r16 optimization round): writes
   * `.explain("formatted")` output for named defs to `<outDir>/<name>.txt`
   * so before/after physical plans can be committed beside the bench
@@ -60,7 +62,7 @@ object PlanDump {
           Paths.get(s"$outDir/$n.txt".replace("probe:", "probe_").replace("final:", "final_")),
           plan)
         System.err.println(s"[plandump] wrote $n")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")
       }
     }

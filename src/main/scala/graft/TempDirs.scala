@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Temp workspaces for store-building QueryDefs (persisted ANN/text indexes,
   * manifested-table lifecycles, sketch stores). A def that materializes an
@@ -36,7 +37,7 @@ object TempDirs {
   def purgeAll(): Unit = synchronized {
     roots.foreach { p =>
       try deleteTree(p)
-      catch { case e: Throwable => System.err.println(s"[tempdirs] purge $p: ${e.getMessage}") }
+      catch { case NonFatal(e) => System.err.println(s"[tempdirs] purge $p: ${e.getMessage}") }
     }
     roots.clear()
   }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,7 +21,7 @@ object Verify {
       if (keep(name))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
@@ -52,7 +53,7 @@ object Verify {
         val anchored = sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT",
           "/root/repo/RECALL_last.json")
         Files.writeString(Paths.get(anchored), json)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] recall report failed: ${e.getMessage}")
       }
     spark.stop()

@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.util.control.NonFatal
+
 /** Env-driven pipeline configuration — the reference's config module
   * (/root/reference/src/config.py:54-101) re-expressed for the Spark
   * engine: database parameters from DB_* environment variables, logging
@@ -69,7 +71,9 @@ object EtlConfig {
 
   /** Bounded retry with fixed delay — the reference's MAX_DB_RETRIES /
     * RETRY_DELAY loop around database operations. Retries on any
-    * exception, rethrows the last one when attempts are exhausted.
+    * non-fatal exception, rethrows the last one when attempts are
+    * exhausted; a fatal throwable (OOM, interrupt, ...) propagates at once,
+    * without a sleep or a retry.
     */
   def withRetries[T](maxRetries: Int, delaySec: Int, log: String => Unit = _ => ())(
       body: => T): T = {
@@ -81,7 +85,7 @@ object EtlConfig {
         Thread.sleep(delaySec * 1000L)
       }
       try return body
-      catch { case e: Throwable => last = e; attempt += 1 }
+      catch { case NonFatal(e) => last = e; attempt += 1 }
     }
     throw last
   }

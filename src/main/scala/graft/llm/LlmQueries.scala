@@ -3079,9 +3079,10 @@ object LlmQueries {
 
   // x42 — INCREMENTAL index maintenance for the x39 postings store: the
   // corpus lands in two appends (even/odd doc halves) under the store
-  // family's staged-version + CURRENT-pointer protocol (bucket layout
-  // preserved INSIDE each version, so pruning survives versioning), and
-  // the serve merges versions by additive tf. x39's VERBATIM oracle
+  // family's staged-version + CURRENT-pointer protocol (each version's
+  // files sorted on (bucket, term), so row-group pruning survives
+  // versioning), and the serve reads all versions in one scan and merges
+  // them by additive tf. x39's VERBATIM oracle
   // hash-proves incremental ≡ from-scratch — the x27/x28/d08 pattern, now
   // for the text-retrieval store.
   private val x42 = q("x42_search_incremental", Some(keywordSearchOracleSql)) { t =>

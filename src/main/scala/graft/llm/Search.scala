@@ -20,14 +20,24 @@ import org.apache.spark.sql.expressions.Window
   *   - build: one narrow explode over the corpus followed by a map-side-
   *     combined groupBy(term, doc_id) — the exchange carries postings
   *     (two longs + a term), never document text;
-  *   - layout: `partitionBy(bucket)` directories, bucket = md5(term) mod B,
-  *     so the term space spreads uniformly whatever its skew (a hot term
-  *     concentrates its OWN postings run, not a directory hot-spot);
+  *   - layout: bucket = md5(term) mod B, so the term space spreads
+  *     uniformly whatever its skew (a hot term concentrates its OWN
+  *     postings run, not a directory hot-spot). A one-shot build
+  *     ([[writeIndex]]/[[writeRankedIndex]]) is corpus-sized, so it lands
+  *     as `partitionBy(bucket)` directories and file-level pruning pays
+  *     off. A versioned store's per-batch delta is small: each version is
+  *     plain files sorted on (bucket, term), `bucket` kept as a data
+  *     column whose row-group min/max stats prune instead — B directories
+  *     per small batch would multiply file count, listing and footer
+  *     reads by B for no pruning gain;
   *   - serve: the query's terms hash DRIVER-SIDE (same md5, no Spark job)
-  *     to a bucket list → partition pruning reads |query buckets|/B of the
-  *     index; the `term IN (...)` equality then pushes into parquet
-  *     row-group stats. The doc_id groupBy that intersects the posting
-  *     lists exchanges only rows for the queried terms.
+  *     to a bucket list → partition pruning (one-shot) or row-group
+  *     pruning (versioned) reads about |query buckets|/B of the index; the
+  *     `term IN (...)` equality then pushes into parquet row-group stats.
+  *     A versioned serve reads every committed version in ONE scan, so
+  *     its per-query cost does not grow a relation per append. The doc_id
+  *     groupBy that intersects the posting lists exchanges only rows for
+  *     the queried terms.
   *
   * Conjunctive (AND) semantics with exact integer tf ranking; postings are
   * unique on (term, doc_id) so `count(*)` per doc counts DISTINCT matched
@@ -161,17 +171,28 @@ object Search {
     val toks = TextFns.tokens(col(textCol))
     // dl = size BEFORE the empty-term drop, matching bm25Score's |d|
     val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
-    base.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-      .filter(length(col("term")) > 0)
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+    rankedPostings(base)
       .withColumn("bucket", termBucket(col("term"), buckets))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val st = base.agg(count(lit(1)).cast("long").as("n"),
-      sum(col("dl").cast("long")).as("tot")).collect()(0)
-    graft.warehouse.AtomicPointer.write(s"$path/$StatsFile",
-      s"${st.getLong(0)}\n${st.getLong(1)}\n")
+    graft.warehouse.AtomicPointer.write(s"$path/$StatsFile", corpusStats(base))
     graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
+  }
+
+  /** Ranked postings (term, doc_id, dl, tf) of `base` (doc_id, dl, w). */
+  private def rankedPostings(base: DataFrame): DataFrame =
+    base.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
+      .filter(length(col("term")) > 0)
+      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+
+  /** The exact-integer stats sidecar body (doc count, total tokens) of
+    * `base` — one eager 1-row action. The token sum coalesces to 0 so an
+    * empty batch writes "0\n0\n" instead of failing on a null sum.
+    */
+  private def corpusStats(base: DataFrame): String = {
+    val st = base.agg(count(lit(1)).cast("long").as("n"),
+      coalesce(sum(col("dl").cast("long")), lit(0L)).as("tot")).collect()(0)
+    s"${st.getLong(0)}\n${st.getLong(1)}\n"
   }
 
   /** BM25 top-k serve from a [[writeRankedIndex]] store — the ranked
@@ -231,32 +252,64 @@ object Search {
       .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
 
-  /** Stage postings for one batch as the next version (bucket-partitioned
-    * under the version's `postings/` dir, so the serve path's pruning
-    * survives versioning), publish the dir, swap the CURRENT pointer — the
-    * store family's crash-safe protocol (a crash mid-append leaves the
-    * prior pointer live; the replay clobbers the orphan staging dir). An
-    * optional `tag` commits atomically WITH the version — the exactly-once
+  /** Stage the next version under `.staging-vN` (`stage` writes its
+    * contents), publish the dir, swap the CURRENT pointer — the store
+    * family's crash-safe protocol (a crash mid-append leaves the prior
+    * pointer live; the replay clobbers the orphan staging dir). An optional
+    * `tag` commits atomically WITH the version — the exactly-once
     * bookkeeping the streaming maintainer needs, since additive tf state
     * cannot be de-duplicated downstream.
     */
-  private def commitVersion(documents: DataFrame, path: String,
-                            replace: Boolean, buckets: Int,
-                            textCol: String, tag: Option[String]): Unit = {
+  private def commit(path: String, replace: Boolean, buckets: Int,
+                     tag: Option[String])(stage: String => Unit): Unit = {
     val committed = committedVersions(path)
     val next = "v" + (committed.filter(_.matches("v\\d+"))
       .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
     val staging = s"$path/.staging-$next"
-    postings(documents, textCol)
-      .withColumn("bucket", termBucket(col("term"), buckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/postings")
+    stage(staging)
     tag.foreach(t => graft.warehouse.AtomicPointer.write(s"$staging/TAG", t))
     graft.warehouse.AtomicPointer.publishDir(staging, s"$path/$next")
     checkBuckets(path, buckets)
     graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
     graft.warehouse.AtomicPointer.write(s"$path/$Pointer",
       ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))
+  }
+
+  /** One version's postings as plain parquet files sorted on
+    * (bucket, term): `bucket` stays a data column, so the serve's
+    * `bucket IN` / `term IN` filters prune on row-group min/max stats, and
+    * the version lands as one file per write task rather than B bucket
+    * directories of fragments. An empty batch still writes one schema-only
+    * file, so the single-scan serve can always infer the schema.
+    */
+  private def writeVersionPostings(postings: DataFrame, dir: String, buckets: Int): Unit =
+    postings
+      .withColumn("bucket", termBucket(col("term"), buckets))
+      .repartition(col("bucket"))
+      .sortWithinPartitions("bucket", "term")
+      .write.mode("overwrite").parquet(dir)
+
+  /** Commit one batch's postings as the next version
+    * ([[writeVersionPostings]] layout under the version's `postings/` dir).
+    */
+  private def commitVersion(documents: DataFrame, path: String,
+                            replace: Boolean, buckets: Int,
+                            textCol: String, tag: Option[String]): Unit =
+    commit(path, replace, buckets, tag) { staging =>
+      writeVersionPostings(postings(documents, textCol), s"$staging/postings", buckets)
+    }
+
+  /** Every committed version's postings as ONE scan with the query's
+    * `bucket IN` and `term IN` filters on it — one schema inference, one
+    * listing and one set of scan tasks however many versions the store
+    * has accrued (the way Dedup reads its versioned index tables).
+    */
+  private def scanVersions(spark: SparkSession, path: String, vs: Seq[String],
+                           lowered: Seq[String], buckets: Int): DataFrame = {
+    val bks = lowered.map(termBucketLocal(_, buckets)).distinct
+    spark.read.parquet(vs.map(v => s"$path/$v/postings"): _*)
+      .filter(col("bucket").isin(bks.map(Integer.valueOf): _*))
+      .filter(col("term").isin(lowered: _*))
   }
 
   /** Bootstrap the versioned index: commit `documents`' postings as the
@@ -293,40 +346,24 @@ object Search {
   private def versionStats(path: String, v: String) = s"$path/$v/STATS"
 
   /** Commit one batch's RANKED postings (term, doc_id, dl, tf) as the next
-    * version, with the batch's own exact-integer stats beside it — the
-    * additive unit: corpus stats are Σ over committed versions, so appends
-    * stay O(batch) like the conjunctive store. Contract: documents arrive
-    * WHOLE in one batch (dl rides the posting; a doc split across batches
-    * would carry inconsistent lengths — the tf-additive split-doc tolerance
-    * of the conjunctive store does not extend here).
+    * version ([[writeVersionPostings]] layout), with the batch's own
+    * exact-integer stats beside it — the additive unit: corpus stats are Σ
+    * over committed versions, so appends stay O(batch) like the
+    * conjunctive store. Contract: documents arrive WHOLE in one batch (dl
+    * rides the posting; a doc split across batches would carry
+    * inconsistent lengths — the tf-additive split-doc tolerance of the
+    * conjunctive store does not extend here).
     */
   private def commitRankedVersion(documents: DataFrame, path: String,
                                   replace: Boolean, buckets: Int,
                                   textCol: String,
-                                  tag: Option[String] = None): Unit = {
-    val committed = committedVersions(path)
-    val next = "v" + (committed.filter(_.matches("v\\d+"))
-      .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
-    val staging = s"$path/.staging-$next"
-    val toks = TextFns.tokens(col(textCol))
-    val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
-    base.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-      .filter(length(col("term")) > 0)
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", termBucket(col("term"), buckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/postings")
-    val st = base.agg(count(lit(1)).cast("long").as("n"),
-      sum(col("dl").cast("long")).as("tot")).collect()(0)
-    graft.warehouse.AtomicPointer.write(s"$staging/STATS",
-      s"${st.getLong(0)}\n${st.getLong(1)}\n")
-    tag.foreach(t => graft.warehouse.AtomicPointer.write(s"$staging/TAG", t))
-    graft.warehouse.AtomicPointer.publishDir(staging, s"$path/$next")
-    checkBuckets(path, buckets)
-    graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
-    graft.warehouse.AtomicPointer.write(s"$path/$Pointer",
-      ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))
-  }
+                                  tag: Option[String] = None): Unit =
+    commit(path, replace, buckets, tag) { staging =>
+      val toks = TextFns.tokens(col(textCol))
+      val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
+      writeVersionPostings(rankedPostings(base), s"$staging/postings", buckets)
+      graft.warehouse.AtomicPointer.write(s"$staging/STATS", corpusStats(base))
+    }
 
   /** Bootstrap the versioned RANKED index. */
   def initRankedIndex(documents: DataFrame, path: String,
@@ -343,8 +380,9 @@ object Search {
                           tag: Option[String] = None): Unit =
     commitRankedVersion(documents, path, replace = false, buckets, textCol, tag)
 
-  /** [[searchRanked]] against the VERSIONED ranked index: postings of the
-    * query's buckets merge across versions by additive tf on
+  /** [[searchRanked]] against the VERSIONED ranked index: one scan over
+    * every committed version's postings (bucket- and term-filtered on the
+    * row-group stats of the sorted files), merged by additive tf on
     * (term, doc_id, dl); corpus stats are the exact-integer Σ of the
     * per-version sidecars; scoring is identical to the one-shot serve, so
     * incremental ≡ from-scratch hash-exactly (x48 pins it against x45's
@@ -366,15 +404,12 @@ object Search {
     }
     val (nDocs, totTokens) = (stats.map(_(0)).sum, stats.map(_(1)).sum)
     val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
-    val bks = lowered.map(termBucketLocal(_, buckets)).distinct
-    val posts = vs.map { v =>
-      spark.read.parquet(s"$path/$v/postings")
-        .filter(col("bucket").isin(bks.map(Integer.valueOf): _*))
-        .filter(col("term").isin(lowered: _*))
-        .select("term", "doc_id", "dl", "tf")
-    }.reduce(_.unionByName(_))
+    val posts = scanVersions(spark, path, vs, lowered, buckets)
       .groupBy("term", "doc_id", "dl").agg(sum("tf").as("tf"))
-    val idf = posts.groupBy("term").agg(count(lit(1)).as("n_t"))
+    // count(tf), not count(1): tf is never null, and keeping it referenced
+    // gives the df branch the same pruned columns as the scoring branch, so
+    // the merge exchange is reused and the postings are scanned ONCE
+    val idf = posts.groupBy("term").agg(count(col("tf")).as("n_t"))
       .select(col("term"),
         log((lit(nDocs.toDouble) - col("n_t").cast("double") + 0.5) /
             (col("n_t").cast("double") + 0.5) + 1.0)
@@ -393,10 +428,11 @@ object Search {
   }
 
   /** [[searchAll]] against the VERSIONED index: every committed version is
-    * read through the same bucket-pruned, term-pushed scan, postings merge
-    * by additive tf on (term, doc_id), then the conjunctive intersection.
-    * The merge exchange carries only the queried terms' postings — version
-    * count never touches the corpus-sized build cost.
+    * read in ONE bucket- and term-filtered scan, postings merge by additive
+    * tf on (term, doc_id), then the conjunctive intersection. The merge
+    * exchange carries only the queried terms' postings — version count
+    * never touches the corpus-sized build cost, and adds files to the one
+    * scan rather than a relation per version.
     */
   def searchAllIndexed(spark: SparkSession, path: String, terms: Seq[String],
                        buckets: Int = DefaultBuckets): DataFrame = {
@@ -405,13 +441,7 @@ object Search {
     checkBuckets(path, buckets)
     val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
     require(lowered.nonEmpty, "searchAllIndexed: empty query")
-    val bks = lowered.map(termBucketLocal(_, buckets)).distinct
-    val merged = vs.map { v =>
-      spark.read.parquet(s"$path/$v/postings")
-        .filter(col("bucket").isin(bks.map(Integer.valueOf): _*))
-        .filter(col("term").isin(lowered: _*))
-        .select("term", "doc_id", "tf")
-    }.reduce(_.unionByName(_))
+    val merged = scanVersions(spark, path, vs, lowered, buckets)
       .groupBy("term", "doc_id").agg(sum("tf").as("tf"))
     merged
       .groupBy("doc_id")

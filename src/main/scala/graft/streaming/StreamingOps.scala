@@ -577,7 +577,7 @@ object StreamingOps {
 
   /** Continuous inverted-index maintenance — the text-retrieval twin of
     * [[ingestDsirCountsStream]]: each micro-batch's postings land as one
-    * bucket-partitioned version of the [[graft.llm.Search]] store, and
+    * (bucket, term)-sorted version of the [[graft.llm.Search]] store, and
     * keyword queries serve from the committed versions (additive tf merge)
     * with NO corpus rescan, seeing each batch as soon as its pointer swap
     * lands. Same replay posture as every additive store: the ReplayGuard

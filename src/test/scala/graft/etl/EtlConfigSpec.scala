@@ -50,6 +50,14 @@ class EtlConfigSpec extends AnyFunSuite {
     assert(e.getMessage == "always" && failCalls == 3) // 1 try + 2 retries
   }
 
+  test("withRetries rethrows a fatal throwable on the first attempt, without retrying") {
+    var calls = 0
+    intercept[InterruptedException] {
+      EtlConfig.withRetries(3, 1) { calls += 1; throw new InterruptedException("stop") }
+    }
+    assert(calls == 1)
+  }
+
   test("PhaseLog writes the reference line format to the file sink and brackets phases") {
     val f = Files.createTempDirectory("graft-log").resolve("etl.log").toString
     val log = new PhaseLog("etl_pipeline", "INFO", Some(f))

@@ -1,12 +1,13 @@
 package graft.llm
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.functions._
 
 /** Inverted text index (llm/Search): postings correctness, serve ≡ direct
   * corpus compute, driver/executor bucket agreement (the pruning contract),
-  * and the partition-pruned serve plan.
+  * the partition-pruned one-shot serve plan and the versioned stores'
+  * flat-file, single-scan shape.
   */
 class SearchSpec extends SparkSpec {
   import spark.implicits._
@@ -186,6 +187,80 @@ class SearchSpec extends SparkSpec {
     val merged = Search.searchRankedIndexed(spark, inc, terms, k = 10, buckets = 8)
       .orderBy("doc_id").collect().toSeq
     assert(one == merged, "incremental ranked serve must match the one-shot build bit-for-bit")
+  }
+
+  test("versioned stores: an empty append between batches serves ≡ one-shot build") {
+    val none = corpus.filter(lit(false))
+    val (evens, odds) = (corpus.filter(col("doc_id") % 2 === 0), corpus.filter(col("doc_id") % 2 === 1))
+    val oneShot = java.nio.file.Files.createTempDirectory("graft-search-e1s").toString
+    val inc = java.nio.file.Files.createTempDirectory("graft-search-einc").toString
+    Search.writeIndex(corpus, oneShot, buckets = 8)
+    Search.initIndex(evens, inc, buckets = 8)
+    Search.appendToIndex(none, inc, buckets = 8)
+    Search.appendToIndex(odds, inc, buckets = 8)
+    for (terms <- Seq(Seq("spark"), Seq("spark", "window", "merge"))) {
+      val a = Search.searchAll(spark, oneShot, terms, buckets = 8)
+        .orderBy("doc_id").collect().toSeq
+      val b = Search.searchAllIndexed(spark, inc, terms, buckets = 8)
+        .orderBy("doc_id").collect().toSeq
+      assert(a == b, s"terms=$terms")
+    }
+    val rOneShot = java.nio.file.Files.createTempDirectory("graft-ranked-e1s").toString
+    val rInc = java.nio.file.Files.createTempDirectory("graft-ranked-einc").toString
+    Search.writeRankedIndex(corpus, rOneShot, buckets = 8)
+    Search.initRankedIndex(evens, rInc, buckets = 8)
+    Search.appendToRankedIndex(none, rInc, buckets = 8)
+    Search.appendToRankedIndex(odds, rInc, buckets = 8)
+    val terms = Seq("spark", "window")
+    val one = Search.searchRanked(spark, rOneShot, terms, k = 10, buckets = 8)
+      .orderBy("doc_id").collect().toSeq
+    val merged = Search.searchRankedIndexed(spark, rInc, terms, k = 10, buckets = 8)
+      .orderBy("doc_id").collect().toSeq
+    assert(one == merged)
+    // an empty version alone still carries a schema the serve can read
+    val onlyEmpty = java.nio.file.Files.createTempDirectory("graft-search-eonly").toString
+    Search.initIndex(none, onlyEmpty, buckets = 8)
+    assert(Search.searchAllIndexed(spark, onlyEmpty, Seq("spark"), buckets = 8).isEmpty)
+    // the one-shot ranked build of an empty corpus writes zero stats, not an NPE
+    val rEmpty = java.nio.file.Files.createTempDirectory("graft-ranked-empty").toString
+    Search.writeRankedIndex(none, rEmpty, buckets = 8)
+  }
+
+  test("versioned stores: flat sorted files per version, ONE filtered scan per serve") {
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val inc = java.nio.file.Files.createTempDirectory("graft-search-flat").toString
+      val rInc = java.nio.file.Files.createTempDirectory("graft-ranked-flat").toString
+      val batches = Seq(1L, 2L, 3L).map(r => corpus.filter(col("doc_id") % 3 === r % 3))
+      Search.initIndex(batches.head, inc, buckets = 16)
+      Search.initRankedIndex(batches.head, rInc, buckets = 16)
+      batches.tail.foreach { b =>
+        Search.appendToIndex(b, inc, buckets = 16)
+        Search.appendToRankedIndex(b, rInc, buckets = 16)
+      }
+      for (root <- Seq(inc, rInc)) {
+        val versionDirs = new java.io.File(root).listFiles()
+          .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+        assert(versionDirs.length == 3, s"$root: ${versionDirs.map(_.getName).toSeq}")
+        versionDirs.foreach { v =>
+          val subdirs = new java.io.File(v, "postings").listFiles().filter(_.isDirectory)
+          assert(!subdirs.exists(_.getName.startsWith("bucket=")),
+            s"$v/postings has bucket directories: ${subdirs.map(_.getName).toSeq}")
+        }
+      }
+      val served = Seq(
+        Search.searchAllIndexed(spark, inc, Seq("spark", "merge"), buckets = 16),
+        Search.searchRankedIndexed(spark, rInc, Seq("spark", "merge"), k = 10, buckets = 16))
+      served.foreach { df =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        val scans = plan.collect { case s: FileSourceScanExec => s }
+        assert(scans.length == 1, s"expected one file scan, got ${scans.length}:\n$plan")
+        assert(plan.collect { case u: UnionExec => u }.isEmpty, s"union in serve plan:\n$plan")
+        val filters = scans.head.dataFilters.map(_.toString)
+        assert(filters.exists(_.contains("bucket")) && filters.exists(_.contains("term")),
+          s"bucket/term filters not on the scan: $filters")
+      }
+    }
   }
 
   test("searchRankedIndexed fails fast on a version without the stats sidecar") {
