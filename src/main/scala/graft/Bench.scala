@@ -15,9 +15,16 @@ import scala.util.control.NonFatal
   *
   *   1. SMOKE-SF WARM-UP (unmeasured, ~2 min): every def runs once against
   *      `SPARK_GRAFT_WARMUP_DIR` (default the sf0.001 smoke data). The
-  *      plans differ from the measured pass only in file paths, so the
-  *      GENERATED code is identical and janino's codegen cache is hot for
-  *      pass 1 — measured r15: cold per-def planning+codegen is ~0.5–1.5 s
+  *      plans differ from the measured pass mostly in file paths, so most
+  *      GENERATED code is identical, and Spark's codegen cache (an LRU
+  *      whose cap GraftSession sizes to hold every class the warm-up
+  *      compiles) serves it to pass 1; `codegen_compiles` in the artifact
+  *      counts what each def still compiles inside its measured reps, and
+  *      `codegen_compiles_warmup` what the warm-up compiled (3312 distinct
+  *      classes at sf0.001; pass 1 at sf0.01 then compiled 127 more, in 31
+  *      defs). At Spark's default cap of 100 classes the warm-up's classes
+  *      were evicted long before pass 1 reached their defs, so pass 1 ran
+  *      mostly cold. Measured r15: cold per-def planning+codegen is ~0.5–1.5 s
   *      × 238 defs ≈ half of a cold pass-1, and WHICH defs escaped it (via
   *      the rerun queue) was luck, swinging the total-of-medians 381↔662 s
   *      between otherwise-identical runs. Warming at the smoke SF buys the
@@ -102,11 +109,11 @@ import scala.util.control.NonFatal
   *      fast reps + one outlier) is scheduler/GC interference; a real plan
   *      regression moves every rep together.
   *   3. Known-sensitive def classes, in noise order: stateful/session ops
-  *      (e05), many-small-job iterative graph loops (g01–g12), and — new
-  *      with the r15 protocol — ANY single-rep def, whose one measurement
-  *      includes its codegen compile (typically +50–200 ms; material only
-  *      under ~0.5 s, and such defs re-rep via the suspects queue when it
-  *      makes them look regressed).
+  *      (e05), many-small-job iterative graph loops (g01–g12), and any
+  *      single-rep def with a non-zero `codegen_compiles`: its one
+  *      measurement includes those compiles (typically +50–200 ms;
+  *      material only under ~0.5 s, and such defs re-rep via the suspects
+  *      queue when it makes them look regressed).
   *   4. Cross-box comparisons are only valid on calib-normalized numbers
   *      of the SAME def set (`n_queries` guards the denominator).
   */
@@ -114,6 +121,11 @@ object Bench {
 
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Janino compilations so far in this JVM (Spark's codegen metric source;
+    * a codegen-cache hit does not count). */
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -208,9 +220,11 @@ object Bench {
 
     val defs = SparkEntry.defs.filter(d => only.forall(_.contains(d.name)))
     genericWarmup(spark, sfDir)
-    // smoke-SF warm-up: identical generated code, tiny data — hot codegen
-    // cache for pass 1 without spending measured budget on compilation
+    // smoke-SF warm-up: mostly identical generated code, tiny data — hot
+    // codegen cache for pass 1 without spending measured budget on
+    // compilation
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
+    val warmCompiles0 = compileCount
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
       defs.foreach { d =>
         spark.catalog.clearCache()
@@ -221,6 +235,7 @@ object Bench {
           System.err.println(s"[bench warmup] ${d.name}: ${e.getMessage}")
         }
       }
+    val warmCompiles = compileCount - warmCompiles0
 
     // one measured rep: cold data, purged workspaces (VERDICT r13 #9 — a
     // store-building def's rep N+1 must never inherit rep N's on-disk state).
@@ -242,19 +257,26 @@ object Bench {
       // defs ran up to 4× their isolated cost — d15 6.1 s vs 1.5 s clean —
       // which smells like accumulated state). A forced full GC per def made
       // the run 31% SLOWER overall (306 → 409 s, uniform ~+0.25 s/def,
-      // worst on the smallest defs): it evicts the weak/soft-referenced
-      // generated-code classes, so every def pays codegen again — exactly
-      // the cost the smoke warm-up exists to amortize.
+      // worst on the smallest defs). That cost is NOT codegen eviction:
+      // Spark's codegen cache is a size-bounded LRU holding strong
+      // references, so a GC evicts nothing from it (only its entry cap
+      // does, which GraftSession sizes). What the forced GC did cost has
+      // not been re-measured.
     }
+    // Janino compiles per def over its measured reps (additions-only
+    // `codegen_compiles`): a def that keeps compiling after the warm-up is
+    // paying codegen inside its measured time
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def measure(d: QueryDef): Option[Double] = {
       isolate()
+      val c0 = compileCount
       val t0 = System.nanoTime()
       try { exec(d.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
       catch {
         case NonFatal(e) =>
           System.err.println(s"[bench] ${d.name}: ${e.getMessage}")
           None
-      }
+      } finally compiles(d.name) = compiles.getOrElse(d.name, 0L) + compileCount - c0
     }
 
     // PASS 1: every def once. Wall-clock start offsets (seconds since the
@@ -370,6 +392,9 @@ object Bench {
       .mkString("{", ",", "}")
     val failed = crashed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val adjSkipped = adjudicationSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val compileMap = results.collect { case (k, Some(_)) => "\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
+    val compilesTotal = compiles.values.sum
     val total = results.flatMap(_._2.map(_._1)).sum
     // cross-round regression signal (VERDICT r13 #1): per-def median ratio
     // vs the previous committed artifact (floored at prev ≥ 0.05 s — ADVICE
@@ -396,7 +421,7 @@ object Bench {
     val calibMids = calibMid.map { case (o, c) => f"[$o%.1f,$c%.3f]" }
       .mkString("[", ",", "]")
     val line =
-      f"""{"t_off":$offMap,"queries_rep1":$rep1s,"noisy_reps":$noisy,"delta_vs_prev":$deltaMap,"spread":$spreads,"queries_min":$mins,"queries":$qs,"failed":$failed,"sf":"$sfDir","n_queries":$nQueries,"n_rep1":$nRep1,"budget_sec":$budgetSec%.0f,"budget_hit":$budgetHit,"adjudication_skipped":$adjSkipped,"measured_sec":$spent%.1f,"calib_mid":$calibMids,"delta_median_vs_prev":$deltaMedian%.2f,"n_delta_over_2x":$deltaOver2x,"calib_sec":$calib%.3f,"metric":"total","value":$total%.2f,"unit":"sec"}"""
+      f"""{"t_off":$offMap,"queries_rep1":$rep1s,"noisy_reps":$noisy,"delta_vs_prev":$deltaMap,"spread":$spreads,"queries_min":$mins,"queries":$qs,"failed":$failed,"sf":"$sfDir","n_queries":$nQueries,"n_rep1":$nRep1,"budget_sec":$budgetSec%.0f,"budget_hit":$budgetHit,"adjudication_skipped":$adjSkipped,"codegen_compiles":$compileMap,"codegen_compiles_total":$compilesTotal,"codegen_compiles_warmup":$warmCompiles,"measured_sec":$spent%.1f,"calib_mid":$calibMids,"delta_median_vs_prev":$deltaMedian%.2f,"n_delta_over_2x":$deltaOver2x,"calib_sec":$calib%.3f,"metric":"total","value":$total%.2f,"unit":"sec"}"""
     println(line)
     // Full, untruncated copy for the repo (the stdout tail is lossy). The
     // path is anchored (env-overridable), not CWD-relative — a run launched

@@ -38,6 +38,34 @@ object GraftSession {
       // encoding the current testdata uses.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Generated-code cache sized to hold the engine's working set across
+      // batches (a static conf: Spark reads it once, when the first session
+      // compiles). Spark's cache is a size-bounded LRU (default 100 classes)
+      // with strong references, so only the cap evicts. Distinct classes
+      // compiled, counted as Janino compilations under an unbounded cap
+      // (4 vCPU, perfbench seed 1, graft.Bench at sf0.01):
+      //   - one etl_batches op cycle: 149 (first load_batch 92, later loads
+      //     9 more, each library query 10–17, maintenance 5);
+      //   - one corpus_ingest op cycle: 167 (set-up 24, ingest_batch 114,
+      //     searches 25, maintenance 4);
+      //   - graft.Bench: 3312 in the smoke warm-up over all 238 defs, and
+      //     127 more in the measured pass (3439 in all).
+      // 7000 is 2× the largest. At the default 100 the cache thrashed:
+      // every measured load_batch recompiled 71–89 classes and every
+      // ingest_batch 104–109, so their tasks ran freshly loaded, un-JITed
+      // bytecode, and the Bench warm-up was evicted before pass 1 reached
+      // its defs. At 7000 both ops recompile nothing.
+      .config("spark.sql.codegen.cache.maxEntries", "7000")
+      // Each cached class retains ~25 KB of driver heap. Pay for that with
+      // the driver status store, which nothing reads with the UI off: keep
+      // only the last few SQL executions, stages and tasks (defaults
+      // 1000/1000/100000). spark.ui.retainedJobs stays at its default —
+      // job ids per group are read through the status tracker. Together
+      // with the cap above, perfbench's end-of-run live heap fell (etl
+      // 80.0 → 77.6 MB, corpus 100.1 → 97.2 MB, medians of 10 and 5 runs).
+      .config("spark.sql.ui.retainedExecutions", "5")
+      .config("spark.ui.retainedStages", "20")
+      .config("spark.ui.retainedTasks", "200")
       .config("spark.sql.parquet.filterPushdown", "true")
       // Merge session windows WITHIN each map partition before the
       // shuffle (partial aggregation applied to sessions): fewer rows
@@ -67,7 +95,8 @@ object GraftSession {
       // heavy tail (mid-registry defs measured 4–6× their isolated cost on
       // rep 1). A PERIODIC GC bounds the count at ~1 per 2 min (≈13 per
       // full bench) — unlike the rejected per-def System.gc() (476 GCs,
-      // +31% total from re-paying codegen after every eviction). Cluster
+      // +31% total; not codegen eviction, since the codegen cache above
+      // holds strong references and a GC evicts nothing from it). Cluster
       // posture: same mechanism on a long-lived driver; 2 min is Spark's
       // own floor for this knob's usefulness (default 30 min). The env
       // override exists ONLY for A/B measurement (plans/r17): operator

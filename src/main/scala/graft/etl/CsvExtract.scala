@@ -123,16 +123,19 @@ object CsvExtract {
   }
 
   /** Full extract with fail-fast validation ordering (structure before data,
-    * src/extract.py:178-186): missing file / empty file / missing columns
-    * abort; all-null rows only warn (reference logs them).
+    * src/extract.py:178-186): missing file / missing columns / empty file
+    * abort. The column check needs only the header schema and the empty
+    * check one limit-1 read, so no full-file aggregate runs here; the full
+    * [[validateStructure]] report (row and all-null counts) is for callers
+    * that print it.
     */
   def extract(spark: SparkSession, path: String): DataFrame = {
     if (!fileMeta(path).exists) throw new ExtractError(s"source file not found: $path")
     val df = read(spark, path)
-    val report = validateStructure(df)
-    if (report.missingColumns.nonEmpty)
-      throw new ExtractError(s"missing required columns: ${report.missingColumns.mkString(", ")}")
-    if (report.rowCount == 0) throw new ExtractError(s"source file has no data rows: $path")
+    val missing = RequiredColumns.filterNot(df.columns.contains)
+    if (missing.nonEmpty)
+      throw new ExtractError(s"missing required columns: ${missing.mkString(", ")}")
+    if (df.isEmpty) throw new ExtractError(s"source file has no data rows: $path")
     df
   }
 }

@@ -233,8 +233,8 @@ object EtlQueries {
     // scalable dims stay LAZY here: they are consumed exactly twice (the
     // fact's dense-key offsets job + the output job), and an A/B measured
     // cutting them as a net LOSS for this shape (3 extra checkpoint jobs
-    // vs a partial recompute saved — t10 3.2→4.5 s); the cut pays only in
-    // the write/read lifecycles (t13/t38/t26), see starDims.
+    // vs a partial recompute saved — t10 3.2→4.5 s); starDims cuts only
+    // the date dim, for the write/read lifecycles (t13/t38/t26).
     val valid = TxnPipeline.cleanValid(DirtyTxns(t.orders))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (dc, dp) = TxnPipeline.dimsBoundedFused(valid)
@@ -330,9 +330,10 @@ object EtlQueries {
        GROUP BY 1 ORDER BY 1""") { t =>
     val valid = TxnPipeline.cleanValid(DirtyTxns(t.orders))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // starDims (r17): fused bounded-dim job + cut scalable/date dims — the
-    // partitioned write and the pruned read-back both consume materialized
-    // dims instead of re-deriving them (guide §1.2)
+    // starDims: fused bounded-dim job, dense-key scalable dims whose
+    // shuffles have run, and a cut date dim — the partitioned write and the
+    // pruned read-back both consume computed dims instead of re-deriving
+    // them (guide §1.2)
     val (dc, dm, dp, du, dimDate) = TxnPipeline.starDims(valid)
     val fact = TxnPipeline.buildFact(valid, dc, dm, dp, du, dimDate)
     val path = graft.TempDirs.scoped("graft-fact-part") + "/fact_by_month"
@@ -365,8 +366,8 @@ object EtlQueries {
        GROUP BY 1, 2 ORDER BY 1, 2""") { t =>
     val valid = TxnPipeline.cleanValid(DirtyTxns(t.orders))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // starDims (r17): the DPP rollup's dim side is a cut (materialized)
-    // date dim — the runtime pruning subquery reads dim rows, not a
+    // starDims: the DPP rollup's dim side is the cut (materialized) date
+    // dim — the runtime pruning subquery reads dim rows, not a
     // re-derivation of the whole valid pipeline (guide §1.2)
     val (dc, dm, dp, du, dimDate) = TxnPipeline.starDims(valid)
     val fact = TxnPipeline.buildFact(valid, dc, dm, dp, du, dimDate)
@@ -904,8 +905,9 @@ object EtlQueries {
     val valid = TxnPipeline.cleanValid(
         DirtyTxns(t.orders).filter(expr("(seq div 2) % 4 = 0")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // starDims (r17): each dim feeds its own publish write AND the fact
-    // build — cut dims are computed once, not once per consumer (§1.2)
+    // starDims: each dim feeds its own publish write AND the fact build —
+    // dims are computed once, not once per consumer (§1.2): the date dim
+    // is cut, the dense-key dims re-read their already-run shuffles
     val (dc, dm, dp, du, dd) = TxnPipeline.starDims(valid)
     val dims = Map(
       "dim_category" -> dc, "dim_merchant" -> dm,

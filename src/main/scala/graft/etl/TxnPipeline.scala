@@ -244,20 +244,20 @@ object TxnPipeline {
 
   /** The five star dims shaped for MULTI-CONSUMER fact builds (r17, guide
     * §1.2/§6 — VERDICT r16 #4): bounded dims from the fused single-job
-    * collect above; the scalable/date dims lineage-CUT once (dim-sized
-    * materializations), so the fact build's dense-key offsets job, the
-    * fact write, and any post-write read-back (t13/t38's partitioned
-    * publish, DPP rollups) consume materialized dim rows instead of
-    * re-running each dim's distinct + range-shuffle + sort per action.
-    * Rows are identical to the per-dim builders' (cut preserves rows;
-    * the builders are deterministic).
+    * collect above; the merchant and user dims are [[withDenseKey]]
+    * leaves, RDD-backed with their distinct and range-shuffle stages
+    * already run, so every consumer (the fact build's dense-key offsets
+    * job, the fact write, any post-write read-back such as t13/t38's
+    * partitioned publish and DPP rollups) re-reads their shuffle output
+    * rather than re-deriving them — a cut would add only a job and a block
+    * copy per dim. The date dim is a plain lazy plan and is lineage-CUT
+    * once (a dim-sized materialization). Rows are identical to the
+    * per-dim builders' (the builders are deterministic).
     */
   def starDims(valid: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (dc, dp) = dimsBoundedFused(valid)
-    val dm = graft.operators.Materialize.cut(dimMerchant(valid))
-    val du = graft.operators.Materialize.cut(dimUser(valid))
     val dd = graft.operators.Materialize.cut(dimDate(valid))
-    (dc, dm, dp, du, dd)
+    (dc, dimMerchant(valid), dp, dimUser(valid), dd)
   }
 
   /** Category/payment pass validation only if they are IN the allowlist —

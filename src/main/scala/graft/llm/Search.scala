@@ -258,10 +258,13 @@ object Search {
     * pointer live; the replay clobbers the orphan staging dir). An optional
     * `tag` commits atomically WITH the version — the exactly-once
     * bookkeeping the streaming maintainer needs, since additive tf state
-    * cannot be de-duplicated downstream.
+    * cannot be de-duplicated downstream. The bucket-count precondition is
+    * checked before anything is staged, so a mismatched append fails
+    * without writing.
     */
   private def commit(path: String, replace: Boolean, buckets: Int,
                      tag: Option[String])(stage: String => Unit): Unit = {
+    checkBuckets(path, buckets)
     val committed = committedVersions(path)
     val next = "v" + (committed.filter(_.matches("v\\d+"))
       .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
@@ -269,7 +272,6 @@ object Search {
     stage(staging)
     tag.foreach(t => graft.warehouse.AtomicPointer.write(s"$staging/TAG", t))
     graft.warehouse.AtomicPointer.publishDir(staging, s"$path/$next")
-    checkBuckets(path, buckets)
     graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
     graft.warehouse.AtomicPointer.write(s"$path/$Pointer",
       ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))

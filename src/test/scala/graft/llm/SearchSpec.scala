@@ -116,9 +116,25 @@ class SearchSpec extends SparkSpec {
     }
     val inc = java.nio.file.Files.createTempDirectory("graft-search-bk2").toString
     Search.initIndex(corpus, inc, buckets = 8)
+    val rInc = java.nio.file.Files.createTempDirectory("graft-search-bk3").toString
+    Search.initRankedIndex(corpus, rInc, buckets = 8)
+    // the precondition fails BEFORE staging: no new version dir, no
+    // orphaned staging dir, and the committed pointer is untouched
+    def layout(dir: String): (Set[String], String) = {
+      val names = new java.io.File(dir).list().toSet
+        .filter(n => n.matches("v\\d+") || n.startsWith(".staging-"))
+      (names, new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "CURRENT"))))
+    }
+    val (incBefore, rIncBefore) = (layout(inc), layout(rInc))
     intercept[IllegalArgumentException] {
       Search.appendToIndex(corpus, inc, buckets = 16)
     }
+    intercept[IllegalArgumentException] {
+      Search.appendToRankedIndex(corpus, rInc, buckets = 16)
+    }
+    assert(layout(inc) == incBefore && incBefore._1 == Set("v1"))
+    assert(layout(rInc) == rIncBefore && rIncBefore._1 == Set("v1"))
     intercept[IllegalArgumentException] {
       Search.searchAllIndexed(spark, inc, Seq("spark"), buckets = 16)
     }

@@ -26,6 +26,30 @@ class WarehouseSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 4)
   }
 
+  test("idempotent append: nothing new leaves the table's file set unchanged") {
+    val path = tmpDir() + "/fact"
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    val empty = df.filter(lit(false))
+    // a first append with no rows creates no table
+    assert(ParquetWarehouse.appendIdempotent(empty, path, "k") == 0)
+    assert(!new java.io.File(path).exists())
+    assert(ParquetWarehouse.appendIdempotent(df, path, "k") == 3)
+    def files(): Set[String] = new java.io.File(path).list().toSet
+    def rows(): Set[(Long, String)] = spark.read.parquet(path).as[(Long, String)].collect().toSet
+    val (files0, rows0) = (files(), rows())
+    assert(files0.exists(_.endsWith(".parquet")) && rows0.size == 3)
+    // the retry case: an all-duplicate append, then an empty-frame append
+    assert(ParquetWarehouse.appendIdempotent(df, path, "k") == 0)
+    assert(files() == files0 && rows() == rows0)
+    assert(ParquetWarehouse.appendIdempotent(empty, path, "k") == 0)
+    assert(files() == files0 && rows() == rows0)
+    // a partly new batch appends exactly its new rows, and no staging dir stays
+    assert(ParquetWarehouse.appendIdempotent(
+      Seq((3L, "c"), (4L, "d")).toDF("k", "v"), path, "k") == 1)
+    assert(rows() == rows0 + ((4L, "d")))
+    assert(!files().exists(_.startsWith("_staging")))
+  }
+
   test("snapshot publish is versioned and atomic; pre-flight validates layout") {
     val root = tmpDir()
     val t1 = Seq((1, "x")).toDF("k", "v")
