@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.store.VersionedStore
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Three tiers, in increasing fuzziness:
@@ -380,33 +382,24 @@ object Dedup {
     * the reference's incremental pattern of reading existing warehouse keys
     * rather than recomputing them (/root/reference/src/load.py:534-582).
     *
-    * Layout under `path`: versioned per-batch deltas, each holding two
-    * parquet tables,
-    *   - `v<N>/buckets`:  (doc_id, band, band_hash) — the LSH join side; at
+    * Layout under `path`: a [[graft.store.VersionedStore]] whose versions
+    * are per-batch deltas, each holding two parquet tables,
+    *   - `buckets`:  (doc_id, band, band_hash) — the LSH join side; at
     *     warehouse scale this is the frame you'd additionally bucket/sort by
     *     band_hash so the per-batch join shuffles only the batch side;
-    *   - `v<N>/shingles`: (doc_id, sh) — the exact-verification side, read
+    *   - `shingles`: (doc_id, sh) — the exact-verification side, read
     *     back candidate-restricted (the semi-join keeps non-candidate
     *     shingle arrays out of the join, though the column itself must be
-    *     scanned);
-    * plus a `CURRENT` pointer file listing the COMMITTED version dirs. Both
-    * tables of a batch land under one uncommitted `v<N>` and become visible
-    * together when the pointer swaps (one atomic file move — the same
-    * mechanism as [[graft.warehouse.ParquetWarehouse.publishSnapshot]]), so
-    * the half-indexed-batch crash window the r7 build disclosed is closed:
-    * a crash anywhere before the swap leaves readers on the old pointer,
-    * and the replayed batch clobbers the orphaned version dir (its number
-    * derives from the POINTER, not the directory listing). Readers resolve
-    * the committed dirs via [[indexBuckets]]/[[indexShingles]] (a flat
-    * pre-versioning layout is still recognized, and the first append onto
-    * one ADOPTS its tables as the implicit version `.` so the flat corpus
-    * stays visible under the new pointer). Unreferenced version dirs
-    * left by a replaced index or a crashed append are garbage, invisible to
-    * readers; a maintenance pass may delete them. Per-batch deltas also
-    * mean a long-lived streamed index accrues one small dir per
-    * micro-batch — the small-file story is the same as any append-heavy
-    * table, and [[compactCorpusIndex]] is the compaction pass (fold
-    * committed versions into one, swap the pointer).
+    *     scanned).
+    * Both tables of a batch commit as ONE version, so they become visible
+    * together and a crashed append can never leave a half-indexed batch
+    * (the core's crash and replay argument). Readers resolve the committed
+    * tables via [[indexBuckets]]/[[indexShingles]]. A flat pre-versioning
+    * layout (bare `buckets`/`shingles`, no pointer) is still read, and the
+    * first append onto one ADOPTS its tables as the implicit version `.`
+    * so the flat corpus stays visible. A long-lived streamed index accrues
+    * one small version per micro-batch; [[compactCorpusIndex]] folds them
+    * and [[vacuumCorpusIndex]] reclaims the dirs left behind.
     */
   def writeCorpusIndex(corpus: DataFrame, path: String, shingleN: Int = 3): Unit =
     commitIndexVersion(corpus, path, shingleN, replace = true)
@@ -417,27 +410,17 @@ object Dedup {
   def appendToCorpusIndex(batch: DataFrame, path: String, shingleN: Int = 3): Unit =
     commitIndexVersion(batch, path, shingleN, replace = false)
 
-  private val IndexPointer = "CURRENT"
-
-  /** Committed version dirs, oldest first; empty for a flat legacy index.
-    * Pointer IO goes through [[graft.warehouse.AtomicPointer]] (Hadoop
-    * FileContext), so a versioned index on `hdfs://` reads correctly — the
-    * earlier `java.nio` form saw no CURRENT file on non-local URIs and
-    * silently misread a versioned index as flat legacy (ADVICE r8).
+  /** One committed table of the index (all versions, one scan); a store
+    * with no pointer reads as the flat layout — or fails with the plain
+    * path-not-found error when `path` holds no index at all.
     */
-  private def committedVersions(path: String): Seq[String] =
-    graft.warehouse.AtomicPointer.read(s"$path/$IndexPointer")
-      .map(_.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-
   private def readIndexTable(spark: org.apache.spark.sql.SparkSession,
-                             path: String, table: String): DataFrame = {
-    val vs = committedVersions(path)
-    // no pointer → flat pre-versioning layout (or a bare path, which fails
-    // with the same path-not-found error as before)
-    val dirs = if (vs.nonEmpty) vs.map(v => s"$path/$v/$table") else Seq(s"$path/$table")
-    spark.read.parquet(dirs: _*)
-  }
+                             path: String, table: String): DataFrame =
+    VersionedStore.read(spark, path,
+      VersionedStore.committedVersions(path) match {
+        case Seq() => Seq(".")
+        case vs => vs
+      }, table)
 
   /** The committed bucket table of a persisted index (all versions). */
   def indexBuckets(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
@@ -447,121 +430,58 @@ object Dedup {
   def indexShingles(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     readIndexTable(spark, path, "shingles")
 
-  /** Fold all committed versions into one and swap the pointer — the
-    * maintenance pass for a long-lived streamed index, which accrues one
-    * small version dir per micro-batch (the same small-file story as any
-    * append-heavy table). One read of the committed tables, one folded
-    * version dir, one atomic pointer swap; readers concurrent with the
-    * swap see either the old version list or the folded one, never a
-    * mixture, and dedup answers are identical (both tables are unordered
-    * keyed rows — spec-asserted). Old version dirs become unreferenced
-    * garbage, deletable once no reader can hold the old pointer. Returns
-    * the number of versions folded (0 = nothing to do).
+  /** Fold all committed versions into one — the maintenance pass for a
+    * long-lived streamed index. One read of the committed tables, one
+    * folded version, one pointer swap; readers see the old version list or
+    * the folded one, and dedup answers are identical (both tables are
+    * unordered keyed rows — spec-asserted). Returns the number of versions
+    * folded (0 = nothing to do).
     */
   def compactCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Int = {
-    val committed = committedVersions(path)
-    if (committed.size <= 1) return 0
-    val next = "v" + (committed.filter(_.matches("v\\d+"))
-      .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
-    val stagingName = s".staging-$next" // invisible to vacuum until renamed
-    indexBuckets(spark, path)
-      .write.mode("overwrite").parquet(s"$path/$stagingName/buckets")
-    indexShingles(spark, path)
-      .write.mode("overwrite").parquet(s"$path/$stagingName/shingles")
-    graft.warehouse.AtomicPointer.publishDir(s"$path/$stagingName", s"$path/$next")
-    swapIndexPointer(path, Seq(next))
-    committed.size
-  }
-
-  /** Delete version dirs the CURRENT pointer no longer references — the
-    * garbage left by [[writeCorpusIndex]] replaces, crashed appends, and
-    * [[compactCorpusIndex]] folds. SAFE against a concurrent writer, by two
-    * complementary guards:
-    *   - an in-flight append/fold stages under a dot-prefixed name and
-    *     renames into its `v<N>` dir only just before the pointer swap, so
-    *     vacuum's `v<N>` filter cannot see a version still being WRITTEN;
-    *   - the rename→swap gap itself (a fully-renamed `v<N>` whose pointer
-    *     swap hasn't landed yet — ADVICE r8) is covered by never deleting a
-    *     version numbered ABOVE the max committed one: version numbers
-    *     derive from the pointer and writers are serial (one writer per
-    *     index), so an in-flight commit occupies exactly max+1 — anything
-    *     at or below max is provably garbage. The pointer is also re-read
-    *     immediately before each delete, so a dir that became referenced
-    *     since candidate selection is spared.
-    * The remaining contract is readers-only: call when no reader can still
-    * hold an OLD pointer (e.g. after a maintenance window) — the same
-    * exclusion warehouse compaction documents. Dot-prefixed `.staging-*`
-    * leftovers of crashed appends are reader-invisible and reclaimed by the
-    * replayed append itself. Returns the number of directories removed.
-    */
-  def vacuumCorpusIndex(path: String): Int = {
-    val committed = committedVersions(path).toSet
-    val maxCommitted = committed.filter(_.matches("v\\d+"))
-      .map(_.drop(1).toLong).maxOption.getOrElse(0L)
-    // versions above the max committed number may be a commit inside its
-    // rename→pointer-swap window (writers are serial, so an in-flight
-    // commit occupies exactly max+1) — spare them; a crashed append's
-    // orphan up there is reclaimed by the replayed append's clobber or by
-    // a vacuum after later commits advance the pointer past it
-    val junk = graft.warehouse.AtomicPointer.listDirNames(path)
-      .filter(n => n.matches("v\\d+") && !committed.contains(n) &&
-        n.drop(1).toLong <= maxCommitted)
-    junk.count { name =>
-      // re-read the pointer at the last instant: a commit that landed since
-      // candidate selection has made this dir live — never delete it
-      !committedVersions(path).contains(name) &&
-        graft.warehouse.AtomicPointer.deleteDir(s"$path/$name")
+                         path: String): Int =
+    VersionedStore.compact(path) { staging =>
+      indexBuckets(spark, path).write.parquet(s"$staging/buckets")
+      indexShingles(spark, path).write.parquet(s"$staging/shingles")
     }
-  }
 
-  /** Stage both tables for one batch under the next version dir, then swap
-    * the pointer. `replace = true` publishes a pointer listing ONLY the new
-    * version (the overwrite form); otherwise the new version is appended to
-    * the committed list. Version numbers derive from the pointer — a
-    * replayed crashed append re-stages the SAME dir in overwrite mode, so
-    * a half-written orphan can never leak into a commit.
+  /** Delete the version dirs the pointer no longer references — the
+    * garbage of [[writeCorpusIndex]] replaces, crashed appends and
+    * [[compactCorpusIndex]] folds — under the guards stated once in
+    * [[graft.store.VersionedStore.vacuum]]. Returns the number of
+    * directories removed.
+    */
+  def vacuumCorpusIndex(path: String): Int = VersionedStore.vacuum(path)
+
+  /** Shingle and band one batch, then commit both tables as one version.
+    * `replace = true` makes it the sole committed version; an append onto
+    * a PRE-VERSIONING flat index lists the flat tables first as version
+    * `.` — without that, the first versioned append would publish a
+    * pointer that hides the flat corpus (silent loss).
     */
   private def commitIndexVersion(docs: DataFrame, path: String, shingleN: Int,
                                  replace: Boolean): Unit = {
-    // appending onto a PRE-VERSIONING flat index adopts its tables as the
-    // implicit version "." — without this, the first versioned append
-    // would publish a pointer that hides the flat corpus (silent loss)
-    val committed = committedVersions(path) match {
+    val base = VersionedStore.committedVersions(path) match {
       case Seq() if !replace &&
         graft.warehouse.AtomicPointer.exists(s"$path/buckets") => Seq(".")
       case vs => vs
     }
-    val next = "v" + (committed.filter(_.matches("v\\d+"))
-      .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
-    // stage under a dot-prefixed name and rename into place before the
-    // pointer swap: an in-flight write is thus INVISIBLE to
-    // [[vacuumCorpusIndex]]'s v<N> filter (vacuum racing a live append
-    // would otherwise delete the dir it is about to publish) and to any
-    // directory-listing tooling
-    val stagingName = s".staging-$next"
     val sh = docs
       .select(col("doc_id"), TextFns.shingles(col("text"), shingleN).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      bandBuckets(signatureFromShingles(sh))
-        .select("doc_id", "band", "band_hash")
-        .write.mode("overwrite").parquet(s"$path/$stagingName/buckets")
-      sh.write.mode("overwrite").parquet(s"$path/$stagingName/shingles")
+      VersionedStore.commit(path, replace, base = Some(base)) { staging =>
+        bandBuckets(signatureFromShingles(sh))
+          .select("doc_id", "band", "band_hash")
+          .write.parquet(s"$staging/buckets")
+        sh.write.parquet(s"$staging/shingles")
+      }
     } finally { sh.unpersist(); () }
-    // publishDir clobbers the orphan of a crashed earlier attempt
-    graft.warehouse.AtomicPointer.publishDir(s"$path/$stagingName", s"$path/$next")
-    swapIndexPointer(path, (if (replace) Seq.empty else committed) :+ next)
     // a rebuild voids any prior ingest lineage: drop a streaming
     // high-water mark left beside the store (defense in depth — the mark
     // is also checkpoint-scoped, see StreamingOps.ReplayGuard)
     if (replace)
       graft.warehouse.AtomicPointer.delete(s"$path/_streaming_hwm")
   }
-
-  private def swapIndexPointer(path: String, versions: Seq[String]): Unit =
-    graft.warehouse.AtomicPointer.write(s"$path/$IndexPointer",
-      versions.mkString("", "\n", "\n"))
 
   /** [[crossNearDupPairsWithCleanup]] with the corpus side read from a
     * persisted index (see [[writeCorpusIndex]]) — hash-identical pairs, but

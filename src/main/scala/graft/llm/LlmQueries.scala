@@ -3078,11 +3078,10 @@ object LlmQueries {
   }
 
   // x42 — INCREMENTAL index maintenance for the x39 postings store: the
-  // corpus lands in two appends (even/odd doc halves) under the store
-  // family's staged-version + CURRENT-pointer protocol (each version's
-  // files sorted on (bucket, term), so row-group pruning survives
-  // versioning), and the serve reads all versions in one scan and merges
-  // them by additive tf. x39's VERBATIM oracle
+  // corpus lands in two appends (even/odd doc halves) as two versions of
+  // a graft.store.VersionedStore (each version's files sorted on
+  // (bucket, term), so row-group pruning survives versioning), and the
+  // serve reads all versions in one scan and merges them by additive tf. x39's VERBATIM oracle
   // hash-proves incremental ≡ from-scratch — the x27/x28/d08 pattern, now
   // for the text-retrieval store.
   private val x42 = q("x42_search_incremental", Some(keywordSearchOracleSql)) { t =>
@@ -3914,8 +3913,8 @@ object LlmQueries {
 
   // x48 — INCREMENTAL maintenance of the x45 ranked store: the corpus
   // lands in two appends (even/odd doc halves — documents arrive WHOLE,
-  // the ranked store's batch contract) under the staged-version +
-  // CURRENT-pointer protocol; serve merges postings by additive tf and
+  // the ranked store's batch contract) as two VersionedStore versions,
+  // each with its stats sidecar; serve merges postings by additive tf and
   // corpus stats by exact-integer Σ of the per-version sidecars. x45's
   // VERBATIM oracle hash-proves incremental ≡ from-scratch — the x42
   // pattern, now for RANKED retrieval (idf/avgdl must come out identical

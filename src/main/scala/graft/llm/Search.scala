@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.store.VersionedStore
+
 /** Persisted inverted text index (term → postings) + conjunctive keyword
   * serve — the search-engine-shaped secondary index the store family was
   * missing (dedup shingle index, IVF/PQ vector indexes, count/sketch stores,
@@ -245,36 +247,21 @@ object Search {
 
   // ------------------------------------------------- versioned incremental
 
-  private val Pointer = "CURRENT"
-
-  private def committedVersions(path: String): Seq[String] =
-    graft.warehouse.AtomicPointer.read(s"$path/$Pointer")
-      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
-
-  /** Stage the next version under `.staging-vN` (`stage` writes its
-    * contents), publish the dir, swap the CURRENT pointer — the store
-    * family's crash-safe protocol (a crash mid-append leaves the prior
-    * pointer live; the replay clobbers the orphan staging dir). An optional
-    * `tag` commits atomically WITH the version — the exactly-once
-    * bookkeeping the streaming maintainer needs, since additive tf state
-    * cannot be de-duplicated downstream. The bucket-count precondition is
-    * checked before anything is staged, so a mismatched append fails
-    * without writing.
+  /** Commit one version through [[graft.store.VersionedStore]] (`stage`
+    * writes its tables). An optional `tag` commits atomically WITH the
+    * version — the exactly-once bookkeeping the streaming maintainer
+    * needs, since additive tf state cannot be de-duplicated downstream.
+    * The bucket-count precondition is checked before anything is staged,
+    * so a mismatched append fails without writing; `_BUCKETS` lands before
+    * the pointer swap, so a committed version is never served unguarded.
     */
   private def commit(path: String, replace: Boolean, buckets: Int,
                      tag: Option[String])(stage: String => Unit): Unit = {
     checkBuckets(path, buckets)
-    val committed = committedVersions(path)
-    val next = "v" + (committed.filter(_.matches("v\\d+"))
-      .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
-    val staging = s"$path/.staging-$next"
-    stage(staging)
-    tag.foreach(t => graft.warehouse.AtomicPointer.write(s"$staging/TAG", t))
-    graft.warehouse.AtomicPointer.publishDir(staging, s"$path/$next")
-    graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
-    graft.warehouse.AtomicPointer.write(s"$path/$Pointer",
-      ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))
+    VersionedStore.commit(path, replace, tag) { staging =>
+      stage(staging)
+      graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
+    }
   }
 
   /** One version's postings as plain parquet files sorted on
@@ -309,7 +296,7 @@ object Search {
   private def scanVersions(spark: SparkSession, path: String, vs: Seq[String],
                            lowered: Seq[String], buckets: Int): DataFrame = {
     val bks = lowered.map(termBucketLocal(_, buckets)).distinct
-    spark.read.parquet(vs.map(v => s"$path/$v/postings"): _*)
+    VersionedStore.read(spark, path, vs, "postings")
       .filter(col("bucket").isin(bks.map(Integer.valueOf): _*))
       .filter(col("term").isin(lowered: _*))
   }
@@ -334,13 +321,9 @@ object Search {
     commitVersion(documents, path, replace = false, buckets, textCol, tag)
 
   /** Whether any COMMITTED version carries `tag` — the streaming
-    * maintainer's crash-window probe (see CountStore.hasTag for the
-    * argument; committed-only is what makes it safe: an orphaned staging
-    * dir's tag is invisible, exactly as its rows are).
+    * maintainer's crash-window probe ([[graft.store.VersionedStore.hasTag]]).
     */
-  def hasTag(path: String, tag: String): Boolean =
-    committedVersions(path).exists(v =>
-      graft.warehouse.AtomicPointer.read(s"$path/$v/TAG").map(_.trim).contains(tag))
+  def hasTag(path: String, tag: String): Boolean = VersionedStore.hasTag(path, tag)
 
   // ------------------------------------------- versioned ranked (BM25)
 
@@ -394,7 +377,7 @@ object Search {
   def searchRankedIndexed(spark: SparkSession, path: String, terms: Seq[String],
                           k: Int, buckets: Int = DefaultBuckets,
                           k1: Double = 1.25, b: Double = 0.75): DataFrame = {
-    val vs = committedVersions(path)
+    val vs = VersionedStore.committedVersions(path)
     require(vs.nonEmpty, s"searchRankedIndexed: no committed versions under $path")
     checkBuckets(path, buckets)
     require(terms.nonEmpty, "searchRankedIndexed: empty query")
@@ -438,7 +421,7 @@ object Search {
     */
   def searchAllIndexed(spark: SparkSession, path: String, terms: Seq[String],
                        buckets: Int = DefaultBuckets): DataFrame = {
-    val vs = committedVersions(path)
+    val vs = VersionedStore.committedVersions(path)
     require(vs.nonEmpty, s"searchAllIndexed: no committed versions under $path")
     checkBuckets(path, buckets)
     val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct

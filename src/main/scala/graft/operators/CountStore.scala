@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.warehouse.AtomicPointer
+import graft.store.VersionedStore
 
 /** Versioned ADDITIVE count store — persisted keyed counts whose merge
   * operation is SUM, so appends are associative and an incremental build
@@ -13,11 +13,10 @@ import graft.warehouse.AtomicPointer
   * that are themselves counts: DSIR bucket histograms, unigram/bigram LM
   * frequencies, per-source token budgets.
   *
-  * Same durability protocol as the dedup corpus index (Dedup.scala): each
-  * batch stages under a dot-prefixed dir (invisible to vacuum and listing
-  * tools), renames into `v<N>`, then the CURRENT pointer — a newline list
-  * of committed versions — swaps atomically. A crash mid-append leaves the
-  * prior pointer live; the replayed append clobbers the orphan.
+  * Durability is the [[graft.store.VersionedStore]] protocol: each batch
+  * commits as one version under an atomic pointer swap; a crash
+  * mid-append leaves the prior pointer live and the replayed append
+  * clobbers the orphan.
   *
   * Layout convention: every column but the LAST is a key; the last column
   * is the long count. [[read]] returns the summed view across committed
@@ -26,9 +25,6 @@ import graft.warehouse.AtomicPointer
   * and [[compact]] folds the version list back to one when it grows.
   */
 object CountStore {
-
-  private def committedVersions(path: String): Seq[String] =
-    VersionedStore.committedVersions(path)
 
   private def requireCountSchema(counts: DataFrame): Unit = {
     require(counts.columns.length >= 2,
@@ -41,10 +37,7 @@ object CountStore {
   private def commit(counts: DataFrame, path: String, replace: Boolean,
                      tag: Option[String] = None): Unit = {
     requireCountSchema(counts)
-    // the tag rides INSIDE the staged dir, so it becomes visible atomically
-    // with the version itself (exactly-once bookkeeping for replayed
-    // streaming appends — see hasTag)
-    VersionedStore.commit(counts, path, replace, tag, dataDir = "counts")
+    VersionedStore.commit(path, replace, tag)(s => counts.write.parquet(s"$s/counts"))
   }
 
   /** Publish `counts` as the store's sole version (bootstrap / rebuild). */
@@ -62,38 +55,29 @@ object CountStore {
   def append(counts: DataFrame, path: String, tag: Option[String] = None): Unit =
     commit(counts, path, replace = false, tag)
 
-  /** Whether any COMMITTED version carries `tag`. A crash between
-    * publishDir and the pointer swap leaves an uncommitted orphan whose
-    * tag is invisible here — and the replayed append re-stages the SAME
-    * version number, clobbering the orphan, so the count is never doubled
-    * either way.
+  /** Whether any COMMITTED version carries `tag` (the crash-window
+    * argument is [[graft.store.VersionedStore.hasTag]]'s).
     */
   def hasTag(path: String, tag: String): Boolean =
     VersionedStore.hasTag(path, tag)
 
   /** The summed view across all committed versions. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    require(committedVersions(path).nonEmpty,
-      s"CountStore.read: no committed versions under $path")
-    val u = VersionedStore.readUnion(spark, path, dataDir = "counts")
+    val u = VersionedStore.read(spark, path, "counts")
     val cnt = u.columns.last
     u.groupBy(u.columns.dropRight(1).map(col): _*).agg(sum(col(cnt)).as(cnt))
   }
 
-  /** Fold the committed versions into one (bounds [[read]]'s union width);
-    * old version dirs stay until [[vacuum]].
+  /** Fold the committed versions into one summed version (bounds
+    * [[read]]'s scan width); old version dirs stay until [[vacuum]]. A
+    * store with one version is left as it is.
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val folded = read(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { folded.count(); commit(folded, path, replace = true) }
-    finally { folded.unpersist(); () }
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    VersionedStore.compact(path)(s => read(spark, path).write.parquet(s"$s/counts")): Unit
 
-  /** Delete version dirs the pointer no longer references — the dedup
-    * index's vacuum guards: never above the max committed number (a serial
-    * writer's in-flight commit occupies exactly max+1), pointer re-read
-    * before each delete. Returns the number of directories removed.
+  /** Delete version dirs the pointer no longer references (the
+    * [[graft.store.VersionedStore.vacuum]] guards); returns the number of
+    * directories removed.
     */
   def vacuum(path: String): Int = VersionedStore.vacuum(path)
 }

@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
+import graft.store.VersionedStore
+
 /** Versioned MERGEABLE-SKETCH store — the sketch MATERIALIZED VIEW: keyed
   * HLL sketches persisted once, so distinct-count queries (rolling active
   * users, cardinality dashboards) serve from |keys| rows without ever
   * rescanning the event log. The sketch twin of [[CountStore]] (same
-  * durability protocol via [[VersionedStore]]): appends stage a new
+  * durability protocol, [[graft.store.VersionedStore]]): appends stage a new
   * version without reading existing state, and the merge — register-wise
   * max under `hll_union_agg`, associative, commutative, and IDEMPOTENT —
   * is deferred to [[read]]. Idempotence is the property counts don't
@@ -34,7 +36,7 @@ object SketchStore {
   /** Publish `sketches` as the store's sole version (bootstrap/rebuild). */
   def write(sketches: DataFrame, path: String): Unit = {
     requireSketchSchema(sketches)
-    VersionedStore.commit(sketches, path, replace = true, None, dataDir = "sketches")
+    VersionedStore.commit(path, replace = true)(s => sketches.write.parquet(s"$s/sketches"))
   }
 
   /** Append a batch's sketches as a new version — nothing existing is read
@@ -43,7 +45,7 @@ object SketchStore {
     */
   def append(sketches: DataFrame, path: String, tag: Option[String] = None): Unit = {
     requireSketchSchema(sketches)
-    VersionedStore.commit(sketches, path, replace = false, tag, dataDir = "sketches")
+    VersionedStore.commit(path, replace = false, tag)(s => sketches.write.parquet(s"$s/sketches"))
   }
 
   /** Whether any COMMITTED version carries `tag`. */
@@ -54,22 +56,18 @@ object SketchStore {
     * underlying items in one pass).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val u = VersionedStore.readUnion(spark, path, dataDir = "sketches")
+    val u = VersionedStore.read(spark, path, "sketches")
     val sk = u.columns.last
     u.groupBy(u.columns.dropRight(1).map(col): _*)
       .agg(hll_union_agg(col(sk)).as(sk))
   }
 
-  /** Fold the committed versions into one (bounds [[read]]'s union width). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val folded = read(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      folded.count()
-      VersionedStore.commit(folded, path, replace = true, None, dataDir = "sketches")
-    } finally { folded.unpersist(); () }
-  }
+  /** Fold the committed versions into one merged version (bounds
+    * [[read]]'s scan width); a store with one version is left as it is.
+    */
+  def compact(spark: SparkSession, path: String): Unit =
+    VersionedStore.compact(path)(s => read(spark, path).write.parquet(s"$s/sketches")): Unit
 
-  /** Delete unreferenced version dirs (the [[VersionedStore]] guards). */
+  /** Delete unreferenced version dirs (the [[VersionedStore.vacuum]] guards). */
   def vacuum(path: String): Int = VersionedStore.vacuum(path)
 }

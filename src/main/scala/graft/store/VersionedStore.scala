@@ -1,0 +1,132 @@
+package graft.store
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.warehouse.AtomicPointer
+
+/** The one versioned-append commit protocol under graft's incremental
+  * stores — [[graft.operators.CountStore]] (and the
+  * [[graft.operators.QuantileStore]] histograms built on it),
+  * [[graft.operators.SketchStore]], the dedup corpus index
+  * ([[graft.llm.Dedup.writeCorpusIndex]]) and both [[graft.llm.Search]]
+  * postings stores. It is the only code that knows the layout:
+  *   - `CURRENT`: a newline list of the COMMITTED version dirs, oldest
+  *     first, swapped atomically ([[AtomicPointer.write]]);
+  *   - `v<N>/`: one version, holding whatever tables the store stages
+  *     into it (counts; buckets + shingles; postings + STATS), plus an
+  *     optional `TAG` naming the batch that committed it.
+  *
+  * A commit stages under the dot-prefixed `.staging-v<N>` (invisible to
+  * [[vacuum]] and to listing tools), renames it to `v<N>`, then swaps the
+  * pointer: readers see the old version list or the new one, never a
+  * half-written version. `N` derives from the POINTER, not the directory
+  * listing, so a crash anywhere before the swap leaves the prior pointer
+  * live and the replayed commit re-stages the SAME `v<N>`, clobbering the
+  * orphan. Appends never read existing state; the merge is each store's
+  * read-side concern (SUM for counts and postings, HLL union for
+  * sketches, plain union for the dedup index).
+  *
+  * Writers are serial (one writer per store); readers may run alongside.
+  */
+private[graft] object VersionedStore {
+
+  private val Pointer = "CURRENT"
+
+  /** Committed version dirs, oldest first; empty when nothing committed. */
+  def committedVersions(path: String): Seq[String] =
+    AtomicPointer.read(s"$path/$Pointer")
+      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+      .getOrElse(Seq.empty)
+
+  /** Commit one version: `stage` writes the version's tables into the
+    * staging dir it is handed; then the optional `tag` lands beside them
+    * (visible atomically WITH the version — the exactly-once bookkeeping
+    * of replayed streaming appends), the dir is published and the pointer
+    * swaps. `replace = true` makes the new version the sole committed one
+    * (bootstrap, rebuild, compaction fold); otherwise it is appended to
+    * `base`, the committed list (a store may extend it, as the dedup index
+    * adopts a pre-versioning flat layout as version `.`). Run every
+    * precondition before calling: a failed check then stages nothing.
+    */
+  def commit(path: String, replace: Boolean, tag: Option[String] = None,
+             base: Option[Seq[String]] = None)(stage: String => Unit): Unit = {
+    val committed = base.getOrElse(committedVersions(path))
+    val next = "v" + (committed.filter(_.matches("v\\d+"))
+      .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
+    val staging = s"$path/.staging-$next"
+    // a crashed earlier attempt's leftovers (a stale TAG included) must
+    // not ride into this version
+    AtomicPointer.deleteDir(staging)
+    stage(staging)
+    tag.foreach(t => AtomicPointer.write(s"$staging/TAG", t))
+    AtomicPointer.publishDir(staging, s"$path/$next")
+    AtomicPointer.write(s"$path/$Pointer",
+      ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))
+  }
+
+  /** Fold every committed version into one: `fold` writes the merged
+    * tables into the staging dir, committed with `replace = true`. Old
+    * version dirs stay until [[vacuum]]. Returns the number of versions
+    * folded; a store with at most one version is left untouched (0).
+    */
+  def compact(path: String)(fold: String => Unit): Int = {
+    val committed = committedVersions(path)
+    if (committed.size <= 1) 0
+    else {
+      commit(path, replace = true, base = Some(committed))(fold)
+      committed.size
+    }
+  }
+
+  /** Whether any COMMITTED version carries `tag`. A crash between the
+    * publish and the pointer swap leaves an uncommitted orphan whose tag
+    * is invisible here, and the replayed commit re-stages the SAME version
+    * number, clobbering the orphan — so a replay lands exactly once.
+    */
+  def hasTag(path: String, tag: String): Boolean =
+    committedVersions(path).exists(v =>
+      AtomicPointer.read(s"$path/$v/TAG").map(_.trim).contains(tag))
+
+  /** Every committed version's `table` as ONE parquet scan: one schema
+    * inference, one listing and one set of scan tasks however many
+    * versions the store has accrued (the merge is the caller's).
+    */
+  def read(spark: SparkSession, path: String, table: String): DataFrame =
+    read(spark, path, committedVersions(path), table)
+
+  /** [[read]] over a version list the caller already holds (so sidecars
+    * read from the same list describe exactly the rows scanned).
+    */
+  def read(spark: SparkSession, path: String, versions: Seq[String],
+           table: String): DataFrame = {
+    require(versions.nonEmpty, s"no committed versions under $path")
+    spark.read.parquet(versions.map(v => s"$path/$v/$table"): _*)
+  }
+
+  /** Delete the version dirs the pointer no longer references — the
+    * garbage of replaces, compaction folds and crashed commits — and
+    * return how many were removed. Safe against the (serial) writer:
+    *   - an in-flight commit writes under its dot-prefixed staging name,
+    *     which the `v<N>` filter never matches;
+    *   - a commit between its rename and its pointer swap occupies exactly
+    *     max+1 (numbers derive from the pointer), so no version above the
+    *     max committed one is deleted; a crashed commit's orphan there is
+    *     clobbered by the replay, or reclaimed once later commits pass it;
+    *   - the pointer is re-read before each delete, so a dir committed
+    *     since candidate selection is spared.
+    * Call only when no reader can still hold an OLD pointer (after a
+    * maintenance window).
+    */
+  def vacuum(path: String): Int = {
+    val committed = committedVersions(path).toSet
+    val maxCommitted = committed.filter(_.matches("v\\d+"))
+      .map(_.drop(1).toLong).maxOption.getOrElse(0L)
+    val junk = AtomicPointer.listDirNames(path)
+      .filter(n => n.matches("v\\d+") && !committed.contains(n) &&
+        n.drop(1).toLong <= maxCommitted)
+    junk.count { name =>
+      !committedVersions(path).contains(name) &&
+        AtomicPointer.deleteDir(s"$path/$name")
+    }
+  }
+}

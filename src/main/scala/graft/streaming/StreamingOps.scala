@@ -3,9 +3,9 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.functions.Det._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
 
 /** Event row for the typed streaming API (events.parquet schema with ts as
   * a proper timestamp). */
@@ -487,6 +487,38 @@ object StreamingOps {
       .start()
   }
 
+  /** The replay-guarded append every versioned-store maintainer shares:
+    * the [[ReplayGuard]] high-water mark skips fully-committed replays in
+    * O(1); the one batch that can straddle a crash (the first delivery
+    * after restart) appends only if the store has not already committed
+    * its `batch-<id>` tag ([[graft.store.VersionedStore.hasTag]]); the
+    * mark commits after the append; and `compactEvery` > 0 then runs
+    * `compact` every that-many batches, AFTER the mark (a crash mid-fold
+    * loses only the fold, never ingest progress).
+    */
+  private def taggedAppendStream(input: DataFrame, storePath: String, checkpoint: String,
+                                 append: (DataFrame, String) => Unit,
+                                 compact: SparkSession => Unit = _ => (),
+                                 compactEvery: Int = 0): StreamingQuery = {
+    val guard = new ReplayGuard(storePath, checkpoint)
+    guard.acquireLock()
+    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
+      guard.posture(batchId) match {
+        case Skip => ()
+        case p =>
+          val tag = s"batch-$batchId"
+          if (!(p == Recover && graft.store.VersionedStore.hasTag(storePath, tag)))
+            append(batch, tag)
+          guard.commit(batchId)
+          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+            compact(batch.sparkSession)
+      }
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+      .start()
+  }
+
   /** Continuous DSIR-model maintenance: each micro-batch's bucket
     * histogram ([[graft.llm.TextAnalysis.dsirBucketCounts]] — a
     * |buckets|-row frame) appends to the versioned additive
@@ -511,29 +543,11 @@ object StreamingOps {
     */
   def ingestDsirCountsStream(docs: DataFrame, storePath: String,
                              checkpoint: String, buckets: Int = 1024,
-                             compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyAppended =
-            p == Recover && graft.operators.CountStore.hasTag(storePath, tag)
-          if (!alreadyAppended)
-            graft.operators.CountStore.append(
-              graft.llm.TextAnalysis.dsirBucketCounts(batch, buckets),
-              storePath, Some(tag))
-          guard.commit(batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.operators.CountStore.compact(batch.sparkSession, storePath)
-      }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+                             compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
+    taggedAppendStream(docs, storePath, checkpoint,
+      (batch, tag) => graft.operators.CountStore.append(
+        graft.llm.TextAnalysis.dsirBucketCounts(batch, buckets), storePath, Some(tag)),
+      graft.operators.CountStore.compact(_, storePath), compactEvery)
 
   /** Continuous QUANTILE-HISTOGRAM maintenance — the percentile twin of
     * [[ingestDsirCountsStream]] (same additive [[graft.operators
@@ -552,28 +566,11 @@ object StreamingOps {
   def ingestQuantilesStream(rows: DataFrame, storePath: String,
                             checkpoint: String, keyCol: String,
                             valueCol: String, compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyAppended =
-            p == Recover && graft.operators.CountStore.hasTag(storePath, tag)
-          if (!alreadyAppended)
-            graft.operators.QuantileStore.append(
-              batch, keyCol, valueCol, storePath, Some(tag))
-          guard.commit(batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.operators.CountStore.compact(batch.sparkSession, storePath)
-      }
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    taggedAppendStream(rows, storePath, checkpoint,
+      (batch, tag) => graft.operators.QuantileStore.append(
+        batch, keyCol, valueCol, storePath, Some(tag)),
+      graft.operators.CountStore.compact(_, storePath), compactEvery)
 
   /** Continuous inverted-index maintenance — the text-retrieval twin of
     * [[ingestDsirCountsStream]]: each micro-batch's postings land as one
@@ -589,26 +586,9 @@ object StreamingOps {
     */
   def ingestPostingsStream(docs: DataFrame, indexPath: String, checkpoint: String,
                            buckets: Int = graft.llm.Search.DefaultBuckets)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(indexPath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyAppended =
-            p == Recover && graft.llm.Search.hasTag(indexPath, tag)
-          if (!alreadyAppended)
-            graft.llm.Search.appendToIndex(batch, indexPath, buckets,
-              tag = Some(tag))
-          guard.commit(batchId)
-      }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    taggedAppendStream(docs, indexPath, checkpoint,
+      (batch, tag) => graft.llm.Search.appendToIndex(batch, indexPath, buckets, tag = Some(tag)))
 
   /** Continuous MANIFESTED-TABLE maintenance — the streaming write path of
     * scale layout #6 (t34/t35): each micro-batch appends through
@@ -668,26 +648,10 @@ object StreamingOps {
     */
   def ingestRankedPostingsStream(docs: DataFrame, indexPath: String, checkpoint: String,
                                  buckets: Int = graft.llm.Search.DefaultBuckets)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(indexPath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyAppended =
-            p == Recover && graft.llm.Search.hasTag(indexPath, tag)
-          if (!alreadyAppended)
-            graft.llm.Search.appendToRankedIndex(batch, indexPath, buckets,
-              tag = Some(tag))
-          guard.commit(batchId)
-      }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    taggedAppendStream(docs, indexPath, checkpoint,
+      (batch, tag) => graft.llm.Search.appendToRankedIndex(batch, indexPath, buckets,
+        tag = Some(tag)))
 
   /** Continuous sketch-materialized-view maintenance — the sketch twin of
     * [[ingestDsirCountsStream]]: each micro-batch of events is sketched
@@ -706,29 +670,11 @@ object StreamingOps {
     */
   def ingestDailySketchStream(events: DataFrame, storePath: String,
                               checkpoint: String, lgK: Int = 14,
-                              compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyAppended =
-            p == Recover && graft.operators.SketchStore.hasTag(storePath, tag)
-          if (!alreadyAppended)
-            graft.operators.SketchStore.append(
-              graft.llm.Events.dailyUserSketches(batch, lgK),
-              storePath, Some(tag))
-          guard.commit(batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.operators.SketchStore.compact(batch.sparkSession, storePath)
-      }
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+                              compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
+    taggedAppendStream(events, storePath, checkpoint,
+      (batch, tag) => graft.operators.SketchStore.append(
+        graft.llm.Events.dailyUserSketches(batch, lgK), storePath, Some(tag)),
+      graft.operators.SketchStore.compact(_, storePath), compactEvery)
 
   /** Continuous SCD TYPE 2 dimension maintenance from an attribute-update
     * stream: each micro-batch applies [[graft.warehouse.ScdDim.applyBatch]]

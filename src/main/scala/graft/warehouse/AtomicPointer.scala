@@ -6,8 +6,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 
 /** Tiny atomic pointer / mark / lock files for path-based table formats —
-  * the shared primitive behind the warehouse snapshot pointer, the dedup
-  * index's CURRENT version list, and the streaming replay high-water mark.
+  * the shared primitive behind the warehouse snapshot and manifest
+  * pointers, [[graft.store.VersionedStore]]'s CURRENT version list (the
+  * count, sketch and quantile stores, the dedup corpus index and the
+  * search postings stores), and the streaming replay high-water mark and
+  * writer lease.
   *
   * Built on Hadoop's `FileContext` rather than `java.nio.file`, so the same
   * pointer machinery works on `file:`, `hdfs:`, and any other filesystem

@@ -321,7 +321,8 @@ object ParquetWarehouse {
   }
 
   /** Delete version dirs unreachable from CURRENT — the snapshot analogue
-    * of the dedup index's vacuum, with the same two writer-safety guards:
+    * of [[graft.store.VersionedStore.vacuum]], with the same two
+    * writer-safety guards:
     * never touch versions numbered ABOVE the committed one (a serial
     * writer's in-flight commit occupies exactly cur+1), and re-read the
     * pointer immediately before each delete. Reachable = the CURRENT

@@ -57,4 +57,33 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def fileScanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
     fileScanPaths(df.queryExecution.optimizedPlan)
+
+  /** Number of Spark jobs `body` started. `body` runs under its own job
+    * group; a sentinel job in a second group then runs, and once the
+    * listener has seen the sentinel (listener events arrive in order)
+    * every job of `body` has been counted.
+    */
+  def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-probe-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsStartedBy")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "jobsStartedBy sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }

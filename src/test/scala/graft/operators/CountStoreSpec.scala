@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.store.StoreLayout
 import graft.warehouse.AtomicPointer
 import org.apache.spark.sql.functions._
 
@@ -49,6 +50,17 @@ class CountStoreSpec extends SparkSpec {
     assert(removed == 2, s"v1+v2 should be reclaimed after the fold, got $removed")
     assert(viewOf(p) == before)
     assert(!AtomicPointer.exists(s"$p/v1") && AtomicPointer.exists(s"$p/v3"))
+  }
+
+  test("compact of a single-version store is a no-op: nothing rewritten, no Spark job") {
+    val p = tmp()
+    CountStore.write(Seq(("x", 1L), ("y", 2L)).toDF("k", "n"), p)
+    val before = StoreLayout(p)
+    assert(before.versions == Set("v1"))
+    val jobs = jobsStartedBy(CountStore.compact(spark, p))
+    assert(StoreLayout(p) == before, "a one-version store must not be rewritten")
+    assert(jobs == 0, s"a one-version compact ran $jobs Spark job(s)")
+    assert(viewOf(p) == Map("x" -> 1L, "y" -> 2L))
   }
 
   test("write replaces (rebuild); malformed schemas fail fast") {

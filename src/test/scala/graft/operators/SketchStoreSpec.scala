@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.llm.Events
+import graft.store.StoreLayout
 import org.apache.spark.sql.functions._
 
 /** The sketch materialized view (e19's gate): split-build ≡ single-build
@@ -91,6 +92,16 @@ class SketchStoreSpec extends SparkSpec {
     val after = Events.rollingDistinctUsersFromStore(spark, p)
       .orderBy("win_day").collect().map(_.getLong(1)).toSeq
     assert(after == before)
+  }
+
+  test("compact of a single-version store is a no-op: nothing rewritten, no Spark job") {
+    val p = tmp()
+    SketchStore.write(Events.dailyUserSketches(events), p)
+    val before = StoreLayout(p)
+    assert(before.versions == Set("v1"))
+    val jobs = jobsStartedBy(SketchStore.compact(spark, p))
+    assert(StoreLayout(p) == before, "a one-version store must not be rewritten")
+    assert(jobs == 0, s"a one-version compact ran $jobs Spark job(s)")
   }
 
   test("serving reads the store only — the event log is never rescanned") {

@@ -1,0 +1,167 @@
+package graft.store
+
+import java.nio.file.{Files, Paths}
+
+import graft.SparkSpec
+import graft.llm.{Dedup, Search}
+import graft.operators.{CountStore, SketchStore}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** One crash-replay fault matrix for the versioned-store core, run over
+  * every store's own writer. Per store: an orphan `v<N+1>` with garbage
+  * contents (and a stale staging dir) is invisible to reads and to
+  * `hasTag`; the replayed append clobbers it and commits exactly once;
+  * vacuum spares max+1 and reclaims replaced versions; and a failed
+  * precondition stages nothing. Each store's merge semantics keep their
+  * own specs.
+  */
+class VersionedStoreSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** One store's writer, read back as a canonical answer. Batch `i`'s
+    * contents differ per `i`; `answer` must change if a batch landed
+    * twice or garbage surfaced. `tagged` stores commit the append's tag
+    * (the dedup index's appends take none).
+    */
+  private case class Writer(
+      name: String,
+      tables: Seq[String],
+      tagged: Boolean,
+      write: (Int, String) => Unit,
+      append: (Int, String, Option[String]) => Unit,
+      answer: String => Seq[String],
+      failingAppend: String => Unit)
+
+  private def texts(i: Int): DataFrame = Seq(
+    (10L * i + 1, s"spark window merge batch$i alpha"),
+    (10L * i + 2, s"spark merge shuffle batch$i beta beta"),
+    (10L * i + 3, s"window join batch$i gamma spark spark")).toDF("doc_id", "text")
+
+  private val terms = Seq("spark", "merge")
+
+  private val writers = Seq(
+    Writer("CountStore", Seq("counts"), tagged = true,
+      (i, p) => CountStore.write(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p),
+      (i, p, t) => CountStore.append(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p, t),
+      p => CountStore.read(spark, p).collect().map(_.toString).sorted.toSeq,
+      p => CountStore.append(Seq(("k", "not-a-count")).toDF("k", "n"), p)),
+    Writer("SketchStore", Seq("sketches"), tagged = true,
+      (i, p) => SketchStore.write(sketches(i), p),
+      (i, p, t) => SketchStore.append(sketches(i), p, t),
+      p => SketchStore.read(spark, p)
+        .select(col("d"), hll_sketch_estimate(col("sk"))).collect().map(_.toString)
+        .sorted.toSeq,
+      p => SketchStore.append(Seq(("d", 1L)).toDF("d", "not_a_sketch"), p)),
+    Writer("Dedup index", Seq("buckets", "shingles"), tagged = false,
+      (i, p) => Dedup.writeCorpusIndex(texts(i), p),
+      (i, p, _) => Dedup.appendToCorpusIndex(texts(i), p),
+      p => (Dedup.indexShingles(spark, p).select(col("doc_id").cast("string")) union
+        Dedup.indexBuckets(spark, p).select(concat(lit("b"), col("doc_id"), lit(":"),
+          col("band"))))
+        .collect().map(_.getString(0)).sorted.toSeq,
+      p => Dedup.appendToCorpusIndex(texts(9).select("doc_id"), p)),
+    Writer("Search", Seq("postings"), tagged = true,
+      (i, p) => Search.initIndex(texts(i), p, buckets = 8),
+      (i, p, t) => Search.appendToIndex(texts(i), p, buckets = 8, tag = t),
+      p => Search.searchAllIndexed(spark, p, terms, buckets = 8)
+        .collect().map(_.toString).sorted.toSeq,
+      p => Search.appendToIndex(texts(9), p, buckets = 16)),
+    Writer("Search ranked", Seq("postings"), tagged = true,
+      (i, p) => Search.initRankedIndex(texts(i), p, buckets = 8),
+      (i, p, t) => Search.appendToRankedIndex(texts(i), p, buckets = 8, tag = t),
+      p => Search.searchRankedIndexed(spark, p, terms, k = 100, buckets = 8)
+        .collect().map(_.toString).sorted.toSeq,
+      p => Search.appendToRankedIndex(texts(9), p, buckets = 16)))
+
+  private def sketches(i: Int): DataFrame =
+    (0 until 5).map(u => ("d", 100L * i + u)).toDF("d", "u")
+      .groupBy("d").agg(hll_sketch_agg(col("u")).as("sk"))
+
+  private def tmp(name: String): String =
+    Files.createTempDirectory(s"graft-vstore-${name.replace(' ', '-')}").toString
+
+  /** A fully-written version dir the pointer does not reference: garbage
+    * rows under every table name, plus a TAG.
+    */
+  private def plantOrphan(p: String, v: String, tables: Seq[String], tag: String): Unit = {
+    tables.foreach(t =>
+      Seq((999999L, "GARBAGE")).toDF("doc_id", "junk").write.parquet(s"$p/$v/$t"))
+    Files.writeString(Paths.get(p, v, "TAG"), tag)
+  }
+
+  private def exists(p: String, name: String) = Files.exists(Paths.get(p, name))
+
+  for (w <- writers) {
+    test(s"fault matrix, ${w.name}: a garbage orphan is invisible; the replay commits once") {
+      val clean = tmp(w.name)
+      w.write(0, clean); w.append(1, clean, Some("batch-1")); w.append(2, clean, Some("batch-2"))
+      val expected = w.answer(clean)
+
+      val p = tmp(w.name)
+      w.write(0, p); w.append(1, p, Some("batch-1"))
+      val committed = w.answer(p)
+      // a crashed append of batch 2: renamed into v3 but the pointer never
+      // swapped, plus a stale staging dir of an even earlier attempt
+      plantOrphan(p, "v3", w.tables, "batch-2")
+      Files.createDirectories(Paths.get(p, ".staging-v3"))
+      Files.writeString(Paths.get(p, ".staging-v3", "TAG"), "stale")
+      assert(w.answer(p) == committed, "an uncommitted version leaked into reads")
+      assert(!VersionedStore.hasTag(p, "batch-2"), "an uncommitted version's tag is visible")
+      assert(VersionedStore.committedVersions(p) == Seq("v1", "v2"))
+
+      w.append(2, p, Some("batch-2"))
+      assert(VersionedStore.committedVersions(p) == Seq("v1", "v2", "v3"))
+      assert(w.answer(p) == expected, "the replay must land exactly once, garbage never")
+      assert(VersionedStore.hasTag(p, "batch-2") == w.tagged)
+      assert(!VersionedStore.hasTag(p, "stale"), "a stale staging dir rode into the commit")
+      assert(!exists(p, ".staging-v3"))
+    }
+
+    test(s"fault matrix, ${w.name}: vacuum spares max+1 and reclaims replaced versions") {
+      val p = tmp(w.name)
+      w.write(0, p); w.append(1, p, None)
+      // a commit caught between its rename and its pointer swap
+      plantOrphan(p, "v3", w.tables, "in-flight")
+      assert(VersionedStore.vacuum(p) == 0, "vacuum deleted a version above max committed")
+      assert(exists(p, "v3"))
+      // a rebuild lands on v3 (clobbering the orphan) and replaces v1, v2
+      w.write(2, p)
+      assert(VersionedStore.committedVersions(p) == Seq("v3"))
+      val fresh = tmp(w.name)
+      w.write(2, fresh)
+      assert(w.answer(p) == w.answer(fresh))
+      assert(VersionedStore.vacuum(p) == 2)
+      assert(!exists(p, "v1") && !exists(p, "v2") && exists(p, "v3"))
+      assert(w.answer(p) == w.answer(fresh))
+      assert(VersionedStore.vacuum(p) == 0, "vacuum re-run is a no-op")
+    }
+
+    test(s"fault matrix, ${w.name}: a failed precondition stages nothing") {
+      val p = tmp(w.name)
+      w.write(0, p); w.append(1, p, Some("batch-1"))
+      val before = StoreLayout(p)
+      val answer = w.answer(p)
+      intercept[Exception](w.failingAppend(p))
+      assert(StoreLayout(p) == before)
+      assert(before.versions == Set("v1", "v2"))
+      assert(w.answer(p) == answer)
+    }
+  }
+
+  test("compact folds every version into one; a one-version store is left alone") {
+    val p = tmp("compact")
+    assert(VersionedStore.compact(p)(_ => fail("nothing to fold")) == 0)
+    VersionedStore.commit(p, replace = true)(s => Seq(1L).toDF("x").write.parquet(s"$s/t"))
+    val one = StoreLayout(p)
+    assert(VersionedStore.compact(p)(_ => fail("one version: nothing to fold")) == 0)
+    assert(StoreLayout(p) == one)
+    VersionedStore.commit(p, replace = false, tag = Some("b2"))(s =>
+      Seq(2L).toDF("x").write.parquet(s"$s/t"))
+    assert(VersionedStore.compact(p)(s =>
+      VersionedStore.read(spark, p, "t").write.parquet(s"$s/t")) == 2)
+    assert(VersionedStore.committedVersions(p) == Seq("v3"))
+    assert(VersionedStore.read(spark, p, "t").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    assert(VersionedStore.vacuum(p) == 2)
+  }
+}
