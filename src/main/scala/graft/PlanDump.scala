@@ -46,8 +46,10 @@ object PlanDump {
     names.foreach { n =>
       try {
         val plan = n match {
-          case "probe:pr_round"  => fmt(prRound(spark, sfDir))
-          case "probe:prc_round" => fmt(prcRound(spark, sfDir))
+          case "probe:pr_round"  =>
+            fmt(graft.operators.Graph.pageRankRoundProbe(purchaseEdges(spark, sfDir)))
+          case "probe:prc_round" =>
+            fmt(graft.operators.Graph.pageRankConvergedRoundProbe(purchaseEdges(spark, sfDir)))
           case _ =>
             spark.catalog.clearCache()
             spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
@@ -69,32 +71,16 @@ object PlanDump {
     spark.stop()
   }
 
-  /** One PageRank round, composed lazily exactly as the operator's loop
-    * does (shared edges/degN materialization, then contribution + update),
-    * so the dumped plan shows the per-round exchange/join structure.
+  /** The purchase graph's symmetrized (customer, supplier) edges — the
+    * edge set both PageRank round probes run over.
     */
-  private def prRound(spark: org.apache.spark.sql.SparkSession,
-                      sfDir: String): DataFrame = {
+  private def purchaseEdges(spark: org.apache.spark.sql.SparkSession,
+                            sfDir: String): DataFrame = {
     val t = Tables(spark, sfDir)
     val pairs = t.orders.select("o_orderkey", "o_custkey")
       .join(t.lineitem.select("l_orderkey", "l_suppkey"),
         col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-    val edges = graft.operators.Graph.symmetrize(pairs, "c", "s")
-    graft.operators.Graph.pageRankRoundProbe(edges)
-  }
-
-  /** One CONVERGED-loop PageRank round (see [[Graph.pageRankConvergedRoundProbe]]),
-    * over the same derived edge set as [[prRound]].
-    */
-  private def prcRound(spark: org.apache.spark.sql.SparkSession,
-                       sfDir: String): DataFrame = {
-    val t = Tables(spark, sfDir)
-    val pairs = t.orders.select("o_orderkey", "o_custkey")
-      .join(t.lineitem.select("l_orderkey", "l_suppkey"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-    val edges = graft.operators.Graph.symmetrize(pairs, "c", "s")
-    graft.operators.Graph.pageRankConvergedRoundProbe(edges)
+    graft.operators.Graph.symmetrize(pairs, "c", "s")
   }
 }

@@ -540,11 +540,13 @@ object Dedup {
     * Output: one row per document that belongs to some near-dup cluster,
     * labeled with the cluster representative (min doc_id).
     */
-  /** Iteration cap for label propagation: propagation needs O(component
-    * diameter) rounds; near-dup components are pairs/triples (2-3 rounds),
-    * so 50 is far beyond any real dataset — hitting it means pathology, and
-    * silently returning unconverged labels would be a WRONG answer against
-    * an exact oracle, so it throws (ADVICE r2).
+  /** Round backstop (`maxRounds`) of the distributed connected-components
+    * path ([[graft.operators.Graph.connectedComponentsConverged]]):
+    * min-label propagation needs O(component diameter) rounds; near-dup
+    * components are pairs/triples (2-3 rounds), so 50 is far beyond any
+    * real dataset — hitting it means pathology, and silently returning
+    * unconverged labels would be a WRONG answer against an exact oracle,
+    * so the loop throws (ADVICE r2).
     */
   val MaxCcIterations = 50
 
@@ -678,48 +680,23 @@ object Dedup {
       // over the ceiling: fall through (probe rows are discarded; the
       // persisted pair pipeline re-serves the loop below)
     }
-    // Loop hygiene (VERDICT r2 #3): an iterative DataFrame loop must CUT the
-    // logical lineage each round, not just persist it — nested-IMR plans
-    // re-canonicalize the whole upstream LSH pipeline's expression tree on
-    // EVERY action (measured ~2 s of pure driver planning per action here).
-    // Eager checkpoints truncate edges and each round's labels to a
-    // LogicalRDD, making per-iteration plans O(1)-sized. The durability
-    // posture (reliable checkpoint vs localCheckpoint — VERDICT r8 #7)
-    // lives in graft.operators.Materialize.cut. The pair pipeline's caches
-    // are released as soon as the edge list is materialized.
-    def cut(df: DataFrame): DataFrame = graft.operators.Materialize.cut(df)
-    val edges = cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    // The distributed path is graft.operators.Graph's min-label
+    // connected components, run to its fixpoint with MaxCcIterations as the
+    // backstop. Loop hygiene (VERDICT r2 #3): the symmetrized edge list is
+    // cut ONCE, here, so every round plans against a LogicalRDD instead of
+    // re-canonicalizing the upstream LSH pipeline's expression tree
+    // (measured ~2 s of driver planning per action); the pair pipeline's
+    // caches are released as soon as that cut exists, before the first
+    // round. The durability posture (reliable checkpoint vs
+    // localCheckpoint — VERDICT r8 #7) lives in graft.operators.Materialize.
+    val edges = graft.operators.Materialize.cut(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b"), col("doc_a"))))
     pairs.unpersist()
     releasePairPipeline()
-    var labels = cut(edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("rep", col("doc_id")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < MaxCcIterations) {
-      val viaNeighbors = edges
-        .join(labels.select(col("doc_id").as("doc_b"), col("rep").as("nrep")), Seq("doc_b"))
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(min(col("nrep")).as("nrep"))
-      // carry the changed-flag inside the joined frame: the convergence
-      // check is isEmpty over the checkpointed changed-subset — it reads
-      // the already-materialized local blocks and short-circuits at the
-      // first changed row, instead of a full count() job per round
-      // (VERDICT r3 #7); superseded rounds' blocks are reclaimed by the
-      // context cleaner once unreferenced
-      val next = cut(labels.join(viaNeighbors, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"),
-          (col("nrep") < col("rep")).as("chg")))
-      converged = next.filter(col("chg")).isEmpty
-      labels = next.drop("chg")
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"nearDupClusters: label propagation not converged after $MaxCcIterations iterations " +
-          "(component diameter exceeds the cap — raise MaxCcIterations)")
-    labels.orderBy("doc_id")
+    graft.operators.Graph.componentsOfCut(edges, MaxCcIterations)._1
+      .select(col("node").as("doc_id"), col("component").as("rep"))
+      .orderBy("doc_id")
   }
 
   /** Benchmark decontamination: find corpus documents that share word

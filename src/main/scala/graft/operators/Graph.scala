@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed iterative graph analytics over an edge DataFrame — the
@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   * node-sized join. On a real cluster, bucketing the edge table by `src`
   * co-locates every iteration's join for free.
   *
+  * Every algorithm's round is written ONCE, as a function from the state
+  * frame to the next state frame. The fixed-round forms ([[pageRank]],
+  * [[connectedComponents]], [[kCore]], [[bfsDistances]],
+  * [[labelPropagation]]) cut that round's output a given number of times;
+  * the converged forms hand the same round to [[fixpoint]].
+  *
   * Cross-engine determinism: PageRank runs in FIXED-POINT integer
   * arithmetic (rank scaled by 1e12, integer `div` everywhere), so an exact
   * integer answer replaces the order-dependent float sums a naive
@@ -42,6 +48,80 @@ object Graph {
     val p = pairs.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst")).distinct()
     p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
   }
+
+  // ---------------------------------------------------------------- driver
+
+  /** A loop state: a materialized frame plus the metrics observed on the
+    * action that materialized it (empty when nothing was observed — a
+    * loop's start frame, usually).
+    */
+  private final case class Cut(df: DataFrame, m: Map[String, Long] = Map.empty) {
+    def apply(metric: String): Long = m(metric)
+  }
+
+  /** Materialize `df` — [[Materialize.cutFresh]] when `fresh`, else
+    * [[Materialize.cut]] — with `metrics` folded into the SAME job through
+    * `Dataset.observe`, so a stop signal costs no job of its own. The cut is
+    * eager, so the metrics are published when it returns. An aggregate over
+    * no rows observes null; it reads as 0 here (an empty graph has nothing
+    * left to change).
+    */
+  private def observedCut(df: DataFrame, fresh: Boolean = false)(metrics: Column*): Cut = {
+    val obs = new Observation()
+    val observed = df.observe(obs, metrics.head, metrics.tail: _*)
+    val c = if (fresh) Materialize.cutFresh(observed) else Materialize.cut(observed)
+    Cut(c, obs.get.map { case (k, v) => k -> Option(v).fold(0L)(_.asInstanceOf[Long]) })
+  }
+
+  /** THE convergence driver behind every converged loop in this object
+    * (and, through [[componentsOfCut]], Dedup's distributed clustering).
+    *
+    * Contract:
+    *   - `step` maps a state to the next one and runs exactly one round; it
+    *     sees the state only, never the round number, and materializes its
+    *     result through [[observedCut]], so the stop signal rides the cut.
+    *   - `done(prev, cur)` reads the metrics observed on the cuts; `prev` is
+    *     the state before the last round, None before the first — a loop
+    *     whose start frame already satisfies `done` runs 0 rounds.
+    *   - The returned R counts EXECUTED rounds, including the first round
+    *     that changed nothing: an oracle that unrolls exactly R rounds
+    *     replays what ran, no-op tail included.
+    *   - `done` is consulted at round 0, at every multiple of `probeEvery`
+    *     and at `maxRounds`; rounds in between run unprobed, so R is the
+    *     first consulted round at which `done` holds (with a cadence above
+    *     1, up to `probeEvery − 1` no-op rounds past the first quiet one).
+    *   - `maxRounds` is a runaway backstop, not a semantic knob: a loop not
+    *     done after `maxRounds` rounds THROWS rather than return a state
+    *     that is not the fixpoint.
+    */
+  private def fixpoint(loop: String, start: Cut, maxRounds: Int, probeEvery: Int = 1)(
+      step: Cut => Cut)(done: (Option[Cut], Cut) => Boolean): (Cut, Int) = {
+    var prev = Option.empty[Cut]
+    var cur = start
+    var rounds = 0
+    while (!((rounds % probeEvery == 0 || rounds >= maxRounds) && done(prev, cur))) {
+      if (rounds >= maxRounds)
+        throw new IllegalStateException(
+          s"$loop: not converged after $maxRounds rounds — raise maxRounds")
+      prev = Some(cur)
+      cur = step(cur)
+      rounds += 1
+    }
+    (cur, rounds)
+  }
+
+  /** The fixed-round forms: `rounds` applications of `step`, each cut. */
+  private def iterate(rounds: Int, start: DataFrame)(step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(start)((s, _) => Materialize.cut(step(s)))
+
+  private def nRows: Column = count(lit(1)).as("n")
+
+  /** Stop rule of the peeling loops: the round removed nothing. */
+  private def sameCount(prev: Option[Cut], cur: Cut): Boolean = prev.exists(_("n") == cur("n"))
+
+  private def nChanged: Column = count_if(col("label") =!= col("old_label")).as("n_changed")
+
+  // --------------------------------------------------------------- PageRank
 
   /** One power-iteration round's CONTRIBUTION AGGREGATION — the shared
     * inner step of [[pageRank]] / [[pageRankConverged]] /
@@ -71,6 +151,66 @@ object Graph {
       .groupBy(col("dst").as("node"))
       .agg(sum("share").as("contrib"))
 
+  /** The power-iteration loops' inputs: the cut edge frame, the cut node
+    * frame (node, outdeg, tp) and the round-0 state (node, outdeg, tp, r,
+    * share). With `tele` = 1 where teleport mass lands (every node for
+    * PageRank, the in-graph seeds for the personalized form) and `n_tele`
+    * the number of those nodes, `tp = tele · ((100−d)·Scale div
+    * (100·n_tele))` is each node's per-round teleport term — a constant,
+    * computed once here instead of once per round — and
+    * `r0 = tele · (Scale div n_tele)`.
+    */
+  private def prStart(edges: DataFrame, seeds: Option[DataFrame],
+                      dampNum: Long): (DataFrame, DataFrame, DataFrame) = {
+    // the edge frame is consumed once per iteration plus the degree pass —
+    // cut it ONCE so the (possibly join-derived) edge pipeline doesn't
+    // replan and re-execute every round
+    val e = Materialize.cut(edges)
+    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+    val tele = seeds.fold(deg.withColumn("tele", lit(1L))) { s =>
+      deg.join(s.select(col("node").cast("long").as("node")).distinct()
+        .withColumn("tele", lit(1L)), Seq("node"), "left")
+        .na.fill(0L, Seq("tele"))
+    }
+    // the teleport count as a broadcast scalar: no driver action, no collect
+    val start = Materialize.cut(
+      tele.crossJoin(broadcast(tele.agg(sum("tele").as("n_tele"))))
+        .select(col("node"), col("outdeg"),
+          expr(s"tele * ((${100 - dampNum} * ${Scale}L) div (100 * n_tele))").as("tp"),
+          expr(s"tele * (${Scale}L div n_tele)").as("r")))
+    (e, start.drop("r"), start.withColumn("share", expr("r div outdeg")))
+  }
+
+  /** One power-iteration round — the only one [[pageRank]],
+    * [[personalizedPageRank]] and [[pageRankConverged]] run: the
+    * contribution sum over `state`'s out-shares, applied as the rank update
+    * `r' = tp + dampNum · contrib div 100` to `lhs`, a node-keyed frame
+    * carrying (outdeg, tp). The fixed-round forms pass the constant node
+    * frame; the converged form passes the state itself (see
+    * [[prConvergedRound]]). Adds `r` and its out-share `share` to `lhs`'s
+    * columns.
+    */
+  private def prRound(e: DataFrame, dampNum: Long)(state: DataFrame, lhs: DataFrame): DataFrame =
+    lhs.join(contribFromShares(e, state.select("node", "share")), Seq("node"), "left")
+      .withColumn("r", col("tp") + expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
+      .withColumn("share", expr("r div outdeg"))
+      .drop("contrib")
+
+  /** [[prRound]] as [[pageRankConverged]] runs it (r17 fusion, guide §2.4):
+    * the state carries `outdeg`/`tp` itself, so the update is ONE
+    * node-keyed left join (state ⋈ contrib) with no per-round node-frame
+    * join, and the previous rank rides the state's own `r` column as
+    * `old_r` for the residual. `extra` columns of the state carry through.
+    */
+  private def prConvergedRound(e: DataFrame, dampNum: Long)(state: DataFrame,
+                                                           extra: Column*): DataFrame =
+    prRound(e, dampNum)(state, state.select(Seq(col("node"), col("outdeg"), col("tp"),
+      col("r").as("old_r")) ++ extra: _*))
+
+  private def rankColumns(ranks: DataFrame): DataFrame =
+    ranks.select(col("node"), col("r").as("rank_fp"),
+      (col("r") / lit(Scale.toDouble)).as("rank"))
+
   /** Fixed-point PageRank with damping `d = dampNum/100`.
     *
     * Recurrence (all integer arithmetic, `div` = floor division):
@@ -85,78 +225,31 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int, dampNum: Long = 85): DataFrame = {
     require(iterations >= 1 && dampNum >= 0 && dampNum <= 100)
-    // the edge frame is consumed once per iteration plus the degree pass —
-    // cut it ONCE so the (possibly join-derived) edge pipeline doesn't
-    // replan and re-execute every round
-    val e = Materialize.cut(edges)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    // node count as a broadcast scalar: no driver action, no collect
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    val degN = Materialize.cut(deg.crossJoin(broadcast(n)))
-    var ranks = degN.select(col("node"),
-      expr(s"${Scale}L div n_nodes").as("r"),
-      expr(s"(${Scale}L div n_nodes) div outdeg").as("share"))
-    for (_ <- 1 to iterations) {
-      val contrib = contribFromShares(e, ranks.select("node", "share"))
-      ranks = Materialize.cut(
-        degN.join(contrib, Seq("node"), "left")
-          .withColumn("r",
-            expr(s"(${100 - dampNum} * ${Scale}L) div (100 * n_nodes)") +
-              expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
-          .select(col("node"), col("r"), expr("r div outdeg").as("share")))
-    }
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r") / lit(Scale.toDouble)).as("rank"))
+    val (e, nodes, r0) = prStart(edges, None, dampNum)
+    rankColumns(iterate(iterations, r0)(
+      s => prRound(e, dampNum)(s, nodes).select("node", "r", "share")))
   }
 
-  /** Plan-evidence probe (r16): ONE [[pageRank]] round composed LAZILY —
-    * the same contribution + update expressions the loop materializes per
-    * round — so `explain` shows the per-round exchange/join structure that
-    * the loop's cut frames (LogicalRDD leaves) hide. Not part of any query
-    * path; consumed by [[graft.PlanDump]] only.
+  /** Plan-evidence probe (r16): the round-0 state plus ONE [[pageRank]]
+    * round, composed LAZILY — the loop's own [[prRound]] — so `explain`
+    * shows the per-round exchange/join structure that the loop's cut frames
+    * (LogicalRDD leaves) hide. Not part of any query path; consumed by
+    * [[graft.PlanDump]] only.
     */
   private[graft] def pageRankRoundProbe(edges: DataFrame,
                                         dampNum: Long = 85): DataFrame = {
-    val e = Materialize.cut(edges)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    val degN = Materialize.cut(deg.crossJoin(broadcast(n)))
-    val ranks = degN.select(col("node"),
-      expr(s"${Scale}L div n_nodes").as("r"),
-      expr(s"(${Scale}L div n_nodes) div outdeg").as("share"))
-    val contrib = contribFromShares(e, ranks.select("node", "share"))
-    degN.join(contrib, Seq("node"), "left")
-      .withColumn("r",
-        expr(s"(${100 - dampNum} * ${Scale}L) div (100 * n_nodes)") +
-          expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
-      .select(col("node"), col("r"), expr("r div outdeg").as("share"))
+    val (e, nodes, r0) = prStart(edges, None, dampNum)
+    prRound(e, dampNum)(r0, nodes).select("node", "r", "share")
   }
 
-  /** Plan-evidence probe for [[pageRankConverged]]'s per-round shape (r17):
-    * ONE converged-loop round composed LAZILY — the state-carried
-    * outdeg/n_nodes update join plus the observed residual — so `explain`
-    * shows the per-round exchange/join structure the loop's cutFresh frames
-    * hide. Consumed by [[graft.PlanDump]] only.
+  /** Plan-evidence probe for [[pageRankConverged]] (r17): the round-0 state
+    * plus ONE [[prConvergedRound]], composed LAZILY. Consumed by
+    * [[graft.PlanDump]] only.
     */
   private[graft] def pageRankConvergedRoundProbe(edges: DataFrame,
                                                  dampNum: Long = 85): DataFrame = {
-    val e = Materialize.cut(edges)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    val degN = Materialize.cut(deg.crossJoin(broadcast(n)))
-    val ranks = degN.select(col("node"),
-      expr(s"${Scale}L div n_nodes").as("r"),
-      expr(s"(${Scale}L div n_nodes) div outdeg").as("share"),
-      col("outdeg"), col("n_nodes"))
-    val contrib = contribFromShares(e, ranks.select("node", "share"))
-    ranks.select(col("node"), col("outdeg"), col("n_nodes"),
-        col("r").as("old_r"))
-      .join(contrib, Seq("node"), "left")
-      .withColumn("r",
-        expr(s"(${100 - dampNum} * ${Scale}L) div (100 * n_nodes)") +
-          expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
-      .select(col("node"), col("r"), expr("r div outdeg").as("share"),
-        col("outdeg"), col("n_nodes"), col("old_r"))
+    val (e, _, r0) = prStart(edges, None, dampNum)
+    prConvergedRound(e, dampNum)(r0)
   }
 
   /** DuckDB oracle fragment replaying the identical fixed-point recurrence:
@@ -187,146 +280,62 @@ object Graph {
   /** [[pageRank]] run TO RESIDUAL (VERDICT r12 #4): rounds continue until
     * max_v |r'(v) − r(v)| < `tolFp` (fixed-point units, Scale = 1e12 per
     * unit rank), so the iteration count is derived from the data instead
-    * of fixed — the same convergence contract the fixpoint family
-    * (components/k-core/LPA/BFS) got in r12, completing the story for the
-    * power-iteration family. Returns (ranks, R); an oracle unrolls exactly
-    * R rounds of the identical integer recurrence, and because the
-    * recurrence is deterministic, the result is BIT-IDENTICAL to
-    * [[pageRank]](edges, R) (spec-pinned).
+    * of fixed. Returns (ranks, R); an oracle unrolls exactly R rounds of
+    * the identical integer recurrence, and because the recurrence is
+    * deterministic, the result is BIT-IDENTICAL to [[pageRank]](edges, R)
+    * (spec-pinned).
     *
-    * The residual rides the materialize action itself via
-    * `Dataset.observe()` (VERDICT r14 #6): the state carries the previous
-    * rank as `old_r` — since r17 read straight off the state's own `r`
-    * column as the update's LEFT side, no extra join at all — and a
-    * CollectMetrics node folds max|r'−r| into the SAME job that
-    * checkpoints the state — ZERO extra probe jobs, convergence
-    * detected at the earliest round (the r13 probe-cadence compromise
-    * traded up-to-3 overshoot rounds for fewer probe joins; observe()
-    * removes both costs). The recorded R is the EXECUTED round count, so
-    * the late-bound oracle unrolls exactly what ran — bit-identity with
-    * [[pageRank]](edges, R) is probe-mechanism-independent (the observed
-    * column set is projected away before the state re-enters the
-    * recurrence). The state additionally carries `outdeg`/`n_nodes` (r17,
-    * guide §2.4), so the update never re-joins degN — one node-keyed join
-    * per round total beyond the edge-scan contribution join.
+    * The residual is observed on the state's own cut: the state carries
+    * the previous rank as `old_r` (see [[prConvergedRound]]), and the
+    * observed column set is projected away before the state re-enters the
+    * recurrence.
     *
-    * Because each round still references the state TWICE (contribution
-    * step + the update's left side), the per-round state cut is
-    * [[Materialize.cutFresh]] —
+    * TWO rounds per materialization (r17, VERDICT r16 #3 — the remaining
+    * per-round cost was the cut job itself): rounds 2k-1 and 2k compose
+    * into ONE lazy plan, checkpointed once, with BOTH residuals observed on
+    * the same action — max|r_{2k-1}−r_{2k-2}| (via the carried
+    * old_r0/old_r columns) and max|r_{2k}−r_{2k-1}|. The batch's cut is
+    * [[fixpoint]]'s round 2k-1; round 2k is a step over the already
+    * materialized frame that starts no job. Convergence is therefore
+    * checked FIRST-ROUND-FIRST: the stopping round R and the returned
+    * ranks are identical to a one-round-per-job loop (round 2k-1's ranks
+    * ride the materialized frame as `old_r`); the only extra work on an
+    * odd-R stop is one discarded round — bounded by 1/R. Within the
+    * batched plan the first round's subtree feeds both the second
+    * contribution join and the update's left side; its exchanges are
+    * IDENTICAL subtrees, so AQE's stage reuse computes each shuffle once.
+    *
+    * Because each round references the state TWICE (contribution step +
+    * the update's left side), the state cut is [[Materialize.cutFresh]] —
     * size-only join stats MULTIPLY for every non-semi join type, so a
     * twice-referenced state squares sizeInBytes per round (digit count
     * doubles; planning grinds into million-digit BigInt multiplication by
-    * round ~20 — reproduced live in r15 before the reset). cutFresh
-    * re-leafs the materialized rows with constant default stats, bounding
-    * every round's planning cost regardless of the round shape.
+    * round ~20 — reproduced live in r15 before the reset).
     * Power iteration contracts the residual by ~damping per round
     * (0.85^R), so R ≈ log(r0/tol)/log(1/0.85) regardless of diameter —
     * ~20–40 rounds at practical tolerances, the same at 100× scale (the
     * initial rank Scale/N SHRINKS with N, so absolute tolerance needs
-    * FEWER rounds on bigger graphs, never more). `maxRounds` is the
-    * throwing runaway backstop, not a semantic knob.
+    * FEWER rounds on bigger graphs, never more).
     */
   def pageRankConverged(edges: DataFrame, tolFp: Long = 10000000L,
                         maxRounds: Int = 128,
                         dampNum: Long = 85): (DataFrame, Int) = {
     require(tolFp >= 1 && maxRounds >= 1 && dampNum >= 0 && dampNum <= 100)
-    val e = Materialize.cut(edges)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    val degN = Materialize.cut(deg.crossJoin(broadcast(n)))
-    // r17 fusion (guide §2.4, VERDICT r16 #3): the loop state carries
-    // `outdeg` and `n_nodes` alongside (r, share), so the per-round update
-    // is ONE node-keyed left join (state ⋈ contrib) instead of the r16
-    // shape's TWO (degN ⋈ contrib, then ⋈ old ranks for the residual's
-    // `old_r` — the previous rank now rides the state's own `r` column for
-    // free). Arithmetic is unchanged: outdeg/n_nodes are the identical
-    // integers degN carried, so ranks are bit-identical (parity-spec-pinned
-    // against pageRank(edges, R)). Per round that removes one node-sized
-    // join + its exchange AND the per-round degN broadcast rebuild.
-    var ranks = degN.select(col("node"),
-      expr(s"${Scale}L div n_nodes").as("r"),
-      expr(s"(${Scale}L div n_nodes) div outdeg").as("share"),
-      col("outdeg"), col("n_nodes"))
-    // One lazy round over a state frame carrying (node, r, share, outdeg,
-    // n_nodes): the update join + rank arithmetic, previous rank kept as
-    // `old_r`, round-(k-1) rank (if `prev` is set) carried through as
-    // `old_r0` so a 2-round batch can detect convergence at its FIRST round.
-    def round(state: DataFrame, keepPrev: Boolean): DataFrame = {
-      val contrib = contribFromShares(e, state.select("node", "share"))
-      val lhs =
-        if (keepPrev)
-          state.select(col("node"), col("outdeg"), col("n_nodes"),
-            col("r").as("old_r"), col("old_r").as("old_r0"))
-        else
-          state.select(col("node"), col("outdeg"), col("n_nodes"),
-            col("r").as("old_r"))
-      val upd = lhs.join(contrib, Seq("node"), "left")
-        .withColumn("r",
-          expr(s"(${100 - dampNum} * ${Scale}L) div (100 * n_nodes)") +
-            expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
-      val cols = Seq(col("node"), col("r"), expr("r div outdeg").as("share"),
-        col("outdeg"), col("n_nodes"), col("old_r")) ++
-        (if (keepPrev) Seq(col("old_r0")) else Nil)
-      upd.select(cols: _*)
-    }
-    // TWO rounds per materialization (r17, VERDICT r16 #3 — the remaining
-    // per-round cost was the cutFresh job itself): rounds 2k-1 and 2k
-    // compose into ONE lazy plan, checkpointed once, with BOTH residuals
-    // observed on the same action — max|r_{2k-1}−r_{2k-2}| (via the carried
-    // old_r0/old_r columns) and max|r_{2k}−r_{2k-1}|. Convergence is
-    // checked FIRST-ROUND-FIRST, so the stopping round R and the returned
-    // ranks are identical to the one-round-per-job loop (round 2k-1's
-    // ranks ride the materialized frame as `old_r`); the only extra work
-    // on an odd-R stop is one discarded round — bounded by 1/R. Within the
-    // batched plan the first round's subtree feeds both the second
-    // contribution join and the update's left side; its exchanges are
-    // IDENTICAL subtrees, so AQE's stage reuse computes each shuffle once
-    // (only the node-sized post-exchange projections run twice).
-    var rounds = 0
-    var converged = false
-    var result: DataFrame = ranks
-    while (!converged) {
-      val r1 = round(ranks, keepPrev = false)
-      val obs = new org.apache.spark.sql.Observation(s"pr-residual-$rounds")
-      val next = Materialize.cutFresh(
-        round(r1, keepPrev = true)
-          .observe(obs,
-            max(abs(col("old_r") - col("old_r0"))).as("res1"),
-            max(abs(col("r") - col("old_r"))).as("res2")))
-      // Materialize.cut is eager, so the metrics are already published;
-      // get() does not block here. On an EMPTY graph the observed
-      // max(abs(...)) is null — treat it as converged (residual 0) instead
-      // of an opaque cast NPE (ADVICE r15).
-      def res(k: String): Long =
-        Option(obs.get(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      rounds += 1
-      if (res("res1") < tolFp) {
-        converged = true
-        // round 2k-1 converged: its ranks are the batch frame's `old_r`
-        result = next.select(col("node"), col("old_r").as("r"))
-      } else if (rounds >= maxRounds)
-        // identical contract to the one-round loop: round `maxRounds`
-        // unconverged throws — round maxRounds+1 (already computed in the
-        // batch) must never rescue the run
-        throw new IllegalStateException(
-          s"pageRankConverged: residual still ≥ $tolFp after $maxRounds rounds " +
-            "— raise maxRounds or loosen tolFp (damping bounds rounds at " +
-            "~log(Scale/tol)/log(100/dampNum), independent of graph size)")
-      else {
-        rounds += 1
-        if (res("res2") < tolFp) {
-          converged = true
-          result = next.select("node", "r")
-        } else if (rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"pageRankConverged: residual still ≥ $tolFp after $maxRounds rounds " +
-              "— raise maxRounds or loosen tolFp (damping bounds rounds at " +
-              "~log(Scale/tol)/log(100/dampNum), independent of graph size)")
-        ranks = next.select("node", "r", "share", "outdeg", "n_nodes")
-      }
-    }
-    (result.select(col("node"), col("r").as("rank_fp"),
-      (col("r") / lit(Scale.toDouble)).as("rank")), rounds)
+    val (e, _, r0) = prStart(edges, None, dampNum)
+    // a batch's cut observes `res` (its first round) and `res2` (its
+    // second); the state after its first round still holds `res2`
+    val (ranks, r) = fixpoint("pageRankConverged", Cut(r0), maxRounds)(s => s.m.get("res2") match {
+      case Some(res2) => Cut(s.df, Map("res" -> res2))
+      case None =>
+        val first = prConvergedRound(e, dampNum)(
+          s.df.select("node", "r", "share", "outdeg", "tp"))
+        observedCut(prConvergedRound(e, dampNum)(first, col("old_r").as("old_r0")), fresh = true)(
+          max(abs(col("old_r") - col("old_r0"))).as("res"),
+          max(abs(col("r") - col("old_r"))).as("res2"))
+    })((prev, cur) => prev.nonEmpty && cur("res") < tolFp)
+    // stopped at a batch's first round: its ranks are the frame's `old_r`
+    val rank = if (ranks.m.contains("res2")) col("old_r") else col("r")
+    (rankColumns(ranks.df.select(col("node"), rank.as("r"))), r)
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002): the teleport mass lands only
@@ -342,34 +351,15 @@ object Graph {
     * }}}
     * Seeds outside the graph carry no mass and are dropped (|S| counts
     * seeds IN the graph — otherwise the walk would silently leak teleport
-    * mass). Same per-iteration scale shape as [[pageRank]].
+    * mass). Same round ([[prRound]]) and scale shape as [[pageRank]], which
+    * is this recurrence with every node a seed.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iterations: Int,
                            dampNum: Long = 85): DataFrame = {
     require(iterations >= 1 && dampNum >= 0 && dampNum <= 100)
-    val e = Materialize.cut(edges)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val s = seeds.select(col("node").cast("long").as("node")).distinct()
-      .join(deg.select("node"), Seq("node"), "left_semi")
-    val ns = s.agg(count(lit(1)).as("n_seeds"))
-    val degN = Materialize.cut(deg
-      .join(s.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .na.fill(0L, Seq("is_seed"))
-      .crossJoin(broadcast(ns)))
-    var ranks = degN.select(col("node"),
-      expr(s"is_seed * (${Scale}L div n_seeds)").as("r"),
-      expr(s"(is_seed * (${Scale}L div n_seeds)) div outdeg").as("share"))
-    for (_ <- 1 to iterations) {
-      val contrib = contribFromShares(e, ranks.select("node", "share"))
-      ranks = Materialize.cut(
-        degN.join(contrib, Seq("node"), "left")
-          .withColumn("r",
-            expr(s"is_seed * ((${100 - dampNum} * ${Scale}L) div (100 * n_seeds))") +
-              expr(s"($dampNum * coalesce(contrib, 0L)) div 100"))
-          .select(col("node"), col("r"), expr("r div outdeg").as("share")))
-    }
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r") / lit(Scale.toDouble)).as("rank"))
+    val (e, nodes, r0) = prStart(edges, Some(seeds), dampNum)
+    rankColumns(iterate(iterations, r0)(
+      s => prRound(e, dampNum)(s, nodes).select("node", "r", "share")))
   }
 
   /** DuckDB unroll of [[personalizedPageRank]] over caller-provided
@@ -401,6 +391,25 @@ object Graph {
     (r0 +: iters).mkString(",\n")
   }
 
+  // ---------------------------------------------------- connected components
+
+  /** Every node labeled with its own id: (node, label). */
+  private def ccStart(e: DataFrame): DataFrame =
+    Materialize.cut(e.select("src").distinct())
+      .select(col("src").as("node"), col("src").as("label"))
+
+  /** One min-label round: every node takes the minimum of its label and
+    * its neighbors' labels; the previous label rides along as `old_label`.
+    */
+  private def ccRound(e: DataFrame)(labels: DataFrame): DataFrame = {
+    val nbrMin = e.join(labels, e("src") === labels("node"))
+      .groupBy(col("dst").as("node"))
+      .agg(min("label").as("nbr_label"))
+    labels.join(nbrMin, Seq("node"), "left")
+      .select(col("node"), col("label").as("old_label"),
+        least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+  }
+
   /** Connected components by min-label propagation: every node starts
     * labeled with its own id; each iteration every node takes the minimum
     * of its label and its neighbors' labels. After ≥ diameter iterations
@@ -417,78 +426,55 @@ object Graph {
   def connectedComponents(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1)
     val e = Materialize.cut(edges)
-    val nodes = Materialize.cut(e.select("src").distinct())
-    var labels = nodes.select(col("src").as("node"), col("src").as("label"))
-    for (_ <- 1 to iterations) {
-      val nbrMin = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(min("label").as("nbr_label"))
-      labels = Materialize.cut(
-        labels.join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
-    }
-    labels.select(col("node"), col("label").as("component"))
+    iterate(iterations, ccStart(e))(ccRound(e))
+      .select(col("node"), col("label").as("component"))
   }
 
-  /** Min-label propagation TO THE FIXPOINT: same recurrence as
-    * [[connectedComponents]], but the round count is derived from the data
-    * — each round carries an `old_label` column through the materialized
-    * state, so "did anything change" is one cheap filter+isEmpty probe on
-    * a node-sized local-checkpointed frame (no extra shuffle, no edge
-    * scan). Stops at the first round that changes nothing; the result is
-    * therefore the true fixpoint at ANY graph diameter, and the reached
-    * round count R is returned so an oracle can unroll exactly R rounds
-    * (post-fixpoint rounds are idempotent, so any R' ≥ R also matches).
+  /** Min-label propagation TO THE FIXPOINT: the round of
+    * [[connectedComponents]], run by [[fixpoint]] until a round changes no
+    * label (the changed-label count is observed on the round's cut). The
+    * result is therefore the true fixpoint at ANY graph diameter, and the
+    * reached round count R is returned so an oracle can unroll exactly R
+    * rounds (post-fixpoint rounds are idempotent, so any R' ≥ R also
+    * matches). Diameter of real sparse graphs is O(log n); the 64-round
+    * backstop covers any graph that isn't an adversarial path.
     *
-    * `maxRounds` is a runaway backstop, not a semantic knob: hitting it
-    * THROWS rather than silently emitting unconverged labels — the
-    * failure mode VERDICT r11 flagged for the fixed-round form at 100×
-    * scale. Diameter of real sparse graphs is O(log n); 64 rounds covers
-    * any graph that isn't an adversarial path, and a caller that owns one
-    * raises the backstop explicitly.
-    *
-    * Scale shape per round: identical to [[connectedComponents]] (one
-    * edge-scan join + node-keyed min + node-sized left join) plus the
-    * isEmpty probe, which reads only the already-materialized state.
+    * Scale shape per round: one edge-scan join + node-keyed min +
+    * node-sized left join, materialized once.
     */
   def connectedComponentsConverged(edges: DataFrame,
                                    maxRounds: Int = 64): (DataFrame, Int) = {
     require(maxRounds >= 1)
-    val e = Materialize.cut(edges)
-    val nodes = Materialize.cut(e.select("src").distinct())
-    var labels = nodes.select(col("src").as("node"), col("src").as("label"))
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponentsConverged: no fixpoint within $maxRounds rounds " +
-            "— raise maxRounds (graph diameter exceeds the backstop)")
-      val nbrMin = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(min("label").as("nbr_label"))
-      // the "did anything change" probe rides the materialize action via
-      // observe() (r17, §1.2 — the same zero-extra-jobs mechanism
-      // pageRankConverged has used since r14): count of changed labels
-      // folds into the SAME job that checkpoints the state, so the old
-      // per-round filter+isEmpty driver job disappears. Detection value
-      // identical (sum > 0 ⇔ the filter was non-empty; null on an empty
-      // graph ⇒ 0 ⇒ fixpoint), so the recorded R is unchanged.
-      val obs = new org.apache.spark.sql.Observation(s"cc-changed-$rounds")
-      val next = Materialize.cut(
-        labels.join(nbrMin, Seq("node"), "left")
-          .select(col("node"), col("label").as("old_label"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-          .observe(obs,
-            sum(when(col("label") =!= col("old_label"), 1L).otherwise(0L))
-              .as("n_changed")))
-      rounds += 1
-      changed = Option(obs.get("n_changed"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L) > 0
-      labels = next.select("node", "label")
-    }
-    (labels.select(col("node"), col("label").as("component")), rounds)
+    componentsOfCut(Materialize.cut(edges), maxRounds)
+  }
+
+  /** [[connectedComponentsConverged]] over an edge frame the caller has
+    * ALREADY cut — for a caller that must release the edge pipeline's
+    * caches between the cut and the loop (Dedup's distributed clustering).
+    */
+  private[graft] def componentsOfCut(e: DataFrame, maxRounds: Int): (DataFrame, Int) = {
+    val (labels, r) = fixpoint("connectedComponentsConverged", Cut(ccStart(e)), maxRounds)(
+      s => observedCut(ccRound(e)(s.df))(nChanged))(
+      (prev, cur) => prev.nonEmpty && cur("n_changed") == 0)
+    (labels.df.select(col("node"), col("label").as("component")), r)
+  }
+
+  /** One alternating round over the canonical directed (a > b) edge set. */
+  private def starRound(e: DataFrame): DataFrame = {
+    // large-star over the symmetric view
+    val sym = e.select(col("a").as("u"), col("b").as("v"))
+      .union(e.select(col("b").as("u"), col("a").as("v")))
+    val lsMins = sym.groupBy("u").agg(min("v").as("mv"))
+      .select(col("u"), least(col("mv"), col("u")).as("m"))
+    val ls = sym.join(lsMins, Seq("u"))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("a"), col("m").as("b")).distinct()
+    // small-star over the directed (larger → smaller) view
+    val ssMins = ls.groupBy("a").agg(min("b").as("m"))
+    val ssNb = ls.join(ssMins, Seq("a"))
+      .filter(col("b") =!= col("m"))
+      .select(col("b").as("a"), col("m").as("b"))
+    ssNb.union(ssMins.select(col("a"), col("m").as("b"))).distinct()
   }
 
   /** Connected components by the ALTERNATING large-star / small-star
@@ -511,10 +497,11 @@ object Graph {
     *     neighborhood — {(v, m) : v ∈ N(a) ∪ {a}, v ≠ m}.
     * Every output edge points strictly larger → smaller, so the state
     * stays canonical; the loop stops when a round leaves the edge SET
-    * unchanged (count + one anti-join on the shrinking frame), at which
-    * point E is a star forest: every node's parent IS its component min.
-    * `maxRounds` is the same throwing backstop as the other converged
-    * forms — 32 covers any graph below ~2^32 path length.
+    * unchanged, at which point E is a star forest: every node's parent IS
+    * its component min. Set equality is equal observed counts plus an
+    * empty one-sided difference — the anti-join runs only on rounds whose
+    * counts are equal. An empty start set runs 0 rounds. The 32-round
+    * backstop covers any graph below ~2^32 path length.
     *
     * Output: (node, component) for every endpoint of the input, component
     * = min node id in the component — bit-identical to
@@ -533,43 +520,19 @@ object Graph {
       edges.select(col("src").as("node"))
         .union(edges.select(col("dst"))).distinct())
     // canonical directed start: larger endpoint → smaller, no self loops
-    var e = Materialize.cut(edges.select(
+    val start = observedCut(edges.select(
         greatest(col("src"), col("dst")).as("a"),
         least(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var rounds = 0
-    var stable = e.isEmpty
-    while (!stable) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponentsAlternating: no fixpoint within $maxRounds rounds " +
-            "— raise maxRounds (pathological geometry beyond the backstop)")
-      // large-star over the symmetric view
-      val sym = e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-      val lsMins = sym.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val ls = sym.join(lsMins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b")).distinct()
-      // small-star over the directed (larger → smaller) view
-      val ssMins = ls.groupBy("a").agg(min("b").as("m"))
-      val ssNb = ls.join(ssMins, Seq("a"))
-        .filter(col("b") =!= col("m"))
-        .select(col("b").as("a"), col("m").as("b"))
-      val next = Materialize.cut(
-        ssNb.union(ssMins.select(col("a"), col("m").as("b"))).distinct())
-      rounds += 1
-      // set equality on the canonical directed pairs: equal counts plus an
-      // empty one-sided difference ⇒ identical sets (both are distinct)
-      stable = next.count() == e.count() &&
-        next.join(e, Seq("a", "b"), "left_anti").isEmpty
-      e = next
+      .filter(col("a") =!= col("b")).distinct())(nRows)
+    val (e, r) = fixpoint("connectedComponentsAlternating", start, maxRounds)(
+      s => observedCut(starRound(s.df))(nRows)) { (prev, cur) =>
+      prev.fold(cur("n") == 0L)(p => p("n") == cur("n") &&
+        cur.df.join(p.df, Seq("a", "b"), "left_anti").isEmpty)
     }
     val labels = nodes
-      .join(e.select(col("a").as("node"), col("b").as("parent")), Seq("node"), "left")
+      .join(e.df.select(col("a").as("node"), col("b").as("parent")), Seq("node"), "left")
       .select(col("node"), coalesce(col("parent"), col("node")).as("component"))
-    (labels, rounds)
+    (labels, r)
   }
 
   /** True when one more propagation step changes no label — i.e. the fixed
@@ -630,6 +593,19 @@ object Graph {
       .crossJoin(closed.agg(count(lit(1)).as("n_triangles")))
   }
 
+  // ---------------------------------------------------------------- peeling
+
+  /** One peeling round: drop every edge with an endpoint of degree < k. */
+  private def kCoreRound(k: Int)(e: DataFrame): DataFrame = {
+    val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k).select("node")
+    e.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+      .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+  }
+
+  private def degrees(e: DataFrame): DataFrame =
+    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+
   /** K-CORE of an undirected graph by iterative peeling: each round
     * removes every node whose CURRENT degree is < k (removals cascade —
     * a node can drop below k because its neighbors left). After enough
@@ -645,56 +621,24 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = Materialize.cut(edges)
-    for (_ <- 1 to rounds) {
-      val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("node")
-      e = Materialize.cut(
-        e.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
-    }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    degrees(iterate(rounds, Materialize.cut(edges))(kCoreRound(k)))
   }
 
-  /** Iterative peeling TO THE FIXPOINT: same per-round shape as [[kCore]],
-    * but peeling stops at the first round that removes no edge — detected
-    * by one cheap count() on the just-materialized (local-checkpointed)
-    * shrinking edge frame, so a cascade deeper than any fixed guess (a
-    * long pendant path peels one layer per round) still fully resolves.
-    * Returns (core, roundsRun); `p{roundsRun}` in [[kCoreOracleCtes]]
-    * replays it exactly (the final round is a no-op on both engines, and
-    * extra rounds stay no-ops — peeling is idempotent at the fixpoint).
-    * Hitting `maxRounds` THROWS instead of returning a half-peeled
-    * subgraph that is not a k-core.
+  /** Iterative peeling TO THE FIXPOINT: the round of [[kCore]], run by
+    * [[fixpoint]] until a round removes no edge (surviving-edge counts are
+    * observed on the start cut and on every round's cut), so a cascade
+    * deeper than any fixed guess (a long pendant path peels one layer per
+    * round) still fully resolves. Returns (core, roundsRun);
+    * `p{roundsRun}` in [[kCoreOracleCtes]] replays it exactly (the final
+    * round is a no-op on both engines, and extra rounds stay no-ops —
+    * peeling is idempotent at the fixpoint).
     */
   def kCoreConvergedRun(edges: DataFrame, k: Int,
                         maxRounds: Int = 64): (DataFrame, Int) = {
     require(k >= 1 && maxRounds >= 1)
-    var e = Materialize.cut(edges)
-    var prev = e.count()
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"kCoreConvergedRun: peeling not stable within $maxRounds rounds " +
-            "— raise maxRounds (cascade depth exceeds the backstop)")
-      val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("node")
-      // surviving-edge count rides the materialize action via observe()
-      // (r17, §1.2): no per-round count() job — identical value, same R
-      val obs = new org.apache.spark.sql.Observation(s"kcore-n-$rounds")
-      e = Materialize.cut(
-        e.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .observe(obs, count(lit(1)).as("n_edges")))
-      rounds += 1
-      val cur = Option(obs.get("n_edges"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      changed = cur != prev
-      prev = cur
-    }
-    (e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")), rounds)
+    val (core, r) = fixpoint("kCoreConvergedRun", observedCut(edges)(nRows), maxRounds)(
+      s => observedCut(kCoreRound(k)(s.df))(nRows))(sameCount)
+    (degrees(core.df), r)
   }
 
   /** True when one more peeling round removes nothing. */
@@ -721,6 +665,49 @@ object Graph {
     (p0 +: iters).mkString(",\n")
   }
 
+  // -------------------------------------------------------------------- BFS
+
+  /** The BFS start state: every distinct seed at dist 0, all `fresh` (the
+    * frontier); keyed (seed, node) when `perSeed`.
+    */
+  private def bfsStart(seeds: DataFrame, perSeed: Boolean): DataFrame = {
+    val s = seeds.select(col("node").cast("long").as("node")).distinct()
+    s.select((if (perSeed) Seq(col("node").as("seed")) else Nil) ++
+      Seq(col("node"), lit(0).as("dist"), lit(true).as("fresh")): _*)
+  }
+
+  /** One frontier round over the state (key…, node, dist, fresh): the
+    * frontier is the `fresh` rows (those the previous round added); their
+    * out-neighbors not yet reached under the same key join at `dist + 1`
+    * and become the next frontier. A new row's distance derives from its
+    * frontier row and the frontier from the carried flag, so every round
+    * plans the SAME expressions — no per-round literal, hence no per-round
+    * code generation.
+    */
+  private def bfsRound(e: DataFrame, key: Seq[String])(reached: DataFrame): DataFrame = {
+    val frontier = reached.filter(col("fresh"))
+    val fresh = e.join(frontier, e("src") === frontier("node"))
+      .select(key.map(col) ++ Seq(col("dst").as("node"), (col("dist") + 1).as("dist")): _*)
+      .distinct()
+      .join(reached, key :+ "node", "left_anti")
+    reached.withColumn("fresh", lit(false))
+      .unionByName(fresh.withColumn("fresh", lit(true)))
+  }
+
+  private def nFresh: Column = count_if(col("fresh")).as("n_fresh")
+
+  /** BFS run by [[fixpoint]] until a round adds nothing (the added-row
+    * count is observed on the start cut and on every round's cut). */
+  private def bfsConvergedBy(loop: String, edges: DataFrame, seeds: DataFrame,
+                             key: Seq[String], maxRounds: Int,
+                             probeEvery: Int): (DataFrame, Int) = {
+    val e = Materialize.cut(edges)
+    val (reached, r) = fixpoint(loop, observedCut(bfsStart(seeds, key.nonEmpty))(nFresh),
+      maxRounds, probeEvery)(s => observedCut(bfsRound(e, key)(s.df))(nFresh))(
+      (_, cur) => cur("n_fresh") == 0)
+    (reached.df.drop("fresh"), r)
+  }
+
   /** Multi-source BFS: unweighted shortest-path distance from the nearest
     * seed, by frontier expansion — round d joins ONLY the frontier (nodes
     * first reached at d−1) against the edge table and anti-joins the
@@ -738,64 +725,28 @@ object Graph {
     * Scale shape per round: one frontier-sized equi-join on `src` (the
     * 100 TB edge table's join key — bucketing edges by src co-locates every
     * round), one distinct, one anti-join against the node-sized reached
-    * set; state [[Materialize.cut]] so lineage stays flat and executor
-    * loss replays one round. No driver actions — empty late rounds cost
-    * empty joins, not a per-round count.
+    * set; state [[Materialize.cut]] once per round so lineage stays flat
+    * and executor loss replays one round. No driver actions — empty late
+    * rounds cost empty joins, not a per-round count.
     */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0)
     val e = Materialize.cut(edges)
-    var reached = Materialize.cut(
-      seeds.select(col("node").cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0)))
-    var frontier = reached.select("node")
-    for (d <- 1 to maxDepth) {
-      val nbrs = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-      val fresh = nbrs.join(reached, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d))
-      // ONE materialization per round: the next frontier re-derives from
-      // the cut union by a narrow dist filter instead of its own cut
-      reached = Materialize.cut(reached.unionByName(fresh))
-      frontier = reached.filter(col("dist") === d).select("node")
-    }
-    reached
+    iterate(maxDepth, Materialize.cut(bfsStart(seeds, perSeed = false)))(bfsRound(e, Nil))
+      .drop("fresh")
   }
 
   /** Frontier expansion until the frontier EMPTIES — full-reachability
-    * BFS at any graph eccentricity, no depth guess. Same per-round shape
-    * as [[bfsDistances]]; the stop probe is one filter+isEmpty on the
-    * just-materialized node-sized reached set (the frontier is a narrow
-    * filter of it — no extra shuffle, no edge scan). Returns
-    * (reached, roundsRun), where the LAST round is the first that added
-    * nothing — `b{roundsRun}` in [[bfsOracleCtes]] replays it exactly
-    * (that final round is a no-op union on both engines). Hitting
-    * `maxRounds` THROWS instead of returning distances that silently
-    * stop short of the reachable set.
+    * BFS at any graph eccentricity, no depth guess. The round of
+    * [[bfsDistances]], run by [[fixpoint]]. Returns (reached, roundsRun),
+    * where the LAST round is the first that added nothing — `b{roundsRun}`
+    * in [[bfsOracleCtes]] replays it exactly (that final round is a no-op
+    * union on both engines); an empty seed set runs 0 rounds.
     */
   def bfsDistancesConverged(edges: DataFrame, seeds: DataFrame,
                             maxRounds: Int = 64): (DataFrame, Int) = {
     require(maxRounds >= 1)
-    val e = Materialize.cut(edges)
-    var reached = Materialize.cut(
-      seeds.select(col("node").cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0)))
-    var frontier = reached.select("node")
-    var rounds = 0
-    while (!frontier.isEmpty) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"bfsDistancesConverged: frontier alive after $maxRounds rounds " +
-            "— raise maxRounds (graph eccentricity exceeds the backstop)")
-      val nbrs = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-      val fresh = nbrs.join(reached, Seq("node"), "left_anti")
-        .withColumn("dist", lit(rounds + 1))
-      reached = Materialize.cut(reached.unionByName(fresh))
-      rounds += 1
-      frontier = reached.filter(col("dist") === rounds).select("node")
-    }
-    (reached, rounds)
+    bfsConvergedBy("bfsDistancesConverged", edges, seeds, Nil, maxRounds, 1)
   }
 
   /** True when one more BFS round reaches nothing new — i.e. `maxDepth`
@@ -810,48 +761,24 @@ object Graph {
     * centrality (Eppstein & Wang 2001): K pivots' full distance vectors in
     * ONE frontier loop, state keyed (seed, node) so the K searches share
     * every edge scan instead of running K jobs. Returns ((seed, node,
-    * dist) for every reached pair, roundsRun) — rounds stop once a probe
-    * finds no seed's frontier grew, so the recorded R is the max pivot
-    * eccentricity rounded up to the probe cadence (trailing rounds are
-    * no-ops) and the oracle's unroll replays every seed — and the no-op
-    * tail — exactly.
+    * dist) for every reached pair, roundsRun) — the stop is consulted
+    * every `probeEvery` rounds ([[fixpoint]]'s cadence), so the recorded R
+    * is the max pivot eccentricity + 1 rounded up to the cadence (trailing
+    * rounds are no-ops) and the oracle's unroll replays every seed — and
+    * the no-op tail — exactly.
     *
     * Scale shape per round: one frontier-sized equi-join on `src` (the
     * only edge-table touch), one distinct and one anti-join keyed
     * (seed, node) — state is ≤ K·|V| rows, the knob being K = O(log n/ε²)
-    * for ±ε·diameter centrality error at ANY graph size. Hitting
-    * `maxRounds` THROWS rather than emitting truncated distance sums
-    * (a silently-short sum_dist would BIAS every estimate upward).
+    * for ±ε·diameter centrality error at ANY graph size. The backstop
+    * throws rather than emitting truncated distance sums (a silently-short
+    * sum_dist would BIAS every estimate upward).
     */
   def bfsPerSeedConverged(edges: DataFrame, seeds: DataFrame,
                           maxRounds: Int = 64,
                           probeEvery: Int = 4): (DataFrame, Int) = {
     require(maxRounds >= 1 && probeEvery >= 1)
-    val e = Materialize.cut(edges)
-    var reached = Materialize.cut(
-      seeds.select(col("node").cast("long").as("node")).distinct()
-        .select(col("node").as("seed"), col("node"), lit(0).as("dist")))
-    var frontier = reached.select("seed", "node")
-    var rounds = 0
-    // probe cadence: see [[ssspConverged]] (VERDICT r13 #6)
-    var done = frontier.isEmpty
-    while (!done) {
-      val nbrs = e.join(frontier, e("src") === frontier("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-      val fresh = nbrs.join(reached, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(rounds + 1))
-      reached = Materialize.cut(reached.unionByName(fresh))
-      rounds += 1
-      frontier = reached.filter(col("dist") === rounds).select("seed", "node")
-      if (rounds % probeEvery == 0 || rounds >= maxRounds) {
-        done = frontier.isEmpty
-        if (!done && rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"bfsPerSeedConverged: frontier alive after $maxRounds rounds " +
-              "— raise maxRounds (pivot eccentricity exceeds the backstop)")
-      }
-    }
-    (reached, rounds)
+    bfsConvergedBy("bfsPerSeedConverged", edges, seeds, Seq("seed"), maxRounds, probeEvery)
   }
 
   /** DuckDB unroll of [[bfsPerSeedConverged]]: `b0 .. b{maxDepth}` over
@@ -909,6 +836,19 @@ object Graph {
     (b0 +: iters).mkString(",\n")
   }
 
+  /** One truss round over canonical pairs (x, y): each edge's triangle
+    * support within the set, keeping the edges with support ≥ k−2.
+    */
+  private def trussRound(k: Int)(e: DataFrame): DataFrame = {
+    val sym = e.select(col("x").as("u"), col("y").as("v"))
+      .unionByName(e.select(col("y").as("u"), col("x").as("v")))
+    e.join(sym.as("s1"), col("x") === col("s1.u"))
+      .join(sym.as("s2"),
+        col("y") === col("s2.u") && col("s1.v") === col("s2.v"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("support"))
+      .filter(col("support") >= k - 2)
+  }
+
   /** K-TRUSS decomposition to convergence — EDGE-centric peeling (Cohen
     * 2008), a different algorithm class from [[kCore]]'s node peeling:
     * every surviving edge must close ≥ k−2 triangles WITHIN the surviving
@@ -923,48 +863,22 @@ object Graph {
     * wedges, the m^1.5-bounded shape of [[triangleCount]]), one map-side-
     * combined count keyed on the edge, one filter. Zero-support edges
     * leave via the inner join itself (support 0 < k−2 for every k ≥ 3,
-    * the identical rule on both engines). State is edge-sized and
-    * [[Materialize.cut] per round; the stop probe is one count. Returns
-    * ((x, y, support) of the stable truss, roundsRun) — the LAST round is
-    * the first that removed nothing, so the reported support values are
-    * the stable ones; hitting `maxRounds` THROWS rather than emitting a
-    * half-peeled edge set.
+    * the identical rule on both engines). State is edge-sized and cut per
+    * round; [[fixpoint]] stops at the first round whose observed
+    * surviving-edge count equals the previous one. Returns ((x, y,
+    * support) of the stable truss, roundsRun) — the LAST round is the
+    * first that removed nothing, so the reported support values are the
+    * stable ones.
     */
   def kTrussConverged(pairs: DataFrame, k: Int,
                       maxRounds: Int = 32): (DataFrame, Int) = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = Materialize.cut(
+    val start = observedCut(
       pairs.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
-        .filter(col("x") < col("y")).distinct())
-    var n = e.count()
-    var rounds = 0
-    var stable = false
-    var supported: DataFrame = null
-    while (!stable) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"kTrussConverged: still peeling after $maxRounds rounds " +
-            "— raise maxRounds (cascade depth exceeds the backstop)")
-      val sym = e.select(col("x").as("u"), col("y").as("v"))
-        .unionByName(e.select(col("y").as("u"), col("x").as("v")))
-      val sup = e
-        .join(sym.as("s1"), col("x") === col("s1.u"))
-        .join(sym.as("s2"),
-          col("y") === col("s2.u") && col("s1.v") === col("s2.v"))
-        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("support"))
-      // surviving-edge count rides the materialize action via observe()
-      // (r17, §1.2): no per-round count() job — identical value, same R
-      val obs = new org.apache.spark.sql.Observation(s"ktruss-n-$rounds")
-      supported = Materialize.cut(sup.filter(col("support") >= k - 2)
-        .observe(obs, count(lit(1)).as("n_edges")))
-      val m = Option(obs.get("n_edges"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      rounds += 1
-      if (m == n) stable = true
-      n = m
-      e = supported.select("x", "y")
-    }
-    (supported, rounds)
+        .filter(col("x") < col("y")).distinct())(nRows)
+    val (truss, r) = fixpoint("kTrussConverged", start, maxRounds)(
+      s => observedCut(trussRound(k)(s.df.select("x", "y")))(nRows))(sameCount)
+    (truss.df, r)
   }
 
   /** DuckDB unroll of [[kTrussConverged]]: `t0 .. t{rounds}` plus
@@ -1005,12 +919,12 @@ object Graph {
     * distances settle), a map-side-combined `min` keyed on the
     * destination, and a node-keyed full merge; all intermediates are
     * node-sized, distances are exact BIGINT sums (no float order), and
-    * per-round state is [[Materialize.cut]] so lineage stays flat. Rounds
-    * are bounded by the weighted-path hop diameter; hitting `maxRounds`
-    * THROWS instead of returning distances that silently stop short.
-    * Returns (dist over the seeds' reachable component, roundsRun) — the
-    * trailing rounds (at most the probe cadence) improve nothing, and the
-    * oracle's d{roundsRun} replays them as no-op merges.
+    * per-round state is [[Materialize.cut]] so lineage stays flat. The
+    * improved-node count is observed on every cut and consulted every
+    * `probeEvery` rounds ([[fixpoint]]'s cadence, VERDICT r13 #6). Returns
+    * (dist over the seeds' reachable component, roundsRun) — the trailing
+    * rounds (fewer than the cadence) improve nothing, and the oracle's
+    * d{roundsRun} replays them as no-op merges.
     */
   def ssspConverged(edges: DataFrame, seeds: DataFrame,
                     maxRounds: Int = 64,
@@ -1018,40 +932,22 @@ object Graph {
     require(maxRounds >= 1 && probeEvery >= 1)
     val e = Materialize.cut(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    var dist = Materialize.cut(
-      seeds.select(col("node").cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0L)))
-    var frontier = dist
-    var rounds = 0
-    // emptiness probed every `probeEvery` rounds (VERDICT r13 #6): skipped
-    // probes trade ≤ probeEvery−1 no-op rounds (empty-frontier relaxations —
-    // the joins see an empty side) for 4× fewer probe jobs; the recorded R
-    // counts executed rounds, so the oracle's unroll replays the no-ops too.
-    var done = frontier.isEmpty
-    while (!done) {
+    val nImproved = count_if(col("improved")).as("n_improved")
+    val start = observedCut(seeds.select(col("node").cast("long").as("node")).distinct()
+      .select(col("node"), lit(0L).as("dist"), lit(true).as("improved")))(nImproved)
+    val (dist, r) = fixpoint("ssspConverged", start, maxRounds, probeEvery) { s =>
+      val frontier = s.df.filter(col("improved"))
       val cand = e.join(frontier, e("src") === frontier("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d"))
         .groupBy("node").agg(min("d").as("d"))
-      val merged = Materialize.cut(
-        dist.join(cand, Seq("node"), "full")
-          .select(col("node"),
-            least(coalesce(col("dist"), lit(Long.MaxValue)),
-              coalesce(col("d"), lit(Long.MaxValue))).as("best"),
-            (col("d").isNotNull &&
-              (col("dist").isNull || col("d") < col("dist"))).as("improved")))
-      rounds += 1
-      frontier = merged.filter(col("improved"))
-        .select(col("node"), col("best").as("dist"))
-      dist = merged.select(col("node"), col("best").as("dist"))
-      if (rounds % probeEvery == 0 || rounds >= maxRounds) {
-        done = frontier.isEmpty
-        if (!done && rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"ssspConverged: distances still improving after $maxRounds rounds " +
-              "— raise maxRounds (weighted hop diameter exceeds the backstop)")
-      }
-    }
-    (dist, rounds)
+      observedCut(s.df.join(cand, Seq("node"), "full")
+        .select(col("node"),
+          least(coalesce(col("dist"), lit(Long.MaxValue)),
+            coalesce(col("d"), lit(Long.MaxValue))).as("dist"),
+          (col("d").isNotNull &&
+            (col("dist").isNull || col("d") < col("dist"))).as("improved")))(nImproved)
+    }((_, cur) => cur("n_improved") == 0)
+    (dist.df.drop("improved"), r)
   }
 
   /** DuckDB unroll of [[ssspConverged]] as FULL Bellman-Ford relaxation
@@ -1072,6 +968,32 @@ object Graph {
             GROUP BY node)"""
     }
     (d0 +: iters).mkString(",\n")
+  }
+
+  // -------------------------------------------------------- label propagation
+
+  /** Every node labeled with its own id; the two previous labelings
+    * (`old_label`, and `old2` after a round) start as the same labeling.
+    */
+  private def lpaStart(e: DataFrame): DataFrame =
+    Materialize.cut(e.select("src").distinct())
+      .select(col("src").as("node"), col("src").as("label"), col("src").as("old_label"))
+
+  /** One synchronous plurality round over (node, label, old_label): every
+    * node adopts its neighbors' plurality label (count ties to the
+    * smallest); the previous two labelings ride along as `old_label` and
+    * `old2`.
+    */
+  private def lpaRound(e: DataFrame)(labels: DataFrame): DataFrame = {
+    val best = e.join(labels, e("src") === labels("node"))
+      .groupBy(col("dst").as("node"), col("label"))
+      .agg(count(lit(1)).as("c"))
+      .groupBy("node")
+      .agg(max(struct(col("c"), (-col("label")).as("neg"))).as("m"))
+      .select(col("node"), (-col("m.neg")).as("new_label"))
+    labels.join(best, Seq("node"), "left")
+      .select(col("node"), col("old_label").as("old2"), col("label").as("old_label"),
+        coalesce(col("new_label"), col("label")).as("label"))
   }
 
   /** Synchronous LABEL PROPAGATION communities (Raghavan et al. 2007), the
@@ -1098,22 +1020,8 @@ object Graph {
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1)
     val e = Materialize.cut(edges)
-    val nodes = Materialize.cut(e.select("src").distinct())
-    var labels = nodes.select(col("src").as("node"), col("src").as("label"))
-    for (_ <- 1 to iterations) {
-      val counts = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val best = counts
-        .groupBy("node")
-        .agg(max(struct(col("c"), (-col("label")).as("neg"))).as("m"))
-        .select(col("node"), (-col("m.neg")).as("new_label"))
-      labels = Materialize.cut(
-        labels.join(best, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("new_label"), col("label")).as("label")))
-    }
-    labels.select(col("node"), col("label").as("community"))
+    iterate(iterations, lpaStart(e))(lpaRound(e))
+      .select(col("node"), col("label").as("community"))
   }
 
   /** Synchronous LPA run until the DYNAMICS STOP PRODUCING NEW STATES:
@@ -1121,10 +1029,10 @@ object Graph {
     * l_r = l_{r-2} (the period-2 oscillation sync LPA is known to enter
     * on bipartite structure — Raghavan et al. 2007 §3; once entered, the
     * labeling alternates between two states forever, so r is the first
-    * round after which no new labeling can appear). Both probes are
-    * node-sized reads of already-materialized state: the fixpoint check
-    * is a filter+isEmpty on the carried `old_label` column, the cycle
-    * check one node-keyed join run only on rounds that DID change.
+    * round after which no new labeling can appear). The state carries
+    * l_{r-1} and l_{r-2} as columns, so both checks are label-change counts
+    * observed on the round's own cut (at r = 1, l_{r-2} is taken as l_0,
+    * so the cycle count equals the fixpoint count).
     *
     * The stopping round R is a deterministic function of the data, so
     * the returned (labels, R) is exactly replayable: [[lpaOracleCtes]]
@@ -1137,47 +1045,11 @@ object Graph {
                                 maxRounds: Int = 64): (DataFrame, Int) = {
     require(maxRounds >= 1)
     val e = Materialize.cut(edges)
-    val nodes = Materialize.cut(e.select("src").distinct())
-    var labels = nodes.select(col("src").as("node"), col("src").as("label"))
-    var prev2: DataFrame = null // l_{r-2} while computing l_r
-    var rounds = 0
-    var done = false
-    while (!done) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"labelPropagationConverged: no fixpoint or 2-cycle within $maxRounds rounds")
-      val counts = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val best = counts
-        .groupBy("node")
-        .agg(max(struct(col("c"), (-col("label")).as("neg"))).as("m"))
-        .select(col("node"), (-col("m.neg")).as("new_label"))
-      // fixpoint probe rides the materialize action via observe() (r17,
-      // §1.2 — see connectedComponentsConverged): same detection value,
-      // same R, one fewer driver job per round. The period-2 cycle check
-      // below stays its own node-sized job — it only runs on rounds that
-      // DID change, and it compares against prev2, which is not part of
-      // this materialization.
-      val obs = new org.apache.spark.sql.Observation(s"lpa-changed-$rounds")
-      val next = Materialize.cut(
-        labels.join(best, Seq("node"), "left")
-          .select(col("node"), col("label").as("old_label"),
-            coalesce(col("new_label"), col("label")).as("label"))
-          .observe(obs,
-            sum(when(col("label") =!= col("old_label"), 1L).otherwise(0L))
-              .as("n_changed")))
-      rounds += 1
-      if (Option(obs.get("n_changed"))
-            .map(_.asInstanceOf[Long]).getOrElse(0L) == 0L) done = true
-      else if (prev2 != null &&
-        next.select("node", "label")
-          .join(prev2.withColumnRenamed("label", "label2"), "node")
-          .filter(col("label") =!= col("label2")).isEmpty) done = true
-      prev2 = labels.select("node", "label")
-      labels = next.select("node", "label")
-    }
-    (labels.select(col("node"), col("label").as("community")), rounds)
+    val (labels, r) = fixpoint("labelPropagationConverged", Cut(lpaStart(e)), maxRounds)(
+      s => observedCut(lpaRound(e)(s.df))(
+        nChanged, count_if(col("label") =!= col("old2")).as("n_cycle")))(
+      (prev, cur) => prev.nonEmpty && (cur("n_changed") == 0 || cur("n_cycle") == 0))
+    (labels.df.select(col("node"), col("label").as("community")), r)
   }
 
   /** DuckDB unroll of [[labelPropagation]] — plurality via a count-desc,

@@ -40,9 +40,11 @@ object Materialize {
     * million-digit multiplication. Left/outer joins aggregate side sizes
     * instead of multiplying and grow linearly (the connected-components
     * shape). Reference the growing state at most once per round inside
-    * the next state's lineage; run any state-vs-state comparison (e.g. a
-    * convergence residual) as a separate, discarded query over the two
-    * already-cut frames — see [[Graph.pageRankConverged]].
+    * the next state's lineage, or cut with [[cutFresh]] when a round must
+    * reference it twice. A state-vs-state comparison (e.g. a convergence
+    * residual) needs no second query: carry the previous value as a column
+    * of the state and observe the comparison on the cut's own action —
+    * see [[Graph.pageRankConverged]].
     */
   def cut(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)

@@ -611,4 +611,88 @@ class GraphSpec extends SparkSpec {
       .orderBy("seed", "node").collect().toSeq
     assert(a === b)
   }
+
+  // ---- one convergence driver: backstop and job-count contracts
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def pendantPath(n: Int): DataFrame = // triangle {1,2,3}, n-edge path off 3
+    edges(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 100L)) ++
+      (0 until n).map(i => (100L + i, 101L + i)): _*)
+
+  test("backstop matrix: every converged loop throws at maxRounds = R-1 and matches its default at R") {
+    val prGraph = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L), (3L, 6L))
+    val lpaGraph = edges((1L, 2L), (1L, 3L), (2L, 3L), (4L, 2L), (4L, 3L))
+    val truss = cPairs((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
+    // the cadence-4 loops need fixtures whose first quiet round is a
+    // multiple of 4 (here R = 4): R − 1 is then a forced, failing probe
+    val sssp = wEdges((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L))
+    // each row: the loop run at its default backstop (None) or at Some(m)
+    val loops: Seq[(String, Option[Int] => (DataFrame, Int))] = Seq(
+      "pageRankConverged tol 1e7" -> (m =>
+        m.fold(Graph.pageRankConverged(prGraph))(b => Graph.pageRankConverged(prGraph, maxRounds = b))),
+      "pageRankConverged tol 2e7" -> (m => m.fold(Graph.pageRankConverged(prGraph, 20000000L))(
+        Graph.pageRankConverged(prGraph, 20000000L, _))),
+      "connectedComponentsConverged" -> (m => m.fold(
+        Graph.connectedComponentsConverged(chainEdges(6)))(
+        Graph.connectedComponentsConverged(chainEdges(6), _))),
+      "connectedComponentsAlternating" -> (m => m.fold(
+        Graph.connectedComponentsAlternating(chainEdges(41)))(
+        Graph.connectedComponentsAlternating(chainEdges(41), _))),
+      "kCoreConvergedRun" -> (m => m.fold(Graph.kCoreConvergedRun(pendantPath(4), k = 2))(
+        Graph.kCoreConvergedRun(pendantPath(4), 2, _))),
+      "bfsDistancesConverged" -> (m => m.fold(
+        Graph.bfsDistancesConverged(chainEdges(6), seed(1L)))(
+        Graph.bfsDistancesConverged(chainEdges(6), seed(1L), _))),
+      "bfsPerSeedConverged" -> (m => m.fold(
+        Graph.bfsPerSeedConverged(chainEdges(4), seed(1L)))(
+        Graph.bfsPerSeedConverged(chainEdges(4), seed(1L), _))),
+      "kTrussConverged" -> (m => m.fold(Graph.kTrussConverged(truss, k = 4))(
+        Graph.kTrussConverged(truss, 4, _))),
+      "ssspConverged" -> (m => m.fold(Graph.ssspConverged(sssp, seed(1L)))(
+        Graph.ssspConverged(sssp, seed(1L), _))),
+      "labelPropagationConverged" -> (m => m.fold(
+        Graph.labelPropagationConverged(lpaGraph))(
+        Graph.labelPropagationConverged(lpaGraph, _))))
+    val rs = loops.map { case (name, run) =>
+      withClue(s"$name: ") {
+        val (want, r) = run(None)
+        assert(r >= 2, s"fixture must need at least 2 rounds, got $r")
+        assertThrows[IllegalStateException](run(Some(r - 1)))
+        val (got, rAtBound) = run(Some(r))
+        assert(rAtBound === r)
+        assert(sortedRows(got) === sortedRows(want))
+        name -> r
+      }
+    }.toMap
+    // the two PageRank rows stop on opposite halves of a 2-round batch
+    assert(rs("pageRankConverged tol 1e7") % 2 != rs("pageRankConverged tol 2e7") % 2, rs)
+    assert(rs("bfsPerSeedConverged") === 4 && rs("ssspConverged") === 4, rs)
+  }
+
+  test("converged CC, k-core and BFS start no more Spark jobs per round than their fixed forms") {
+    // per-round cost = job-count difference between two fixture sizes over
+    // their round-count difference; the fixed form runs the same R rounds
+    val loops: Seq[(String, Int => DataFrame, DataFrame => Int, (DataFrame, Int) => Unit)] = Seq(
+      ("connectedComponents", chainEdges,
+        g => Graph.connectedComponentsConverged(g)._2,
+        (g, r) => Graph.connectedComponents(g, r)),
+      ("kCore", pendantPath,
+        g => Graph.kCoreConvergedRun(g, k = 2)._2,
+        (g, r) => Graph.kCore(g, 2, r)),
+      ("bfsDistances", chainEdges,
+        g => Graph.bfsDistancesConverged(g, seed(1L))._2,
+        (g, r) => Graph.bfsDistances(g, seed(1L), r)))
+    for ((name, fixture, converged, fixed) <- loops) {
+      val Seq((r1, c1, f1), (r2, c2, f2)) = Seq(4, 8).map { n =>
+        val g = fixture(n)
+        var r = 0
+        val c = jobsStartedBy { r = converged(g) }
+        (r, c, jobsStartedBy(fixed(g, r)))
+      }
+      assert(r2 > r1, s"$name: fixtures must differ in rounds ($r1, $r2)")
+      assert(c2 - c1 <= f2 - f1,
+        s"$name: converged ${c2 - c1} vs fixed ${f2 - f1} jobs over ${r2 - r1} rounds")
+    }
+  }
 }
