@@ -105,28 +105,34 @@ private[graft] object VersionedStore {
 
   /** Delete the version dirs the pointer no longer references — the
     * garbage of replaces, compaction folds and crashed commits — and
-    * return how many were removed. Safe against the (serial) writer:
-    *   - an in-flight commit writes under its dot-prefixed staging name,
-    *     which the `v<N>` filter never matches;
-    *   - a commit between its rename and its pointer swap occupies exactly
-    *     max+1 (numbers derive from the pointer), so no version above the
-    *     max committed one is deleted; a crashed commit's orphan there is
-    *     clobbered by the replay, or reclaimed once later commits pass it;
-    *   - the pointer is re-read before each delete, so a dir committed
-    *     since candidate selection is spared.
+    * return how many were removed ([[sweep]] over the committed list).
     * Call only when no reader can still hold an OLD pointer (after a
     * maintenance window).
     */
-  def vacuum(path: String): Int = {
-    val committed = committedVersions(path).toSet
-    val maxCommitted = committed.filter(_.matches("v\\d+"))
+  def vacuum(path: String): Int = sweep(path)(committedVersions(path).toSet)
+
+  /** The one version sweep under every vacuum (this store's, the warehouse
+    * snapshots' and the manifested tables' manifest versions): delete the
+    * `v<N>` dirs under `dir` that the `live` set neither names nor lies
+    * below, and return how many were removed. Safe against the store's
+    * (serial) writer:
+    *   - an in-flight commit writes under a name the `v<N>` filter never
+    *     matches (a dot-prefixed staging dir), or at a number above the
+    *     highest live version, which is never deleted; a crashed commit's
+    *     orphan there is clobbered by the replay, or reclaimed once later
+    *     commits pass it;
+    *   - `live` is re-read before each delete, so a dir that became live
+    *     since candidate selection is spared.
+    */
+  def sweep(dir: String)(live: => Set[String]): Int = {
+    val first = live
+    val maxLive = first.filter(_.matches("v\\d+"))
       .map(_.drop(1).toLong).maxOption.getOrElse(0L)
-    val junk = AtomicPointer.listDirNames(path)
-      .filter(n => n.matches("v\\d+") && !committed.contains(n) &&
-        n.drop(1).toLong <= maxCommitted)
+    val junk = AtomicPointer.listDirNames(dir)
+      .filter(n => n.matches("v\\d+") && !first.contains(n) &&
+        n.drop(1).toLong <= maxLive)
     junk.count { name =>
-      !committedVersions(path).contains(name) &&
-        AtomicPointer.deleteDir(s"$path/$name")
+      !live.contains(name) && AtomicPointer.deleteDir(s"$dir/$name")
     }
   }
 }

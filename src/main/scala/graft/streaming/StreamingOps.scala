@@ -176,81 +176,43 @@ object StreamingOps {
     * pair lands exactly once; the e26 cohort rollup is one |days|-keyed
     * aggregate over the store plus the signup log). The store is
     * DAY-PARTITIONED on the purchase date (`conv_day=`, the event-log
-    * layout): batch readers prune at listing time, the recovery anti-join
-    * prunes to the straddling batch's own days, and `compactEvery` can
+    * layout): batch readers prune at listing time, and `compactEvery` can
     * fold accrued per-batch small files through the warehouse's
     * crash-safe per-partition swap — without a partition layout a
     * long-lived stream accrues one file set per batch forever (the
     * VERDICT r8 #1 disease class).
     *
-    * Replay safety is the engine-standard [[ReplayGuard]] protocol:
-    * steady-state batches append with NO scan of the store; a replayed
-    * fully-committed batch (crash between the mark write and Spark's
-    * commit) is skipped outright; only the one batch that can straddle a
-    * crash (first delivery after restart) pays a defensive anti-join on
-    * the (signup_id, purchase_id) pair key — the join's output key,
-    * unique by the event-id contract — PRUNED to the batch's own days.
-    * Both crash windows are fault-injected in StreamingSpec.
+    * Replay safety is the [[guardedSink]] protocol; the recovery
+    * anti-join ([[unstoredRows]]) runs on the (signup_id, purchase_id)
+    * pair key — the join's output key, unique by the event-id contract.
+    * The upstream join is STATEFUL: its state stores only commit when the
+    * batch plan runs over every partition, and Spark 4 validates exactly
+    * that — so a skipped batch still drains, and so does a batch with
+    * nothing to append. Both crash windows are fault-injected in
+    * StreamingSpec.
     */
   def ingestConversionPairsStream(signups: DataFrame, purchases: DataFrame,
                                   storePath: String, checkpoint: String,
                                   horizon: String = "7 days",
                                   compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock() // one writer per sink — checked, not assumed
     val joined = conversionPairsStream(signups, purchases, horizon)
       .withColumn("pair_key",
         concat_ws(":", col("signup_id"), col("purchase_id")))
       .withColumn("conv_day", to_date(col("purchase_ts")))
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip =>
-          // the upstream join is STATEFUL: its state stores only commit
-          // when the batch plan runs over every partition, and Spark 4
-          // validates exactly that — so a skipped sink write must still
-          // drain the batch (unlike the stateless-source maintainers)
-          batch.foreach(_ => ())
-        case p =>
-          val spark = batch.sparkSession
-          // guard files live under storePath — "dir exists" is not "store
-          // has data"; look for partition directories (first post-start
-          // delivery is ALWAYS Recover posture)
-          val storeHasData = {
-            val hp = new org.apache.hadoop.fs.Path(storePath)
-            val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fs.exists(hp) &&
-              fs.listStatus(hp).exists(_.getPath.getName.startsWith("conv_day="))
-          }
-          val batchP = batch.persist()
-          try {
-            val rows =
-              if (p == Recover && storeHasData) {
-                // recovery anti-join bounded to the batch's OWN days
-                val days = batchP.select("conv_day").distinct()
-                  .collect().map(_.getDate(0))
-                if (days.isEmpty) batchP.limit(0)
-                else batchP.join(
-                  spark.read.parquet(storePath)
-                    .filter(col("conv_day").isin(days.toSeq: _*))
-                    .select("pair_key"),
-                  Seq("pair_key"), "left_anti")
-              } else batchP
-            // full count, not isEmpty: limit(1) would leave join-state
-            // partitions unprocessed (the same Spark 4 commit validation)
-            if (rows.count() > 0)
-              rows.hint("rebalance", col("conv_day"))
-                .write.mode("append").partitionBy("conv_day").parquet(storePath)
-            else batchP.foreach(_ => ()) // drain for the state-store commit
-            guard.commit(batchId)
-            if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-              graft.warehouse.ParquetWarehouse
-                .compactPartitioned(spark, storePath, Seq("conv_day"))
-          } finally { batchP.unpersist(); () }
-      }
-    joined.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
+    guardedSink(joined, storePath, checkpoint, compactEvery,
+      graft.warehouse.ParquetWarehouse.compactPartitioned(_, storePath, Seq("conv_day")),
+      drainSkipped = true) { (batch, _, recover) =>
+      val batchP = batch.persist()
+      try {
+        val rows = unstoredRows(batchP, storePath, "conv_day", "pair_key", recover)
+        // full count, not isEmpty: limit(1) would leave join-state
+        // partitions unprocessed (the same Spark 4 commit validation)
+        if (rows.count() > 0)
+          rows.hint("rebalance", col("conv_day"))
+            .write.mode("append").partitionBy("conv_day").parquet(storePath)
+        else batchP.foreach(_ => ()) // drain for the state-store commit
+      } finally { batchP.unpersist(); () }
+    }
   }
 
   /** Streaming corpus filter: the STATELESS half of the curation pipeline
@@ -410,6 +372,49 @@ object StreamingOps {
     }
   }
 
+  /** The one replay-guarded foreachBatch sink under every guarded
+    * maintainer — the guard contract, stated once:
+    *   - before the query starts, a [[ReplayGuard]] beside `sink` takes the
+    *     writer lease for `checkpoint` ([[ReplayGuard.acquireLock]]): a sink
+    *     that another live checkpoint holds throws, and no query starts;
+    *   - a `Skip` batch (a fully-committed replay) costs O(1) and does
+    *     nothing — unless `drainSkipped`, for a stateful upstream whose
+    *     state stores commit only when the batch plan runs;
+    *   - otherwise `write(batch, batchId, recover)` lands the batch.
+    *     `recover` marks the one delivery that can straddle a crash (the
+    *     first after a restart): its write must be idempotent against what
+    *     the crashed attempt committed. Every later delivery is guaranteed
+    *     unseen and appends with NO store scan (Round8OpsSpec and
+    *     StreamingSpec pin the vector and deduped plans);
+    *   - the high-water mark commits after the write; then `compactEvery`
+    *     > 0 runs `compact` every that-many batches, AFTER the mark, so a
+    *     crash mid-fold loses only the fold (retried at the next trigger),
+    *     never ingest progress or answers.
+    * The crash windows (before the mark, and between the mark and Spark's
+    * own commit) are fault-injected in StreamingSpec.
+    */
+  private def guardedSink(input: DataFrame, sink: String, checkpoint: String,
+                          compactEvery: Int = 0,
+                          compact: SparkSession => Unit = _ => (),
+                          drainSkipped: Boolean = false)
+                         (write: (DataFrame, Long, Boolean) => Unit): StreamingQuery = {
+    val guard = new ReplayGuard(sink, checkpoint)
+    guard.acquireLock()
+    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
+      guard.posture(batchId) match {
+        case Skip => if (drainSkipped) batch.foreach(_ => ())
+        case p =>
+          write(batch, batchId, p == Recover)
+          guard.commit(batchId)
+          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+            compact(batch.sparkSession)
+      }
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+      .start()
+  }
+
   /** Continuous corpus ingestion with INCREMENTAL NEAR-DUP DEDUP — the
     * end-to-end production shape of a training-data pipeline: each
     * micro-batch of documents (e.g. from [[jsonlDocumentStream]], or
@@ -424,16 +429,11 @@ object StreamingOps {
     * corpus is fine). ALL cross-batch state lives in the persisted index;
     * Spark-side state is only the source's file-tracking log.
     *
-    * REPLAY SAFETY (foreachBatch is at-least-once): a [[ReplayGuard]]
-    * high-water mark beside the index makes the guard O(1) per micro-batch
-    * (VERDICT r7 #1) — a replayed fully-committed batch is skipped; the one
-    * batch that can straddle a crash (first delivery after restart) runs
-    * the corpus append key-idempotent
+    * REPLAY SAFETY is the [[guardedSink]] protocol on the index: the
+    * recovery delivery runs the corpus append key-idempotent
     * ([[graft.warehouse.ParquetWarehouse.appendIdempotent]]) and relies on
-    * dedupAgainstIndex dropping already-indexed survivors; every later
-    * batch appends WITHOUT scanning the corpus (Round8OpsSpec asserts the
-    * steady-state append plans no corpus scan). The index's two tables
-    * commit ATOMICALLY (one versioned dir + pointer swap,
+    * dedupAgainstIndex dropping already-indexed survivors. The index's two
+    * tables commit ATOMICALLY (one versioned dir + pointer swap,
     * [[graft.llm.Dedup.writeCorpusIndex]]), so the r7 half-indexed-batch
     * window is closed.
     *
@@ -444,80 +444,48 @@ object StreamingOps {
     * sequentially (StreamingSpec asserts it, including the replay window).
     *
     * `compactEvery` > 0 folds the index's accumulated per-batch version
-    * dirs ([[graft.llm.Dedup.compactCorpusIndex]]) every that-many
-    * micro-batches — the versioned commit otherwise accrues one small dir
-    * per batch forever. Compaction is itself an atomic pointer swap and
-    * runs AFTER the batch's high-water mark commits, so a crash mid-fold
-    * loses only the fold (retried at the next trigger), never ingest
-    * progress or answers.
+    * dirs ([[graft.llm.Dedup.compactCorpusIndex]]) — the versioned commit
+    * otherwise accrues one small dir per batch forever.
     */
   def ingestDedupedStream(docs: DataFrame, indexPath: String, corpusPath: String,
                           checkpoint: String, threshold: Double = 0.8,
                           shingleN: Int = 3,
-                          compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(indexPath, checkpoint)
-    guard.acquireLock() // one writer per sink — checked, not assumed (r8 #6)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => guard.posture(batchId) match {
-      case Skip => ()
-      case p =>
-        // within-batch key hygiene (ADVICE r8): the Fresh fast path appends
-        // without any store scan, so an upstream batch violating the
-        // unique-doc_id contract would land duplicate keys in the corpus —
-        // dedup the batch's own keys here (a shuffle of the BATCH only;
-        // cross-batch re-sends remain the documented contract)
-        val survivors = graft.llm.Dedup
-          .dedupAgainstIndex(batch.dropDuplicates("doc_id"), indexPath, threshold, shingleN)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (survivors.count() > 0) {
-            if (p == Recover)
-              graft.warehouse.ParquetWarehouse
-                .appendIdempotent(survivors, corpusPath, "doc_id")
-            else survivors.write.mode("append").parquet(corpusPath)
-            graft.llm.Dedup.appendToCorpusIndex(survivors, indexPath, shingleN)
-          }
-          guard.commit(batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.llm.Dedup.compactCorpusIndex(batch.sparkSession, indexPath)
-        } finally { survivors.unpersist(); () }
+                          compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
+    guardedSink(docs, indexPath, checkpoint, compactEvery,
+      graft.llm.Dedup.compactCorpusIndex(_, indexPath)) { (batch, _, recover) =>
+      // within-batch key hygiene (ADVICE r8): the Fresh fast path appends
+      // without any store scan, so an upstream batch violating the
+      // unique-doc_id contract would land duplicate keys in the corpus —
+      // dedup the batch's own keys here (a shuffle of the BATCH only;
+      // cross-batch re-sends remain the documented contract)
+      val survivors = graft.llm.Dedup
+        .dedupAgainstIndex(batch.dropDuplicates("doc_id"), indexPath, threshold, shingleN)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (survivors.count() > 0) {
+          if (recover)
+            graft.warehouse.ParquetWarehouse
+              .appendIdempotent(survivors, corpusPath, "doc_id")
+          else survivors.write.mode("append").parquet(corpusPath)
+          graft.llm.Dedup.appendToCorpusIndex(survivors, indexPath, shingleN)
+        }
+      } finally { survivors.unpersist(); () }
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
 
-  /** The replay-guarded append every versioned-store maintainer shares:
-    * the [[ReplayGuard]] high-water mark skips fully-committed replays in
-    * O(1); the one batch that can straddle a crash (the first delivery
-    * after restart) appends only if the store has not already committed
-    * its `batch-<id>` tag ([[graft.store.VersionedStore.hasTag]]); the
-    * mark commits after the append; and `compactEvery` > 0 then runs
-    * `compact` every that-many batches, AFTER the mark (a crash mid-fold
-    * loses only the fold, never ingest progress).
+  /** The [[guardedSink]] write every versioned-store maintainer shares:
+    * the recovery delivery appends only if the store has not already
+    * committed its `batch-<id>` tag ([[graft.store.VersionedStore.hasTag]]).
     */
   private def taggedAppendStream(input: DataFrame, storePath: String, checkpoint: String,
                                  append: (DataFrame, String) => Unit,
                                  compact: SparkSession => Unit = _ => (),
-                                 compactEvery: Int = 0): StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          if (!(p == Recover && graft.store.VersionedStore.hasTag(storePath, tag)))
-            append(batch, tag)
-          guard.commit(batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            compact(batch.sparkSession)
-      }
-    input.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+                                 compactEvery: Int = 0): StreamingQuery =
+    guardedSink(input, storePath, checkpoint, compactEvery, compact) {
+      (batch, batchId, recover) =>
+        val tag = s"batch-$batchId"
+        if (!(recover && graft.store.VersionedStore.hasTag(storePath, tag)))
+          append(batch, tag)
+    }
 
   /** Continuous DSIR-model maintenance: each micro-batch's bucket
     * histogram ([[graft.llm.TextAnalysis.dsirBucketCounts]] — a
@@ -532,14 +500,10 @@ object StreamingOps {
     *
     * REPLAY SAFETY: additive state is the one sink where at-least-once
     * delivery is NOT repairable downstream — a double-appended histogram
-    * double-counts and no read-side dedup can tell. So beyond the
-    * [[ReplayGuard]] high-water mark (O(1) skip of fully-committed
-    * replays), each version commits ATOMICALLY with a batch tag, and the
-    * one batch that can straddle a crash (the first delivery after
-    * restart) is checked against [[graft.operators.CountStore.hasTag]]
-    * before appending — already-appended ⇒ only the mark is (re)committed.
-    * `compactEvery` > 0 folds the version list every that-many batches,
-    * AFTER the mark commits (a crash mid-fold loses only the fold).
+    * double-counts and no read-side dedup can tell. So each version
+    * commits ATOMICALLY with a batch tag, which the recovery delivery
+    * checks before appending ([[taggedAppendStream]]).
+    * `compactEvery` > 0 folds the version list.
     */
   def ingestDsirCountsStream(docs: DataFrame, storePath: String,
                              checkpoint: String, buckets: Int = 1024,
@@ -555,13 +519,10 @@ object StreamingOps {
     * to a |keys|·|cent-buckets| histogram version, and percentile serves
     * ([[graft.operators.QuantileStore.serve]]) read ONLY the merged
     * histogram — the event stream is scanned once at ingest and never
-    * again. Replay safety is the additive-state discipline: the
-    * [[ReplayGuard]] high-water mark skips fully-committed replays O(1),
-    * and the one batch that can straddle a crash is checked against the
-    * store's committed batch TAG before appending (a double-appended
-    * histogram shifts every percentile and no read-side dedup could
-    * tell). `compactEvery` > 0 folds the version list every that-many
-    * batches, AFTER the mark commits.
+    * again. Replay safety is the additive-state discipline of
+    * [[taggedAppendStream]] (a double-appended histogram shifts every
+    * percentile and no read-side dedup could tell). `compactEvery` > 0
+    * folds the version list.
     */
   def ingestQuantilesStream(rows: DataFrame, storePath: String,
                             checkpoint: String, keyCol: String,
@@ -577,12 +538,9 @@ object StreamingOps {
     * (bucket, term)-sorted version of the [[graft.llm.Search]] store, and
     * keyword queries serve from the committed versions (additive tf merge)
     * with NO corpus rescan, seeing each batch as soon as its pointer swap
-    * lands. Same replay posture as every additive store: the ReplayGuard
-    * high-water mark skips fully-committed replays O(1), and the one batch
-    * that can straddle a crash (first delivery after restart) is checked
-    * against the store's committed batch TAG before appending — a
-    * double-appended posting would double tf and no read-side dedup could
-    * tell (both crash windows fault-injected in StreamingSpec).
+    * lands. Same tagged replay posture as every additive store
+    * ([[taggedAppendStream]]) — a double-appended posting would double tf
+    * and no read-side dedup could tell.
     */
   def ingestPostingsStream(docs: DataFrame, indexPath: String, checkpoint: String,
                            buckets: Int = graft.llm.Search.DefaultBuckets)
@@ -594,7 +552,7 @@ object StreamingOps {
     * scale layout #6 (t34/t35): each micro-batch appends through
     * [[graft.warehouse.ParquetWarehouse.appendManifested]], so point
     * probes serve each batch the instant its pointer swap lands, planning
-    * O(1) files with no listing. Replay posture is the engine-standard
+    * O(1) files with no listing. Replay posture is the [[guardedSink]]
     * protocol, with one structural simplification: the manifest POINTER
     * is itself the atomic commit record, so the batch tag rides the
     * pointer (one rename commits data visibility AND the tag together —
@@ -613,27 +571,16 @@ object StreamingOps {
   def ingestManifestedStream(rows: DataFrame, storePath: String,
                              keyCol: String, checkpoint: String,
                              files: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock()
-    val step: (DataFrame, Long) => Unit = (batch, batchId) =>
-      guard.posture(batchId) match {
-        case Skip => ()
-        case p =>
-          val tag = s"batch-$batchId"
-          val alreadyCommitted = p == Recover &&
-            graft.warehouse.ParquetWarehouse.manifestCommitTag(storePath)
-              .contains(tag)
-          if (!alreadyCommitted && !batch.isEmpty)
-            graft.warehouse.ParquetWarehouse.appendManifested(
-              batch, storePath, keyCol, files, tag = Some(tag))
-          guard.commit(batchId)
-      }
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    guardedSink(rows, storePath, checkpoint) { (batch, batchId, recover) =>
+      val tag = s"batch-$batchId"
+      val alreadyCommitted = recover &&
+        graft.warehouse.ParquetWarehouse.manifestCommitTag(storePath)
+          .contains(tag)
+      if (!alreadyCommitted && !batch.isEmpty)
+        graft.warehouse.ParquetWarehouse.appendManifested(
+          batch, storePath, keyCol, files, tag = Some(tag))
+    }
 
   /** Continuous RANKED-index maintenance — [[ingestPostingsStream]]'s twin
     * for the BM25 store (x48's versioned protocol driven by a stream):
@@ -641,10 +588,9 @@ object StreamingOps {
     * its exact-integer stats sidecar, and ranked serves
     * ([[graft.llm.Search.searchRankedIndexed]]) see the batch as soon as
     * its pointer swap lands — idf/avgdl move with every commit because the
-    * per-version stats merge additively at query time. Same replay posture
-    * as the conjunctive maintainer: O(1) mark skip + committed-TAG check
-    * on the one straddling batch (a double-append would inflate BOTH tf
-    * and the corpus stats — doubly unrepairable downstream).
+    * per-version stats merge additively at query time. Same tagged replay
+    * posture as the conjunctive maintainer (a double-append would inflate
+    * BOTH tf and the corpus stats — doubly unrepairable downstream).
     */
   def ingestRankedPostingsStream(docs: DataFrame, indexPath: String, checkpoint: String,
                                  buckets: Int = graft.llm.Search.DefaultBuckets)
@@ -662,10 +608,10 @@ object StreamingOps {
     * batch's users as soon as it commits. Replay posture: HLL union is
     * idempotent — re-appending a deterministic re-sketch of the SAME rows
     * cannot inflate any estimate (spec-proved) — so unlike the additive
-    * count store, correctness does not hinge on the guard; the ReplayGuard
-    * + TAG protocol still skips replays to bound version growth and to
-    * defend the one real risk, a source whose replayed batch differs from
-    * the original delivery. `compactEvery` folds versions so the read-side
+    * count store, correctness does not hinge on the guard; the tagged
+    * protocol still skips replays to bound version growth and to defend
+    * the one real risk, a source whose replayed batch differs from the
+    * original delivery. `compactEvery` folds versions so the read-side
     * union stays bounded on a long-lived stream.
     */
   def ingestDailySketchStream(events: DataFrame, storePath: String,
@@ -739,61 +685,42 @@ object StreamingOps {
     * per-batch work is the narrow fused build scan plus one by-cell
     * clustering exchange — no corpus re-scan, ever.
     *
-    * REPLAY SAFETY (foreachBatch is at-least-once): a [[ReplayGuard]]
-    * high-water mark beside the index replaces the r7 per-batch anti-join
-    * over the store's ENTIRE vec_id column (O(index) per micro-batch,
-    * forever) with an O(1) check — a replayed fully-committed batch is
-    * skipped; only the first delivery after a restart (the one batch that
-    * can straddle a crash) pays the defensive anti-join; steady-state
-    * batches append with NO scan of the vectors table (Round8OpsSpec
-    * asserts the plan). A duplicated vector would silently occupy two of
-    * the k ranks at query time, hence the recovery guard. Requires
+    * REPLAY SAFETY is the [[guardedSink]] protocol, which replaces the r7
+    * per-batch anti-join over the store's ENTIRE vec_id column (O(index)
+    * per micro-batch, forever): only the recovery delivery anti-joins
+    * ([[ingestVectorRows]]). A duplicated vector would silently occupy two
+    * of the k ranks at query time, hence that recovery guard. Requires
     * corpus-unique vec_ids, the same key contract every dedup-by-id
     * operator in the engine relies on (within-batch duplicates are
     * dropped here — ADVICE r8 — so only cross-batch re-sends can violate
     * it).
     *
     * `compactEvery` > 0 folds each cell directory's accumulated per-batch
-    * small files ([[graft.llm.Similarity.compactIvfIndex]]) every
-    * that-many micro-batches — without it a long-lived stream accrues
-    * `batches × cells` files forever, and at 100 TB the footer/listing
-    * overhead comes to dominate the probe-pruned scan that is the whole
-    * point of the cell layout (VERDICT r8 #1; the same disease
-    * compactEvery cures on the dedup index). Compaction runs AFTER the
-    * batch's high-water mark commits, so a crash mid-fold loses only the
-    * fold (retried at the next trigger), never ingest progress; served
-    * answers are unchanged (per-partition atomic swap, Round9OpsSpec).
+    * small files ([[graft.llm.Similarity.compactIvfIndex]]) — without it a
+    * long-lived stream accrues `batches × cells` files forever, and at
+    * 100 TB the footer/listing overhead comes to dominate the probe-pruned
+    * scan that is the whole point of the cell layout (VERDICT r8 #1).
+    * Served answers are unchanged by a fold (per-partition atomic swap,
+    * Round9OpsSpec).
     */
   def ingestVectorsStream(embeddings: DataFrame, indexPath: String,
                           checkpoint: String,
                           compactEvery: Int = 0,
-                          metaCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(indexPath, checkpoint)
-    guard.acquireLock() // one writer per sink — checked, not assumed (r8 #6)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => guard.posture(batchId) match {
-      case Skip => ()
-      case p =>
-        val rows = ingestVectorRows(batch.dropDuplicates("vec_id"), indexPath,
-          recover = p == Recover)
-        // metaCols MUST match the store's build-time set — a maintainer
-        // not told about them would strand a null-filled generation that
-        // filtered serves silently drop; appendToIvfIndex's column
-        // contract fails THIS batch loudly instead (spec-pinned)
-        if (!rows.isEmpty)
-          graft.llm.Similarity.appendToIvfIndex(rows, indexPath, metaCols = metaCols)
-        guard.commit(batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.llm.Similarity.compactIvfIndex(batch.sparkSession, indexPath)
+                          metaCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
+    guardedSink(embeddings, indexPath, checkpoint, compactEvery,
+      graft.llm.Similarity.compactIvfIndex(_, indexPath)) { (batch, _, recover) =>
+      val rows = ingestVectorRows(batch.dropDuplicates("vec_id"), indexPath, recover)
+      // metaCols MUST match the store's build-time set — a maintainer
+      // not told about them would strand a null-filled generation that
+      // filtered serves silently drop; appendToIvfIndex's column
+      // contract fails THIS batch loudly instead (spec-pinned)
+      if (!rows.isEmpty)
+        graft.llm.Similarity.appendToIvfIndex(rows, indexPath, metaCols = metaCols)
     }
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
 
   /** [[ingestVectorsStream]] for a persisted MIPS index
-    * ([[graft.llm.Similarity.writeMipsIndex]]): identical ReplayGuard
-    * protocol and recovery anti-join, with ONE extra contract —
+    * ([[graft.llm.Similarity.writeMipsIndex]]): identical guarded sink and
+    * recovery anti-join, with ONE extra contract —
     * [[graft.llm.Similarity.appendToMipsIndex]] verifies each batch's max
     * squared norm against the index's frozen M² anchor and FAILS the
     * query rather than landing a longer vector in the wrong cell
@@ -803,22 +730,11 @@ object StreamingOps {
     * degrading ranking quality forever after.
     */
   def ingestMipsVectorsStream(embeddings: DataFrame, indexPath: String,
-                              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(indexPath, checkpoint)
-    guard.acquireLock() // one writer per sink — checked, not assumed
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => guard.posture(batchId) match {
-      case Skip => ()
-      case p =>
-        val rows = ingestVectorRows(batch.dropDuplicates("vec_id"), indexPath,
-          recover = p == Recover)
-        if (!rows.isEmpty) graft.llm.Similarity.appendToMipsIndex(rows, indexPath)
-        guard.commit(batchId)
+                              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    guardedSink(embeddings, indexPath, checkpoint) { (batch, _, recover) =>
+      val rows = ingestVectorRows(batch.dropDuplicates("vec_id"), indexPath, recover)
+      if (!rows.isEmpty) graft.llm.Similarity.appendToMipsIndex(rows, indexPath)
     }
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
-  }
 
   /** Continuous event-log landing into the day-partitioned store (the
     * [[graft.warehouse.ParquetWarehouse.writeEventsPartitioned]] layout,
@@ -828,55 +744,47 @@ object StreamingOps {
     * while the stream runs. This is the ingestion path an event log needs
     * at scale: the stream only ever touches the days present in the batch.
     *
-    * Replay safety (foreachBatch is at-least-once): the same [[ReplayGuard]]
-    * high-water mark as the corpus/vector ingests — steady-state batches
-    * append with NO scan of the store; a replayed fully-committed batch is
-    * skipped; only the first post-restart delivery pays the defensive
-    * event_id anti-join, and that join is PRUNED to the batch's own days
-    * (the `event_date IN (...)` partition filter), never the whole log.
-    * Within-batch duplicate event_ids are dropped (the engine-wide
-    * unique-key contract); `compactEvery` folds accrued per-batch small
-    * files through the warehouse's crash-safe per-partition swap, after the
-    * mark commits.
+    * Replay safety is the [[guardedSink]] protocol; the recovery
+    * anti-join ([[unstoredRows]]) runs on event_id. Within-batch duplicate
+    * event_ids are dropped (the engine-wide unique-key contract);
+    * `compactEvery` folds accrued per-batch small files through the
+    * warehouse's crash-safe per-partition swap.
     */
   def ingestEventsStream(events: DataFrame, storePath: String, checkpoint: String,
-                         compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val guard = new ReplayGuard(storePath, checkpoint)
-    guard.acquireLock() // one writer per sink — checked, not assumed
-    val step: (DataFrame, Long) => Unit = (batch0, batchId) => guard.posture(batchId) match {
-      case Skip => ()
-      case p =>
+                         compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
+    guardedSink(events, storePath, checkpoint, compactEvery,
+      graft.warehouse.ParquetWarehouse.compactPartitioned(_, storePath, Seq("event_date"))) {
+      (batch0, _, recover) =>
         val batch = batch0.dropDuplicates("event_id")
           .withColumn("event_date", to_date(col("ts")))
-        val spark = batch0.sparkSession
-        // the guard's lease/hwm files live under storePath, so "dir exists"
-        // is not "store has data" — look for partition directories (the
-        // first post-start batch is ALWAYS Recover posture)
-        val storeHasData = {
-          val hp = new org.apache.hadoop.fs.Path(storePath)
-          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.exists(hp) && fs.listStatus(hp).exists(_.getPath.getName.startsWith("event_date="))
-        }
-        val rows =
-          if (p == Recover && storeHasData) {
-            // recovery anti-join bounded to the straddling batch's OWN days
-            val days = batch.select("event_date").distinct().collect().map(_.getDate(0))
-            val stored = spark.read.parquet(storePath)
-              .filter(col("event_date").isin(days.toSeq: _*)).select("event_id")
-            batch.join(stored, Seq("event_id"), "left_anti")
-          } else batch
+        val rows = unstoredRows(batch, storePath, "event_date", "event_id", recover)
         if (!rows.isEmpty)
           rows.hint("rebalance", col("event_date"))
             .write.mode("append").partitionBy("event_date").parquet(storePath)
-        guard.commit(batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.warehouse.ParquetWarehouse
-            .compactPartitioned(spark, storePath, Seq("event_date"))
     }
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
+
+  /** The rows a micro-batch appends to a store partitioned by `partCol`:
+    * the batch itself, except for the recovery delivery over a store that
+    * already holds data, which drops rows whose `key` is stored. That
+    * anti-join is PRUNED to the batch's own partitions (a `partCol IN
+    * (...)` partition filter), never the whole store. The guard's lease and
+    * mark files live under the store, so "dir exists" is not "store has
+    * data": the store has data once a `partCol=` directory exists.
+    */
+  private def unstoredRows(batch: DataFrame, storePath: String, partCol: String,
+                           key: String, recover: Boolean): DataFrame = {
+    val spark = batch.sparkSession
+    val hp = new org.apache.hadoop.fs.Path(storePath)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val storeHasData = fs.exists(hp) &&
+      fs.listStatus(hp).exists(_.getPath.getName.startsWith(s"$partCol="))
+    if (!recover || !storeHasData) batch
+    else {
+      val parts = batch.select(partCol).distinct().collect().map(_.get(0))
+      val stored = spark.read.parquet(storePath)
+        .filter(col(partCol).isin(parts.toSeq: _*)).select(key)
+      batch.join(stored, Seq(key), "left_anti")
+    }
   }
 
   /** The rows a vector-ingest micro-batch appends: the batch itself in

@@ -6,11 +6,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 
 /** Tiny atomic pointer / mark / lock files for path-based table formats —
-  * the shared primitive behind the warehouse snapshot and manifest
-  * pointers, [[graft.store.VersionedStore]]'s CURRENT version list (the
-  * count, sketch and quantile stores, the dedup corpus index and the
-  * search postings stores), and the streaming replay high-water mark and
-  * writer lease.
+  * the shared primitive behind:
+  *   - the warehouse snapshot pointer (one commit step,
+  *     `ParquetWarehouse.commitSnapshot`) and the manifest pointer;
+  *   - [[graft.store.VersionedStore]]'s CURRENT version list (the count,
+  *     sketch and quantile stores, the dedup corpus index and the search
+  *     postings stores), and the version sweep under every vacuum
+  *     ([[graft.store.VersionedStore.sweep]]);
+  *   - the streaming replay high-water mark and writer lease (one guarded
+  *     sink, `StreamingOps.guardedSink`).
   *
   * Built on Hadoop's `FileContext` rather than `java.nio.file`, so the same
   * pointer machinery works on `file:`, `hdfs:`, and any other filesystem

@@ -65,12 +65,10 @@ object ParquetWarehouse {
   private val Pointer = "CURRENT"
 
   /** Allocate the next UNOCCUPIED version number: past the current pointer
-    * AND past any existing dir. A failed [[publishAudited]] attempt
-    * intentionally leaves its staged dir at cur+1 as inspection evidence;
-    * a mutator that allocated blindly would stage INTO that dir and then
-    * publish the failed attempt's unaudited tables alongside its own
-    * (they become visible through tablesIn/readSnapshot) while clobbering
-    * the evidence — ADVICE r11. Every snapshot mutator allocates here.
+    * AND past any existing dir. A failed audit leaves its staged dir at
+    * cur+1 as inspection evidence; a mutator that allocated blindly would
+    * stage INTO that dir and then publish the failed attempt's unaudited
+    * tables alongside its own while clobbering the evidence — ADVICE r11.
     */
   private def nextVersion(root: String, cur: Long): String = {
     var n = cur + 1
@@ -78,85 +76,98 @@ object ParquetWarehouse {
     s"v$n"
   }
 
-  /** P23 — atomic multi-table publish: write every table under
-    * `root/v<next>/<table>/`, then swap the CURRENT pointer with an atomic
-    * file move ([[AtomicPointer]], so the same snapshot machinery serves
-    * `file:` and `hdfs:` roots). A crash mid-write leaves the previous
-    * version live.
+  /** The one snapshot commit (P23, the path-based form of the reference's
+    * one-transaction star load) — every snapshot mutator is its checks plus
+    * what it hands this:
+    *   1. allocate the next unoccupied version `root/v<N>` ([[nextVersion]]);
+    *   2. `stage` writes the `changed` tables into that dir;
+    *   3. with `carry`, every OTHER table of the current snapshot carries
+    *      forward by `.base` pointer ([[carryForward]] — metadata, zero data
+    *      copied); with no current snapshot there is nothing to carry, so a
+    *      carrying commit on an empty root is a full publish;
+    *   4. with an `audit` (WRITE-AUDIT-PUBLISH, the Iceberg/Netflix WAP
+    *      pattern), the audit sees the staged SNAPSHOT VIEW — staged files
+    *      for changed tables, carried tables resolved exactly as a reader of
+    *      the new version would — so cross-table invariants (fact keys ⊆
+    *      carried dim keys) audit on the bytes readers would see, not on the
+    *      input lineage. Without an audit no staged view is built (a staged
+    *      read can start a schema job);
+    *   5. swap the CURRENT pointer with an atomic file move ([[AtomicPointer]],
+    *      so the same machinery serves `file:` and `hdfs:` roots).
+    * A crash before the swap leaves the previous version live. A failing
+    * audit publishes nothing and keeps the staged dir, under its number,
+    * for inspection (Left(version)); a later commit allocates past it.
+    * Every precondition runs before this is called, so a failed check stages
+    * nothing. Prior versions' files are never touched, so any version still
+    * on disk reproduces its state ([[readTableAt]]) until
+    * [[vacuumSnapshots]]. Single writer per root.
     */
-  def publishSnapshot(root: String, tables: Map[String, DataFrame]): String = {
-    val next = nextVersion(root, currentVersion(root).map(_.drop(1).toLong).getOrElse(0L))
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$root/$next/$name")
+  private def commitSnapshot(root: String, changed: Iterable[String],
+                             carry: Boolean = true,
+                             audit: Option[Map[String, DataFrame] => Boolean] = None)
+                            (stage: String => Unit): Either[String, String] = {
+    val cur = currentVersion(root)
+    val next = nextVersion(root, cur.fold(0L)(_.drop(1).toLong))
+    stage(s"$root/$next")
+    val carried =
+      if (carry) cur.toSeq.flatMap(tablesIn(root, _)).filterNot(changed.toSet) else Nil
+    cur.foreach(carryForward(root, _, next, carried))
+    val passed = audit.forall { check =>
+      val spark = SparkSession.active
+      check((changed ++ carried).map(t => t -> readTableAt(spark, root, t, next)).toMap)
     }
-    AtomicPointer.write(s"$root/$Pointer", next)
-    next
+    if (passed) { AtomicPointer.write(s"$root/$Pointer", next); Right(next) }
+    else Left(next)
   }
+
+  /** Stage each frame as `<dir>/<name>` — the whole-table staging of the
+    * publish and upsert paths. */
+  private def writeTables(tables: Map[String, DataFrame])(dir: String): Unit =
+    tables.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+    }
+
+  /** P23 — atomic multi-table publish: every table written under
+    * `root/v<next>/<table>/`, then the pointer swap ([[commitSnapshot]]).
+    */
+  def publishSnapshot(root: String, tables: Map[String, DataFrame]): String =
+    commitSnapshot(root, tables.keys, carry = false)(writeTables(tables)).merge
 
   def currentVersion(root: String): Option[String] =
     AtomicPointer.read(s"$root/$Pointer").map(_.trim)
 
-  /** WRITE-AUDIT-PUBLISH (the Iceberg/Netflix WAP pattern): stage every
-    * table under an UNPUBLISHED version dir, run `audit` on the STAGED
-    * FILES (exactly the bytes readers would see — not on the input
-    * lineage, which a nondeterministic upstream could diverge from), and
-    * swap the CURRENT pointer only when the audit passes. A failing audit
-    * publishes NOTHING: the previous version stays live and the staged dir
-    * remains on disk for inspection (Left(version)). At 100 TB this is the
-    * only safe shape for "don't serve a corrupt batch" — validation after
-    * the pointer swap is a read-visible corruption window.
+  /** [[publishSnapshot]] gated by `audit` on the staged tables: the pointer
+    * swaps only when it passes, else Left(staged version). At 100 TB this
+    * is the only safe shape for "don't serve a corrupt batch" — validation
+    * after the pointer swap is a read-visible corruption window.
     */
   def publishAudited(root: String, tables: Map[String, DataFrame],
                      audit: Map[String, DataFrame] => Boolean): Either[String, String] = {
     require(tables.nonEmpty, "publishAudited: no tables to publish")
-    // allocate past any EXISTING dir, not just past the pointer — a failed
-    // stage keeps its number (and its files) until vacuumed, so the next
-    // attempt never overwrites the evidence
-    val next = nextVersion(root, currentVersion(root).map(_.drop(1).toLong).getOrElse(0L))
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$root/$next/$name")
-    }
-    val spark = tables.head._2.sparkSession
-    val staged = tables.keys.map(n => n -> spark.read.parquet(s"$root/$next/$n")).toMap
-    if (audit(staged)) { AtomicPointer.write(s"$root/$Pointer", next); Right(next) }
-    else Left(next)
+    commitSnapshot(root, tables.keys, carry = false, Some(audit))(writeTables(tables))
   }
 
   /** INCREMENTAL write-audit-publish: stage only the tables that CHANGED;
-    * every other table in the current snapshot carries forward by `.base`
-    * pointer (metadata, zero data copied — tombstones rewritten so the
-    * staged version stays self-contained). The audit sees the staged
-    * SNAPSHOT VIEW — staged files for changed tables, carried tables
-    * resolved exactly as a reader of the new version would — so
-    * cross-table invariants (fact keys ⊆ carried dim keys) still audit.
-    * At 100 TB this is the WAP shape that matters: re-publishing a
-    * corrected fact must not rewrite the unchanged dimensions, and a
+    * every other table carries forward, and the audit sees the whole staged
+    * snapshot. At 100 TB this is the WAP shape that matters: re-publishing
+    * a corrected fact must not rewrite the unchanged dimensions, and a
     * failed audit still leaves the prior version live ([[vacuumSnapshots]]
     * never reclaims a version a live `.base` pointer reaches).
     */
   def publishAuditedIncremental(root: String, changed: Map[String, DataFrame],
                                 audit: Map[String, DataFrame] => Boolean): Either[String, String] = {
     require(changed.nonEmpty, "publishAuditedIncremental: no changed tables")
-    val cur = currentVersion(root).getOrElse(throw new IllegalStateException(
-      s"publishAuditedIncremental needs a published snapshot under $root to carry from"))
-    val next = nextVersion(root, cur.drop(1).toLong)
-    changed.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$root/$next/$name")
-    }
-    val spark = changed.head._2.sparkSession
-    val carried = tablesIn(root, cur).filterNot(changed.contains)
-    carryForward(spark, root, cur, next, carried)
-    val staged = (changed.keys.toSeq ++ carried)
-      .map(t => t -> readTableAt(spark, root, t, next)).toMap
-    if (audit(staged)) { AtomicPointer.write(s"$root/$Pointer", next); Right(next) }
-    else Left(next)
+    if (currentVersion(root).isEmpty) throw new IllegalStateException(
+      s"publishAuditedIncremental needs a published snapshot under $root to carry from")
+    commitSnapshot(root, changed.keys, audit = Some(audit))(writeTables(changed))
   }
 
   /** Read a table from the currently-published snapshot, resolving the two
     * metadata-only indirections a version may carry:
     *   - a `<table>.base` pointer file (the version holding the actual data
-    *     files — written by [[deleteFromSnapshot]]'s merge-on-read path so
-    *     a delete never rewrites the table);
+    *     files — written for every carried table and by
+    *     [[deleteFromSnapshot]]'s merge-on-read path, so neither a carry nor
+    *     a delete rewrites the table);
     *   - a `<table>.deletes/` tombstone set (cumulative deleted keys; one
     *     key column whose NAME identifies the join key), anti-joined here.
     * A plain version (data dir, no tombstones) reads exactly as before.
@@ -170,12 +181,11 @@ object ParquetWarehouse {
     readTableAt(spark, root, table, v)
   }
 
-  /** TIME TRAVEL: read `table` as of a specific published version — every
-    * commit path (publish, upsert, merge-on-read delete, compaction)
-    * leaves prior versions' files untouched, so any version still on disk
-    * (i.e. not yet [[vacuumSnapshots]]-reclaimed) reproduces its exact
-    * historical state, tombstones included. Audit and reproducibility
-    * primitive: "what did the training corpus look like at v7?".
+  /** TIME TRAVEL: read `table` as of a specific published version — any
+    * version still on disk ([[commitSnapshot]] never touches a prior
+    * version's files) reproduces its exact historical state, tombstones
+    * included. Audit and reproducibility primitive: "what did the training
+    * corpus look like at v7?".
     */
   def readTableAt(spark: SparkSession, root: String, table: String,
                   version: String): DataFrame = {
@@ -221,10 +231,10 @@ object ParquetWarehouse {
     * next to the table) are rewritten into `next` so every version is
     * self-contained for reads.
     */
-  private def carryForward(spark: SparkSession, root: String, cur: String,
-                           next: String, tables: Seq[String]): Unit =
+  private def carryForward(root: String, cur: String, next: String,
+                           tables: Seq[String]): Unit =
     tables.foreach { tbl =>
-      tombstones(spark, root, cur, tbl).foreach(
+      tombstones(SparkSession.active, root, cur, tbl).foreach(
         _.write.mode("overwrite").parquet(s"$root/$next/$tbl.deletes"))
       AtomicPointer.write(s"$root/$next/$tbl.base", resolveBase(root, cur, tbl))
     }
@@ -270,7 +280,6 @@ object ParquetWarehouse {
     * keys costs one tiny parquet write instead of a full-table rewrite —
     * the read-side anti-join is the price, paid until
     * [[compactSnapshotDeletes]] folds the tombstones into a rewritten base.
-    * Other tables in the snapshot carry forward as metadata pointers.
     * Delete keys are deduplicated; deleting an absent key is a no-op by
     * anti-join semantics (DELETE WHERE matches nothing). The tombstone
     * column is stored under `keyCol`'s name, which is how the read side
@@ -279,83 +288,60 @@ object ParquetWarehouse {
     */
   def deleteFromSnapshot(root: String, table: String, deleteKeys: DataFrame,
                          keyCol: String): String = {
-    val spark = deleteKeys.sparkSession
-    val cur = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no published snapshot under $root"))
-    require(tablesIn(root, cur).contains(table),
-      s"deleteFromSnapshot: no table '$table' in snapshot $cur under $root")
-    val next = nextVersion(root, cur.drop(1).toLong)
-    carryForward(spark, root, cur, next,
-      tablesIn(root, cur).filterNot(_ == table))
-    val prior = tombstones(spark, root, cur, table)
+    val cur = snapshotHolding(root, table)
+    val prior = tombstones(deleteKeys.sparkSession, root, cur, table)
     prior.foreach(p => require(p.columns.sameElements(Array(keyCol)),
       s"deleteFromSnapshot: existing tombstones for '$table' key on " +
         s"'${p.columns.mkString(",")}', not '$keyCol' — one delete key per table"))
     val fresh = deleteKeys.select(col(keyCol)).distinct()
     val all = prior.map(_.unionByName(fresh).distinct()).getOrElse(fresh)
-    all.write.mode("overwrite").parquet(s"$root/$next/$table.deletes")
-    AtomicPointer.write(s"$root/$next/$table.base", resolveBase(root, cur, table))
-    AtomicPointer.write(s"$root/$Pointer", next)
-    next
+    commitSnapshot(root, Seq(table)) { dir =>
+      all.write.mode("overwrite").parquet(s"$dir/$table.deletes")
+      AtomicPointer.write(s"$dir/$table.base", resolveBase(root, cur, table))
+    }.merge
+  }
+
+  /** The current version, checked to hold `table` — the shared
+    * precondition of the single-table mutators. */
+  private def snapshotHolding(root: String, table: String): String = {
+    val cur = currentVersion(root).getOrElse(
+      throw new IllegalStateException(s"no published snapshot under $root"))
+    require(tablesIn(root, cur).contains(table),
+      s"no table '$table' in snapshot $cur under $root")
+    cur
   }
 
   /** Fold a table's tombstones into a rewritten base — the maintenance pass
     * that ends the merge-on-read era: the merged view (base minus deletes)
     * is written as a PLAIN data dir in a fresh version, tombstones and base
-    * pointer dropped, other tables carried forward. Reads before the
-    * pointer swap see the old version; after it, a direct scan with no
-    * anti-join. Old versions stay on disk (time travel) until
-    * [[vacuumSnapshots]].
+    * pointer dropped. After the swap, reads are a direct scan with no
+    * anti-join.
     */
   def compactSnapshotDeletes(spark: SparkSession, root: String,
                              table: String): String = {
-    val cur = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no published snapshot under $root"))
-    val next = nextVersion(root, cur.drop(1).toLong)
-    carryForward(spark, root, cur, next,
-      tablesIn(root, cur).filterNot(_ == table))
-    readTable(spark, root, table).write.mode("overwrite")
-      .parquet(s"$root/$next/$table")
-    AtomicPointer.write(s"$root/$Pointer", next)
-    next
+    val merged = readTableAt(spark, root, table, snapshotHolding(root, table))
+    commitSnapshot(root, Seq(table))(writeTables(Map(table -> merged))).merge
   }
 
-  /** Delete version dirs unreachable from CURRENT — the snapshot analogue
-    * of [[graft.store.VersionedStore.vacuum]], with the same two
-    * writer-safety guards:
-    * never touch versions numbered ABOVE the committed one (a serial
-    * writer's in-flight commit occupies exactly cur+1), and re-read the
-    * pointer immediately before each delete. Reachable = the CURRENT
-    * version plus every version its `.base` pointers name. This RECLAIMS
-    * time-travel history by design — call it only when no reader may still
-    * hold an old pointer (the same maintenance-window contract as
+  /** Delete version dirs unreachable from CURRENT through the shared
+    * version sweep ([[graft.store.VersionedStore.sweep]]: never above the
+    * committed version, live set re-read before each delete). Reachable =
+    * the CURRENT version plus every version its `.base` pointers name. This
+    * RECLAIMS time-travel history by design — call it only when no reader
+    * may still hold an old pointer (the same maintenance-window contract as
     * compaction). Returns the number of directories removed.
     */
-  def vacuumSnapshots(root: String): Int = {
-    def reachable(): Set[String] = currentVersion(root) match {
+  def vacuumSnapshots(root: String): Int =
+    graft.store.VersionedStore.sweep(root)(currentVersion(root) match {
       case None => Set.empty
       case Some(v) =>
         tablesIn(root, v).map(resolveBase(root, v, _)).toSet + v
-    }
-    val live = reachable()
-    val maxCommitted = currentVersion(root)
-      .filter(_.matches("v\\d+")).map(_.drop(1).toLong).getOrElse(0L)
-    val junk = AtomicPointer.listDirNames(root)
-      .filter(n => n.matches("v\\d+") && !live.contains(n) &&
-        n.drop(1).toLong <= maxCommitted)
-    junk.count { name =>
-      !reachable().contains(name) && AtomicPointer.deleteDir(s"$root/$name")
-    }
-  }
+    })
 
   /** Copy-on-write MERGE/upsert (the `MERGE INTO` shape path-based table
     * formats implement): rows in `updates` REPLACE the current snapshot's
     * rows with the same `keyCol` value, and new keys append — one
-    * anti-join + union, published as a fresh snapshot version through the
-    * same [[AtomicPointer]] CURRENT swap as [[publishSnapshot]], so
-    * readers see the old version until the new one is complete (a crash
-    * mid-merge leaves the previous version live, and the previous
-    * version's files are never touched — time travel for free).
+    * anti-join + union, committed as a fresh snapshot version.
     *
     * This is the mutation primitive [[appendIdempotent]] deliberately
     * lacks (P21's anti-join drops already-loaded keys — it can never
@@ -368,30 +354,21 @@ object ParquetWarehouse {
     * survive (enforced: fails fast rather than publishing an ambiguous
     * merge). Reads go through [[readTable]], so an upsert over a
     * tombstone-carrying version merges against the POST-delete view and
-    * the rewritten table sheds its tombstones; other tables in the
-    * snapshot carry forward as metadata pointers.
+    * the rewritten table sheds its tombstones. The first upsert on an
+    * empty root publishes `updates` as the table.
     */
   def upsertSnapshot(root: String, table: String, updates: DataFrame,
                      keyCol: String): String = {
-    val spark = updates.sparkSession
     val dupes = updates.groupBy(col(keyCol)).count().filter(col("count") > 1)
     require(dupes.isEmpty,
       s"upsertSnapshot: duplicate update keys in '$keyCol' — merge is ambiguous")
-    currentVersion(root) match {
-      case None => publishSnapshot(root, Map(table -> updates))
-      case Some(cur) =>
-        val merged =
-          if (!tablesIn(root, cur).contains(table)) updates
-          else readTable(spark, root, table)
-            .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-            .unionByName(updates)
-        val next = nextVersion(root, cur.drop(1).toLong)
-        carryForward(spark, root, cur, next,
-          tablesIn(root, cur).filterNot(_ == table))
-        merged.write.mode("overwrite").parquet(s"$root/$next/$table")
-        AtomicPointer.write(s"$root/$Pointer", next)
-        next
+    val merged = currentVersion(root).filter(tablesIn(root, _).contains(table)) match {
+      case None => updates
+      case Some(cur) => readTableAt(updates.sparkSession, root, table, cur)
+        .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
+        .unionByName(updates)
     }
+    commitSnapshot(root, Seq(table))(writeTables(Map(table -> merged))).merge
   }
 
   /** PARTITION-SCOPED copy-on-write merge — the slicing
@@ -883,9 +860,10 @@ object ParquetWarehouse {
   /** Reclaim a manifested table's dead bytes: data files NOT referenced
     * by the CURRENT manifest (orphans from crashed appends — the files
     * [[appendManifested]] deliberately never adopts) and manifest version
-    * dirs below the published one (superseded index snapshots — this
-    * reclaims index time travel by design, the same maintenance-window
-    * contract as [[vacuumSnapshots]]).
+    * dirs below the published one through the shared version sweep
+    * ([[graft.store.VersionedStore.sweep]]; superseded index snapshots —
+    * this reclaims index time travel by design, the same
+    * maintenance-window contract as [[vacuumSnapshots]]).
     *
     * Writer-safety: an IN-FLIGHT append has already landed data files
     * that no manifest references yet — deleting those would let the
@@ -894,8 +872,8 @@ object ParquetWarehouse {
     * pointer's last commit are orphan candidates (an uncommitted file
     * older than the last commit can never become live, because appends
     * only adopt files they themselves just wrote), and the pointer is
-    * re-read immediately before each delete. Returns (orphan data files
-    * deleted, manifest versions deleted).
+    * re-read immediately before each file delete. Returns (orphan data
+    * files deleted, manifest versions deleted).
     */
   def vacuumManifested(spark: SparkSession, path: String): (Int, Int) = {
     val ptrPath = s"$path/$ManifestPtr"
@@ -916,14 +894,8 @@ object ParquetWarehouse {
       currentManifestVersion(path).contains(curV) &&
         fs.delete(st.getPath, false)
     }
-    val curN = curV.drop(1).toLong
-    val manifestsDir = new org.apache.hadoop.fs.Path(s"$path/_manifests")
-    val oldVersions = fs.listStatus(manifestsDir).map(_.getPath)
-      .filter(p => p.getName.matches("v\\d+") && p.getName.drop(1).toLong < curN)
-    val nVersions = oldVersions.count { p =>
-      currentManifestVersion(path).contains(curV) &&
-        fs.delete(p, true)
-    }
+    val nVersions = graft.store.VersionedStore.sweep(s"$path/_manifests")(
+      currentManifestVersion(path).toSet)
     // commit claims are NEVER vacuumed: a claim's permanence is the
     // invariant that stops an arbitrarily-stale writer from re-claiming a
     // spent version and regressing the pointer (one empty file per

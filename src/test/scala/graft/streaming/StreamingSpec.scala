@@ -1409,4 +1409,36 @@ class StreamingSpec extends SparkSpec {
       assert(quarantined(0).getAs[String]("_corrupt_record").contains("broken"))
     } finally q.stop()
   }
+
+  test("every guarded maintainer refuses a sink another live checkpoint holds, before any query starts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-lock-matrix").toString
+    def in() = MemoryStream[EventRow].toDF()
+    def m(name: String)(start: (String, String) => Any) = name -> start
+    val maintainers = Seq(
+      m("conversion-pairs")((s, c) =>
+        StreamingOps.ingestConversionPairsStream(in(), in(), s, c)),
+      m("deduped")((s, c) => StreamingOps.ingestDedupedStream(in(), s, s"$s-corpus", c)),
+      m("dsir-counts")((s, c) => StreamingOps.ingestDsirCountsStream(in(), s, c)),
+      m("quantiles")((s, c) =>
+        StreamingOps.ingestQuantilesStream(in(), s, c, "user_id", "value")),
+      m("postings")((s, c) => StreamingOps.ingestPostingsStream(in(), s, c)),
+      m("manifested")((s, c) => StreamingOps.ingestManifestedStream(in(), s, "event_id", c)),
+      m("ranked-postings")((s, c) => StreamingOps.ingestRankedPostingsStream(in(), s, c)),
+      m("daily-sketch")((s, c) => StreamingOps.ingestDailySketchStream(in(), s, c)),
+      m("vectors")((s, c) => StreamingOps.ingestVectorsStream(in(), s, c)),
+      m("mips-vectors")((s, c) => StreamingOps.ingestMipsVectorsStream(in(), s, c)),
+      m("events")((s, c) => StreamingOps.ingestEventsStream(in(), s, c)))
+    val active = spark.streams.active.length
+    maintainers.foreach { case (name, start) =>
+      val sink = s"$root/$name/sink"
+      new StreamingOps.ReplayGuard(sink, s"$root/$name/ckpt-holder").acquireLock()
+      val ckpt = s"$root/$name/ckpt"
+      val e = intercept[IllegalStateException](start(sink, ckpt))
+      assert(e.getMessage.contains("locked by checkpoint"), name)
+      assert(spark.streams.active.length === active, s"$name started a query")
+      assert(!new java.io.File(ckpt).exists, s"$name wrote its checkpoint")
+    }
+  }
 }

@@ -503,6 +503,68 @@ class WarehouseSpec extends SparkSpec {
     }
   }
 
+  test("a failed snapshot precondition stages nothing: v* dirs and CURRENT unchanged") {
+    def versions(root: String): Set[String] =
+      Option(new java.io.File(root).list()).fold(Set.empty[String])(_.toSet)
+        .filter(_.matches("v\\d+"))
+    // a 2-table snapshot whose `t` already carries tombstones keyed on `k`
+    def seeded(): String = {
+      val root = tmpDir()
+      ParquetWarehouse.publishSnapshot(root, Map(
+        "t" -> Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+        "dim" -> Seq((10L, "x")).toDF("dk", "dv")))
+      ParquetWarehouse.deleteFromSnapshot(root, "t", Seq(1L).toDF("k"), "k")
+      root
+    }
+    val cases: Seq[(String, () => String, String => Any)] = Seq(
+      ("delete keyed on a different column", () => seeded(), root =>
+        ParquetWarehouse.deleteFromSnapshot(root, "t", Seq("b").toDF("v"), "v")),
+      ("delete from an absent table", () => seeded(), root =>
+        ParquetWarehouse.deleteFromSnapshot(root, "absent", Seq(2L).toDF("k"), "k")),
+      ("compact an absent table", () => seeded(), root =>
+        ParquetWarehouse.compactSnapshotDeletes(spark, root, "absent")),
+      ("upsert with duplicate keys", () => seeded(), root =>
+        ParquetWarehouse.upsertSnapshot(root, "t",
+          Seq((2L, "x"), (2L, "y")).toDF("k", "v"), "k")),
+      ("incremental publish with no snapshot", () => tmpDir(), root =>
+        ParquetWarehouse.publishAuditedIncremental(root,
+          Map("t" -> Seq((1L, "a")).toDF("k", "v")), _ => true)),
+      ("empty publishAudited", () => seeded(), root =>
+        ParquetWarehouse.publishAudited(root, Map.empty, _ => true)))
+    cases.foreach { case (name, setup, mutate) =>
+      val root = setup()
+      val (before, cur) = (versions(root), ParquetWarehouse.currentVersion(root))
+      intercept[RuntimeException](mutate(root))
+      assert(versions(root) === before, s"$name left a version dir behind")
+      assert(ParquetWarehouse.currentVersion(root) === cur, s"$name moved CURRENT")
+    }
+  }
+
+  test("snapshot mutators start no more Spark jobs than their pins") {
+    val root = tmpDir()
+    val t = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    val dim = Seq((10L, "x"), (20L, "y")).toDF("dk", "dv")
+    // measured on a 2-table snapshot before the mutators shared one commit
+    val pinned = Seq(
+      ("publishSnapshot", 2, () => ParquetWarehouse.publishSnapshot(root,
+        Map("t" -> t, "dim" -> dim))),
+      ("deleteFromSnapshot", 1, () => ParquetWarehouse.deleteFromSnapshot(root, "t",
+        Seq(2L).toDF("k"), "k")),
+      ("compactSnapshotDeletes", 4, () =>
+        ParquetWarehouse.compactSnapshotDeletes(spark, root, "t")),
+      ("upsertSnapshot", 5, () => ParquetWarehouse.upsertSnapshot(root, "t",
+        Seq((3L, "C"), (4L, "d")).toDF("k", "v"), "k")),
+      ("vacuumSnapshots", 0, () => ParquetWarehouse.vacuumSnapshots(root)))
+    pinned.foreach { case (name, pin, mutate) =>
+      val n = jobsStartedBy { mutate(); () }
+      info(s"$name: $n Spark jobs (pin $pin)")
+      assert(n <= pin, s"$name started $n Spark jobs, pinned at $pin")
+    }
+    assert(ParquetWarehouse.currentVersion(root).contains("v4"))
+    assert(ParquetWarehouse.readTable(spark, root, "t").orderBy("k")
+      .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (3L, "C"), (4L, "d")))
+  }
+
   test("publishAuditedIncremental: only changed tables write; dims carry by base pointer") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-wap-inc").toString
