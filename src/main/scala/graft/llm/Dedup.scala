@@ -338,6 +338,13 @@ object Dedup {
     * two index projections — computed inline by
     * [[crossNearDupPairsWithCleanup]], or read from parquet by
     * [[crossNearDupPairsAgainstIndexWithCleanup]].
+    *
+    * Both candidate restrictions are semi-joins against a BROADCAST id-only
+    * side: the candidate set is batch-bounded (a batch's docs times their
+    * bucket matches), so its id columns ship to every task and neither the
+    * batch shingles nor the corpus shingles shuffle — only the ids travel,
+    * the shingle arrays stay where they are scanned. No `distinct` on those
+    * sides: duplicate keys on the right of a semi-join change nothing.
     */
   private def crossPairsCore(shNew: DataFrame, corpusBuckets: DataFrame,
                              corpusShingles: DataFrame,
@@ -350,9 +357,9 @@ object Dedup {
       .select("new_id", "corpus_id")
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shN = shNew.join(cands.select(col("new_id").as("doc_id")).distinct(),
+    val shN = shNew.join(broadcast(cands.select(col("new_id").as("doc_id"))),
       Seq("doc_id"), "left_semi")
-    val shC = corpusShingles.join(cands.select(col("corpus_id").as("doc_id")).distinct(),
+    val shC = corpusShingles.join(broadcast(cands.select(col("corpus_id").as("doc_id"))),
       Seq("doc_id"), "left_semi")
     val result = cands
       .join(shN.select(col("doc_id").as("new_id"), col("sh").as("sh_n")), Seq("new_id"))
@@ -504,31 +511,42 @@ object Dedup {
   }
 
   /** Anti-join form over the persisted index: the batch minus anything
-    * near-duplicating the indexed corpus — one ingest step. Pair caches are
-    * released after the matched-id side materializes.
+    * near-duplicating the indexed corpus — one ingest step, in the
+    * [[dedupBatch]] shape (the batch is evaluated once, eagerly).
     */
   def dedupAgainstIndex(newDocs: DataFrame, indexPath: String,
-                        threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
-    val (pairs, release) =
-      crossNearDupPairsAgainstIndexWithCleanup(newDocs, indexPath, threshold, shingleN)
-    val matched = graft.operators.Materialize.cut(
-      pairs.select(col("new_id").as("doc_id")).distinct())
-    release()
-    newDocs.join(matched, Seq("doc_id"), "left_anti")
-  }
+                        threshold: Double = 0.8, shingleN: Int = 3): DataFrame =
+    dedupBatch(newDocs)(
+      crossNearDupPairsAgainstIndexWithCleanup(_, indexPath, threshold, shingleN))
 
   /** Apply [[crossNearDupPairsWithCleanup]] as a filter: the new batch minus
     * anything near-duplicating the existing corpus — what actually gets
-    * appended on each incremental ingest. Caches are released after the
-    * anti-join's matched-id side is materialized.
+    * appended on each incremental ingest, in the [[dedupBatch]] shape.
     */
   def dedupAgainstCorpus(newDocs: DataFrame, corpus: DataFrame,
-                         threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
-    val (pairs, release) = crossNearDupPairsWithCleanup(newDocs, corpus, threshold, shingleN)
-    val matched = graft.operators.Materialize.cut(
-      pairs.select(col("new_id").as("doc_id")).distinct())
-    release()
-    newDocs.join(matched, Seq("doc_id"), "left_anti")
+                         threshold: Double = 0.8, shingleN: Int = 3): DataFrame =
+    dedupBatch(newDocs)(crossNearDupPairsWithCleanup(_, corpus, threshold, shingleN))
+
+  /** The one anti-join shape of both batch dedups. The batch is cut
+    * ([[graft.operators.Materialize.cut]]) BEFORE anything reads it: the
+    * pair pipeline shingles the cut, and the returned frame is the cut
+    * minus the matched ids, so however often a caller evaluates the
+    * result, the batch's own (often lazy and costly — decontamination,
+    * say) lineage runs exactly once. The matched ids are batch-bounded by
+    * contract; they are collected once, the pair caches are released, and
+    * the anti-join takes them as a broadcast local relation — no shuffle
+    * and no cached block on the matched side, so the cut batch is the one
+    * block the result keeps alive.
+    */
+  private def dedupBatch(newDocs: DataFrame)(
+      pairsOf: DataFrame => (DataFrame, () => Unit)): DataFrame = {
+    val batch = graft.operators.Materialize.cut(newDocs)
+    val (pairs, release) = pairsOf(batch)
+    val matched = try pairs.select(col("new_id").as("doc_id")).distinct().collect()
+      finally release()
+    val ids = batch.sparkSession.createDataFrame(java.util.Arrays.asList(matched: _*),
+      batch.select("doc_id").schema)
+    batch.join(broadcast(ids), Seq("doc_id"), "left_anti")
   }
 
   /** Near-dup CLUSTERS from the verified pair set: connected components by

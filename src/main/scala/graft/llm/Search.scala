@@ -163,38 +163,45 @@ object Search {
     * stats sidecar (doc count, total tokens — exact integers; avgdl
     * derives at serve time so both engines divide the same longs).
     * Document frequencies are NOT persisted: a term's postings all live in
-    * its bucket, so the serve's pruned scan recounts df exactly.
-    *
-    * NOTE: runs one extra corpus aggregate (the 1-row stats action) at
-    * build time, eagerly.
+    * its bucket, so the serve's pruned scan recounts df exactly. The stats
+    * are observed on the postings write itself ([[writeRankedPostings]]),
+    * so the build runs no aggregate action of its own.
     */
   def writeRankedIndex(documents: DataFrame, path: String,
                        buckets: Int = DefaultBuckets, textCol: String = "text"): Unit = {
-    val toks = TextFns.tokens(col(textCol))
-    // dl = size BEFORE the empty-term drop, matching bm25Score's |d|
-    val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
-    rankedPostings(base)
-      .withColumn("bucket", termBucket(col("term"), buckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    graft.warehouse.AtomicPointer.write(s"$path/$StatsFile", corpusStats(base))
+    val stats = writeRankedPostings(documents, textCol) { postings =>
+      postings
+        .withColumn("bucket", termBucket(col("term"), buckets))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    }
+    graft.warehouse.AtomicPointer.write(s"$path/$StatsFile", stats)
     graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
   }
 
-  /** Ranked postings (term, doc_id, dl, tf) of `base` (doc_id, dl, w). */
-  private def rankedPostings(base: DataFrame): DataFrame =
-    base.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-      .filter(length(col("term")) > 0)
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-
-  /** The exact-integer stats sidecar body (doc count, total tokens) of
-    * `base` — one eager 1-row action. The token sum coalesces to 0 so an
-    * empty batch writes "0\n0\n" instead of failing on a null sum.
+  /** Write `documents`' ranked postings (term, doc_id, dl, tf) through
+    * `write`, and return the exact-integer stats sidecar body (doc count,
+    * total tokens) observed on that same write — `Dataset.observe` on the
+    * per-document rows, so the stats cost no job of their own. The token
+    * sum coalesces to 0, so an empty batch writes "0\n0\n". The observed
+    * rows sit in a shuffle-map stage, whose accumulator updates Spark
+    * re-adds if it re-runs that stage after losing an executor's shuffle
+    * output — which the single-JVM session never does.
     */
-  private def corpusStats(base: DataFrame): String = {
-    val st = base.agg(count(lit(1)).cast("long").as("n"),
-      coalesce(sum(col("dl").cast("long")), lit(0L)).as("tot")).collect()(0)
-    s"${st.getLong(0)}\n${st.getLong(1)}\n"
+  private def writeRankedPostings(documents: DataFrame, textCol: String)(
+      write: DataFrame => Unit): String = {
+    val toks = TextFns.tokens(col(textCol))
+    val obs = new org.apache.spark.sql.Observation()
+    // dl = size BEFORE the empty-term drop, matching bm25Score's |d|
+    val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
+      .observe(obs, count(lit(1)).as("n"),
+        coalesce(sum(col("dl").cast("long")), lit(0L)).as("tot"))
+    write(base.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
+      .filter(length(col("term")) > 0)
+      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf")))
+    val st = obs.get
+    // the optimizer drops the observe node of an input it proves empty
+    if (st.isEmpty) "0\n0\n" else s"${st("n")}\n${st("tot")}\n"
   }
 
   /** BM25 top-k serve from a [[writeRankedIndex]] store — the ranked
@@ -269,7 +276,7 @@ object Search {
     * `bucket IN` / `term IN` filters prune on row-group min/max stats, and
     * the version lands as one file per write task rather than B bucket
     * directories of fragments. An empty batch still writes one schema-only
-    * file, so the single-scan serve can always infer the schema.
+    * file, so the single-scan serve can always read a schema.
     */
   private def writeVersionPostings(postings: DataFrame, dir: String, buckets: Int): Unit =
     postings
@@ -289,7 +296,7 @@ object Search {
     }
 
   /** Every committed version's postings as ONE scan with the query's
-    * `bucket IN` and `term IN` filters on it — one schema inference, one
+    * `bucket IN` and `term IN` filters on it — one footer-read schema, one
     * listing and one set of scan tasks however many versions the store
     * has accrued (the way Dedup reads its versioned index tables).
     */
@@ -344,10 +351,9 @@ object Search {
                                   textCol: String,
                                   tag: Option[String] = None): Unit =
     commit(path, replace, buckets, tag) { staging =>
-      val toks = TextFns.tokens(col(textCol))
-      val base = documents.select(col("doc_id"), size(toks).as("dl"), toks.as("w"))
-      writeVersionPostings(rankedPostings(base), s"$staging/postings", buckets)
-      graft.warehouse.AtomicPointer.write(s"$staging/STATS", corpusStats(base))
+      val stats = writeRankedPostings(documents, textCol)(
+        writeVersionPostings(_, s"$staging/postings", buckets))
+      graft.warehouse.AtomicPointer.write(s"$staging/STATS", stats)
     }
 
   /** Bootstrap the versioned RANKED index. */

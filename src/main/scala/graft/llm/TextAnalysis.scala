@@ -170,10 +170,20 @@ object TextAnalysis {
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c")),
       freq)
 
+  /** The shared scorer. The model is filtered to non-null tokens once, up
+    * front, and both the LUT and its 1-row total read that one frame: the
+    * score join would otherwise infer `tok IS NOT NULL` into the LUT
+    * branch alone, the two branches' model exchanges would differ, and a
+    * stored model (x28's CountStore) would be scanned twice. Identical
+    * branches share one exchange by reuse, so the model is read once. A
+    * null token never matches a document token, so the filter changes no
+    * score on a model built from tokens.
+    */
   private def scoreAgainstUnigramModel(docTok: DataFrame,
                                        freq: DataFrame): DataFrame = {
-    val totals = freq.agg(sum("n_w").as("n_total"))
-    val lut = freq.crossJoin(broadcast(totals))
+    val model = freq.filter(col("tok").isNotNull)
+    val totals = model.agg(sum("n_w").as("n_total"))
+    val lut = model.crossJoin(broadcast(totals))
       .select(col("tok"),
         log(col("n_total").cast("double") / col("n_w").cast("double"))
           .cast(DecimalType(18, 8)).as("lnv"))

@@ -87,9 +87,11 @@ private[graft] object VersionedStore {
     committedVersions(path).exists(v =>
       AtomicPointer.read(s"$path/$v/TAG").map(_.trim).contains(tag))
 
-  /** Every committed version's `table` as ONE parquet scan: one schema
-    * inference, one listing and one set of scan tasks however many
-    * versions the store has accrued (the merge is the caller's).
+  /** Every committed version's `table` as ONE parquet scan: one listing
+    * and one set of scan tasks however many versions the store has
+    * accrued (the merge is the caller's). The schema comes from one
+    * footer read on the driver ([[StoredSchema]]), so the read starts no
+    * Spark job of its own.
     */
   def read(spark: SparkSession, path: String, table: String): DataFrame =
     read(spark, path, committedVersions(path), table)
@@ -100,7 +102,7 @@ private[graft] object VersionedStore {
   def read(spark: SparkSession, path: String, versions: Seq[String],
            table: String): DataFrame = {
     require(versions.nonEmpty, s"no committed versions under $path")
-    spark.read.parquet(versions.map(v => s"$path/$v/$table"): _*)
+    StoredSchema.readParquet(spark, versions.map(v => s"$path/$v/$table"): _*)
   }
 
   /** Delete the version dirs the pointer no longer references — the

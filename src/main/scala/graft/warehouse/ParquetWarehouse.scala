@@ -185,14 +185,16 @@ object ParquetWarehouse {
     * version still on disk ([[commitSnapshot]] never touches a prior
     * version's files) reproduces its exact historical state, tombstones
     * included. Audit and reproducibility primitive: "what did the training
-    * corpus look like at v7?".
+    * corpus look like at v7?". The data and tombstone reads take their
+    * schema from a footer ([[graft.store.StoredSchema]]), so neither runs
+    * an inference job (partitioned tables still infer).
     */
   def readTableAt(spark: SparkSession, root: String, table: String,
                   version: String): DataFrame = {
     require(AtomicPointer.exists(s"$root/$version"),
       s"readTableAt: no version dir '$version' under $root (vacuumed or never published)")
     val dataV = resolveBase(root, version, table)
-    val data = spark.read.parquet(s"$root/$dataV/$table")
+    val data = graft.store.StoredSchema.readParquet(spark, s"$root/$dataV/$table")
     tombstones(spark, root, version, table) match {
       case None => data
       case Some(del) => data.join(del, Seq(del.columns.head), "left_anti")
@@ -210,7 +212,7 @@ object ParquetWarehouse {
   private def tombstones(spark: SparkSession, root: String, v: String,
                          table: String): Option[DataFrame] =
     if (AtomicPointer.exists(s"$root/$v/$table.deletes"))
-      Some(spark.read.parquet(s"$root/$v/$table.deletes"))
+      Some(graft.store.StoredSchema.readParquet(spark, s"$root/$v/$table.deletes"))
     else None
 
   /** Table names present in version `v`: data dirs, base-pointer files, or

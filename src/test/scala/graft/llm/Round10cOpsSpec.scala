@@ -83,6 +83,30 @@ class Round10cOpsSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("unigramSurprisalWith scans a stored model once and scores as the fused form") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val corpus = (1L to 60L).map(i => (i, s"tok${i % 7} tok${i % 3} word $i"))
+      .toDF("doc_id", "text")
+    val store = java.nio.file.Files.createTempDirectory("graft-uni-once").toString
+    graft.operators.CountStore.write(TextAnalysis.unigramCounts(corpus), store)
+    graft.operators.CountStore.append(TextAnalysis.unigramCounts(corpus.limit(0)), store)
+    val df = TextAnalysis.unigramSurprisalWith(corpus, graft.operators.CountStore.read(spark, store))
+    val got = df.collect().sortBy(_.getLong(0)).toSeq
+    assert(got == TextAnalysis.unigramSurprisal(corpus).orderBy("doc_id").collect().toSeq)
+    // the executed plan's scans; a reused exchange is a leaf, so a model
+    // shared by reuse counts once
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case _ => p.children.flatMap(scans)
+    }
+    val storeScans = scans(df.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains(store)))
+    assert(storeScans.size == 1, s"the model store was scanned ${storeScans.size} times")
+  }
+
   // -------------------------------------------------------- temperatureMix
 
   /** Skewed bilingual corpus: many English docs, few Spanish. */

@@ -61,7 +61,7 @@ class Round5OpsSpec extends SparkSpec {
     Dedup.dedupAgainstCorpus(
       docs.filter($"doc_id" % 3 === 0), docs.filter($"doc_id" % 3 =!= 0)).count()
     // the eager form may keep exactly ONE block alive: the checkpointed
-    // matched-id list backing the returned frame (reclaimed by the
+    // input batch backing the returned frame (reclaimed by the
     // ContextCleaner once the frame is unreferenced — the same contract as
     // the eager ANN conveniences lshTopK/ivfTopK); the pipeline's internal
     // shingle/candidate caches must all be gone

@@ -295,6 +295,43 @@ class SearchSpec extends SparkSpec {
     }
   }
 
+  test("ranked stats ride the postings write: same sidecar text, no job of their own") {
+    // the sidecar as a separate aggregate over the batch computed it
+    def aggregated(docs: org.apache.spark.sql.DataFrame): String = {
+      val toks = TextFns.tokens(col("text"))
+      val st = docs.select(size(toks).cast("long").as("dl"))
+        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+      s"${st.getLong(0)}\n${st.getLong(1)}\n"
+    }
+    def read(p: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), "UTF-8")
+    val none = corpus.filter(lit(false))
+    val evens = corpus.filter(col("doc_id") % 2 === 0)
+    val inc = java.nio.file.Files.createTempDirectory("graft-ranked-stats").toString
+    Search.initRankedIndex(corpus, inc, buckets = 8)
+    Search.appendToRankedIndex(none, inc, buckets = 8)
+    Search.appendToRankedIndex(evens, inc, buckets = 8)
+    assert(read(s"$inc/v1/STATS") == aggregated(corpus))
+    assert(read(s"$inc/v2/STATS") == "0\n0\n")
+    assert(read(s"$inc/v3/STATS") == aggregated(evens))
+    val oneShot = java.nio.file.Files.createTempDirectory("graft-ranked-stats1").toString
+    Search.writeRankedIndex(corpus, oneShot, buckets = 8)
+    assert(read(s"$oneShot/_STATS") == aggregated(corpus))
+    val empty = java.nio.file.Files.createTempDirectory("graft-ranked-stats0").toString
+    Search.writeRankedIndex(none, empty, buckets = 8)
+    assert(read(s"$empty/_STATS") == "0\n0\n")
+    // a ranked commit is the conjunctive commit's write shape plus the
+    // stats: observed on the write, they add no job
+    val conj = java.nio.file.Files.createTempDirectory("graft-conj-jobs").toString
+    val ranked = java.nio.file.Files.createTempDirectory("graft-ranked-jobs").toString
+    Search.initIndex(corpus, conj, buckets = 8)
+    Search.initRankedIndex(corpus, ranked, buckets = 8)
+    val conjJobs = jobsStartedBy(Search.appendToIndex(evens, conj, buckets = 8))
+    val rankedJobs = jobsStartedBy(Search.appendToRankedIndex(evens, ranked, buckets = 8))
+    info(s"append jobs: conjunctive $conjJobs, ranked $rankedJobs")
+    assert(rankedJobs <= conjJobs, s"ranked append ran $rankedJobs jobs, conjunctive $conjJobs")
+  }
+
   test("writeIndex overwrite is idempotent: rebuild serves identical results") {
     val idx = java.nio.file.Files.createTempDirectory("graft-search").toString
     Search.writeIndex(corpus, idx, buckets = 8)

@@ -31,7 +31,8 @@ class VersionedStoreSpec extends SparkSpec {
       write: (Int, String) => Unit,
       append: (Int, String, Option[String]) => Unit,
       answer: String => Seq[String],
-      failingAppend: String => Unit)
+      failingAppend: String => Unit,
+      emptyAppend: String => Unit)
 
   private def texts(i: Int): DataFrame = Seq(
     (10L * i + 1, s"spark window merge batch$i alpha"),
@@ -45,14 +46,16 @@ class VersionedStoreSpec extends SparkSpec {
       (i, p) => CountStore.write(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p),
       (i, p, t) => CountStore.append(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p, t),
       p => CountStore.read(spark, p).collect().map(_.toString).sorted.toSeq,
-      p => CountStore.append(Seq(("k", "not-a-count")).toDF("k", "n"), p)),
+      p => CountStore.append(Seq(("k", "not-a-count")).toDF("k", "n"), p),
+      p => CountStore.append(Seq(("k", 1L)).toDF("k", "n").filter(lit(false)), p)),
     Writer("SketchStore", Seq("sketches"), tagged = true,
       (i, p) => SketchStore.write(sketches(i), p),
       (i, p, t) => SketchStore.append(sketches(i), p, t),
       p => SketchStore.read(spark, p)
         .select(col("d"), hll_sketch_estimate(col("sk"))).collect().map(_.toString)
         .sorted.toSeq,
-      p => SketchStore.append(Seq(("d", 1L)).toDF("d", "not_a_sketch"), p)),
+      p => SketchStore.append(Seq(("d", 1L)).toDF("d", "not_a_sketch"), p),
+      p => SketchStore.append(sketches(0).filter(lit(false)), p)),
     Writer("Dedup index", Seq("buckets", "shingles"), tagged = false,
       (i, p) => Dedup.writeCorpusIndex(texts(i), p),
       (i, p, _) => Dedup.appendToCorpusIndex(texts(i), p),
@@ -60,19 +63,22 @@ class VersionedStoreSpec extends SparkSpec {
         Dedup.indexBuckets(spark, p).select(concat(lit("b"), col("doc_id"), lit(":"),
           col("band"))))
         .collect().map(_.getString(0)).sorted.toSeq,
-      p => Dedup.appendToCorpusIndex(texts(9).select("doc_id"), p)),
+      p => Dedup.appendToCorpusIndex(texts(9).select("doc_id"), p),
+      p => Dedup.appendToCorpusIndex(texts(9).filter(lit(false)), p)),
     Writer("Search", Seq("postings"), tagged = true,
       (i, p) => Search.initIndex(texts(i), p, buckets = 8),
       (i, p, t) => Search.appendToIndex(texts(i), p, buckets = 8, tag = t),
       p => Search.searchAllIndexed(spark, p, terms, buckets = 8)
         .collect().map(_.toString).sorted.toSeq,
-      p => Search.appendToIndex(texts(9), p, buckets = 16)),
+      p => Search.appendToIndex(texts(9), p, buckets = 16),
+      p => Search.appendToIndex(texts(9).filter(lit(false)), p, buckets = 8)),
     Writer("Search ranked", Seq("postings"), tagged = true,
       (i, p) => Search.initRankedIndex(texts(i), p, buckets = 8),
       (i, p, t) => Search.appendToRankedIndex(texts(i), p, buckets = 8, tag = t),
       p => Search.searchRankedIndexed(spark, p, terms, k = 100, buckets = 8)
         .collect().map(_.toString).sorted.toSeq,
-      p => Search.appendToRankedIndex(texts(9), p, buckets = 16)))
+      p => Search.appendToRankedIndex(texts(9), p, buckets = 16),
+      p => Search.appendToRankedIndex(texts(9).filter(lit(false)), p, buckets = 8)))
 
   private def sketches(i: Int): DataFrame =
     (0 until 5).map(u => ("d", 100L * i + u)).toDF("d", "u")
@@ -137,6 +143,22 @@ class VersionedStoreSpec extends SparkSpec {
       assert(VersionedStore.vacuum(p) == 0, "vacuum re-run is a no-op")
     }
 
+    test(s"read, ${w.name}: no Spark job, and Spark's inferred schema, empty version first") {
+      val p = tmp(w.name)
+      w.write(0, p); w.emptyAppend(p); w.append(1, p, None)
+      // the schema-only file of the empty version leads the scan
+      val orders = Seq(Seq("v2", "v1", "v3"), Seq("v1", "v2", "v3"))
+      for (t <- w.tables; vs <- orders) {
+        var df: DataFrame = null
+        assert(jobsStartedBy { df = VersionedStore.read(spark, p, vs, t) } == 0,
+          s"reading $t over $vs started a Spark job")
+        assert(df.schema == spark.read.parquet(vs.map(v => s"$p/$v/$t"): _*).schema, s"$t over $vs")
+      }
+      val plain = tmp(w.name)
+      w.write(0, plain); w.append(1, plain, None)
+      assert(w.answer(p) == w.answer(plain), "an empty version changed the answer")
+    }
+
     test(s"fault matrix, ${w.name}: a failed precondition stages nothing") {
       val p = tmp(w.name)
       w.write(0, p); w.append(1, p, Some("batch-1"))
@@ -147,6 +169,47 @@ class VersionedStoreSpec extends SparkSpec {
       assert(before.versions == Set("v1", "v2"))
       assert(w.answer(p) == answer)
     }
+  }
+
+  test("read: the dedup index's adopted flat layout reads with Spark's inferred schema") {
+    val flat = tmp("flat")
+    Dedup.writeCorpusIndex(texts(0), flat)
+    // the pre-versioning layout: bare tables under the root, no pointer
+    for (t <- Seq("buckets", "shingles"))
+      Files.move(Paths.get(flat, "v1", t), Paths.get(flat, t))
+    Files.delete(Paths.get(flat, "CURRENT"))
+    Dedup.appendToCorpusIndex(texts(1), flat)
+    assert(VersionedStore.committedVersions(flat) == Seq(".", "v1"))
+    for (t <- Seq("buckets", "shingles")) {
+      var df: DataFrame = null
+      assert(jobsStartedBy { df = VersionedStore.read(spark, flat, t) } == 0)
+      assert(df.schema == spark.read.parquet(s"$flat/./$t", s"$flat/v1/$t").schema)
+    }
+    assert(Dedup.indexShingles(spark, flat).select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 11L, 12L, 13L))
+  }
+
+  test("StoredSchema: partitioned dirs and foreign files fall back to Spark's inference") {
+    val part = tmp("part")
+    Seq((1L, "a"), (2L, "b")).toDF("x", "k").write.partitionBy("k").parquet(s"$part/t")
+    assert(StoredSchema.of(spark, Seq(s"$part/t")).isEmpty)
+    assert(StoredSchema.readParquet(spark, s"$part/t").schema ==
+      spark.read.parquet(s"$part/t").schema)
+    assert(StoredSchema.of(spark, Seq(s"$part/none")).isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException](StoredSchema.readParquet(spark, s"$part/none"))
+    // a parquet file without Spark's schema key (as another engine writes it)
+    val foreign = tmp("foreign")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 x; }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$foreign/t/part-0.parquet"))
+      .withConf(conf).withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("x", 7L)) finally w.close()
+    assert(StoredSchema.of(spark, Seq(s"$foreign/t")).isEmpty)
+    assert(StoredSchema.readParquet(spark, s"$foreign/t").as[Long].collect().toSeq == Seq(7L))
   }
 
   test("compact folds every version into one; a one-version store is left alone") {

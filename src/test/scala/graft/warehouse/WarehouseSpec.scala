@@ -180,6 +180,20 @@ class WarehouseSpec extends SparkSpec {
     }
   }
 
+  test("readTableAt starts no Spark job and reads Spark's inferred schema") {
+    val root = tmpDir()
+    ParquetWarehouse.publishSnapshot(root,
+      Map("t" -> Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "amt")))
+    ParquetWarehouse.deleteFromSnapshot(root, "t", Seq(2L).toDF("k"), "k") // v2
+    for (v <- Seq("v1", "v2")) {
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsStartedBy { df = ParquetWarehouse.readTableAt(spark, root, "t", v) } == 0, v)
+      assert(df.schema == spark.read.parquet(s"$root/v1/t").schema, v)
+    }
+    assert(ParquetWarehouse.readTableAt(spark, root, "t", "v2").as[(Long, Double)]
+      .collect().toSet == Set((1L, 10.0), (3L, 30.0)))
+  }
+
   test("snapshot diff labels added, removed, and changed keys; identity diff is empty") {
     val root = tmpDir()
     ParquetWarehouse.publishSnapshot(root,
