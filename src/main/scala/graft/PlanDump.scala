@@ -22,8 +22,8 @@ import scala.util.control.NonFatal
   * per-round join/exchange count lives; `probe:prc_round` the converged
   * variant's round ([[graft.operators.Graph.pageRankConverged]], r17).
   *
-  * A `final:` prefix (r17) EXECUTES the def's frame through the noop sink
-  * first and dumps the FINAL adaptive plan (`explain` pre-execution shows
+  * A `final:` prefix (r17) EXECUTES the def's frame first ([[finalPlan]])
+  * and dumps the FINAL adaptive plan (`explain` pre-execution shows
   * the initial plan only — a join strategy AQE picks at runtime, e.g.
   * SMJ→SHJ under preferSortMergeJoin=false, is only visible post-run).
   *
@@ -36,6 +36,16 @@ object PlanDump {
   private def fmt(df: DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
+
+  /** Run `df` through its OWN query execution, then print that execution's
+    * plan. An adaptive plan is final only in the execution that ran it: a
+    * write of `df` runs a fresh execution, which leaves `df`'s own plan at
+    * `isFinalPlan=false`.
+    */
+  private[graft] def finalPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.executedPlan.toString
+  }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -54,11 +64,9 @@ object PlanDump {
             spark.catalog.clearCache()
             spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
             TempDirs.purgeAll()
-            if (n.startsWith("final:")) {
-              val df = byName(n.stripPrefix("final:")).run(spark, sfDir)
-              df.write.format("noop").mode("overwrite").save()
-              df.queryExecution.executedPlan.toString
-            } else fmt(byName(n).run(spark, sfDir))
+            if (n.startsWith("final:"))
+              finalPlan(byName(n.stripPrefix("final:")).run(spark, sfDir))
+            else fmt(byName(n).run(spark, sfDir))
         }
         Files.writeString(
           Paths.get(s"$outDir/$n.txt".replace("probe:", "probe_").replace("final:", "final_")),

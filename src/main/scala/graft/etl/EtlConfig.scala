@@ -24,13 +24,6 @@ final case class EtlConfig(
 
   /** PostgreSQL JDBC URL from the DB_* parts (reference DB_CONFIG). */
   def jdbcUrl: String = s"jdbc:postgresql://$dbHost:$dbPort/$dbName"
-
-  def jdbcProps: java.util.Properties = {
-    val p = new java.util.Properties
-    p.setProperty("user", dbUser)
-    if (dbPassword.nonEmpty) p.setProperty("password", dbPassword)
-    p
-  }
 }
 
 object EtlConfig {

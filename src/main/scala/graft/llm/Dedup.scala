@@ -483,11 +483,6 @@ object Dedup {
         sh.write.parquet(s"$staging/shingles")
       }
     } finally { sh.unpersist(); () }
-    // a rebuild voids any prior ingest lineage: drop a streaming
-    // high-water mark left beside the store (defense in depth — the mark
-    // is also checkpoint-scoped, see StreamingOps.ReplayGuard)
-    if (replace)
-      graft.warehouse.AtomicPointer.delete(s"$path/_streaming_hwm")
   }
 
   /** [[crossNearDupPairsWithCleanup]] with the corpus side read from a

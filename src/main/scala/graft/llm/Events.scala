@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-stream operators in their BATCH form — the same transformations run
-  * under Structured Streaming (see graft.streaming.StreamingOps); windowed
-  * aggregation and sessionization are the canonical stateful shapes.
+/** Event-stream operators in their BATCH form. Windowed aggregation and
+  * sessionization are the canonical stateful shapes; their streaming twins
+  * (graft.streaming.StreamingOps) run the same transformations, pinned to
+  * these batch forms by StreamingSpec.
   */
 object Events {
 
@@ -227,9 +228,7 @@ object Events {
     * associative, commutative, idempotent — so a day split across
     * appended batches serves the IDENTICAL estimate a single-pass sketch
     * would (spec-pinned), and even a double-appended batch cannot inflate
-    * an estimate; the store's TAG protocol still skips replays, bounding
-    * version growth and defending the one real risk — a source whose
-    * replayed batch differs from the original delivery.
+    * an estimate.
     */
   def rollingDistinctUsersFromStore(spark: org.apache.spark.sql.SparkSession,
                                     storePath: String,

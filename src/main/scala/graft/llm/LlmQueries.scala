@@ -3049,8 +3049,7 @@ object LlmQueries {
     graft.operators.SketchStore.write(
       Events.dailyUserSketches(ev.filter(col("user_id") % 2 === 0)), root)
     graft.operators.SketchStore.append(
-      Events.dailyUserSketches(ev.filter(col("user_id") % 2 =!= 0)), root,
-      tag = Some("batch-2"))
+      Events.dailyUserSketches(ev.filter(col("user_id") % 2 =!= 0)), root)
     Events.rollingDistinctUsersFromStore(t.spark, root, windowDays = 7)
       .orderBy("win_day")
   }

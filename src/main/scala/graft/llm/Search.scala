@@ -255,17 +255,15 @@ object Search {
   // ------------------------------------------------- versioned incremental
 
   /** Commit one version through [[graft.store.VersionedStore]] (`stage`
-    * writes its tables). An optional `tag` commits atomically WITH the
-    * version — the exactly-once bookkeeping the streaming maintainer
-    * needs, since additive tf state cannot be de-duplicated downstream.
-    * The bucket-count precondition is checked before anything is staged,
-    * so a mismatched append fails without writing; `_BUCKETS` lands before
-    * the pointer swap, so a committed version is never served unguarded.
+    * writes its tables). The bucket-count precondition is checked before
+    * anything is staged, so a mismatched append fails without writing;
+    * `_BUCKETS` lands before the pointer swap, so a committed version is
+    * never served unguarded.
     */
-  private def commit(path: String, replace: Boolean, buckets: Int,
-                     tag: Option[String])(stage: String => Unit): Unit = {
+  private def commit(path: String, replace: Boolean, buckets: Int)
+                    (stage: String => Unit): Unit = {
     checkBuckets(path, buckets)
-    VersionedStore.commit(path, replace, tag) { staging =>
+    VersionedStore.commit(path, replace) { staging =>
       stage(staging)
       graft.warehouse.AtomicPointer.write(s"$path/$BucketsFile", buckets.toString)
     }
@@ -290,8 +288,8 @@ object Search {
     */
   private def commitVersion(documents: DataFrame, path: String,
                             replace: Boolean, buckets: Int,
-                            textCol: String, tag: Option[String]): Unit =
-    commit(path, replace, buckets, tag) { staging =>
+                            textCol: String): Unit =
+    commit(path, replace, buckets) { staging =>
       writeVersionPostings(postings(documents, textCol), s"$staging/postings", buckets)
     }
 
@@ -312,9 +310,8 @@ object Search {
     * sole version.
     */
   def initIndex(documents: DataFrame, path: String,
-                buckets: Int = DefaultBuckets, textCol: String = "text",
-                tag: Option[String] = None): Unit =
-    commitVersion(documents, path, replace = true, buckets, textCol, tag)
+                buckets: Int = DefaultBuckets, textCol: String = "text"): Unit =
+    commitVersion(documents, path, replace = true, buckets, textCol)
 
   /** Append one batch's postings as a new version WITHOUT reading existing
     * state (the CountStore contract: the merge is the read side's SUM, so
@@ -323,14 +320,8 @@ object Search {
     * to the same postings as a one-shot build (spec-pinned).
     */
   def appendToIndex(documents: DataFrame, path: String,
-                    buckets: Int = DefaultBuckets, textCol: String = "text",
-                    tag: Option[String] = None): Unit =
-    commitVersion(documents, path, replace = false, buckets, textCol, tag)
-
-  /** Whether any COMMITTED version carries `tag` — the streaming
-    * maintainer's crash-window probe ([[graft.store.VersionedStore.hasTag]]).
-    */
-  def hasTag(path: String, tag: String): Boolean = VersionedStore.hasTag(path, tag)
+                    buckets: Int = DefaultBuckets, textCol: String = "text"): Unit =
+    commitVersion(documents, path, replace = false, buckets, textCol)
 
   // ------------------------------------------- versioned ranked (BM25)
 
@@ -348,9 +339,8 @@ object Search {
     */
   private def commitRankedVersion(documents: DataFrame, path: String,
                                   replace: Boolean, buckets: Int,
-                                  textCol: String,
-                                  tag: Option[String] = None): Unit =
-    commit(path, replace, buckets, tag) { staging =>
+                                  textCol: String): Unit =
+    commit(path, replace, buckets) { staging =>
       val stats = writeRankedPostings(documents, textCol)(
         writeVersionPostings(_, s"$staging/postings", buckets))
       graft.warehouse.AtomicPointer.write(s"$staging/STATS", stats)
@@ -358,18 +348,16 @@ object Search {
 
   /** Bootstrap the versioned RANKED index. */
   def initRankedIndex(documents: DataFrame, path: String,
-                      buckets: Int = DefaultBuckets, textCol: String = "text",
-                      tag: Option[String] = None): Unit =
-    commitRankedVersion(documents, path, replace = true, buckets, textCol, tag)
+                      buckets: Int = DefaultBuckets, textCol: String = "text"): Unit =
+    commitRankedVersion(documents, path, replace = true, buckets, textCol)
 
   /** Append a batch of WHOLE documents to the versioned ranked index
     * without reading existing state (stats merge additively, postings by
     * union — O(batch) however large the index has grown).
     */
   def appendToRankedIndex(documents: DataFrame, path: String,
-                          buckets: Int = DefaultBuckets, textCol: String = "text",
-                          tag: Option[String] = None): Unit =
-    commitRankedVersion(documents, path, replace = false, buckets, textCol, tag)
+                          buckets: Int = DefaultBuckets, textCol: String = "text"): Unit =
+    commitRankedVersion(documents, path, replace = false, buckets, textCol)
 
   /** [[searchRanked]] against the VERSIONED ranked index: one scan over
     * every committed version's postings (bucket- and term-filtered on the

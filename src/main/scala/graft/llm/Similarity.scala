@@ -1515,12 +1515,9 @@ object Similarity {
       centroids.write.mode("overwrite").parquet(s"$path/centroids")
       appendToIvfIndex(embeddings, path, overwrite = true, metaCols = metaCols)
     } finally { centroids.unpersist(); () }
-    // a rebuild voids any prior ingest lineage: drop a streaming
-    // high-water mark left beside the store (defense in depth — the mark
-    // is also checkpoint-scoped, see StreamingOps.ReplayGuard) AND any
-    // MoR tombstones (they referenced the replaced generation; carrying
-    // them over would mask freshly-ingested ids forever)
-    graft.warehouse.AtomicPointer.delete(s"$path/_streaming_hwm")
+    // a rebuild drops any MoR tombstones (they referenced the replaced
+    // generation; carrying them over would mask freshly-ingested ids
+    // forever)
     val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
     delDir.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
       .delete(delDir, true)
@@ -1564,9 +1561,9 @@ object Similarity {
     val rows = ivfIndexRows(batch, centroids, metaCols)
     if (!overwrite) {
       // COLUMN CONTRACT (one footer read per append): an append that
-      // omits the store's metadata columns — e.g. a streaming maintainer
-      // not told about metaCols — would land files parquet happily
-      // accepts, the union read would NULL-FILL the gap, and a serve-time
+      // omits the store's metadata columns — e.g. an ingest job not told
+      // about metaCols — would land files parquet happily accepts, the
+      // union read would NULL-FILL the gap, and a serve-time
       // metadata filter would then silently DROP that generation's rows
       // from every filtered answer. Fail the append instead.
       val have = try Some(spark.read.parquet(s"$path/vectors")
@@ -1588,12 +1585,11 @@ object Similarity {
   }
 
   /** Small-file compaction for a persisted IVF index's `vectors` table —
-    * the maintenance pass a STREAMED index needs (VERDICT r8 #1):
-    * [[appendToIvfIndex]] lands one file set per batch under each touched
-    * cell directory, so a long-lived [[graft.streaming.StreamingOps
-    * .ingestVectorsStream]] accrues `batches × cells` small files whose
-    * footer/open and planner-listing overhead eventually dominates the
-    * probe-pruned scan the cell layout exists to buy. Delegates to the
+    * the maintenance pass an incrementally-appended index needs (VERDICT
+    * r8 #1): [[appendToIvfIndex]] lands one file set per batch under each
+    * touched cell directory, so an index fed by many appends accrues
+    * `batches × cells` small files whose footer/open and planner-listing
+    * overhead eventually dominates the probe-pruned scan the cell layout exists to buy. Delegates to the
     * warehouse's crash-safe per-partition fold
     * ([[graft.warehouse.ParquetWarehouse.compactPartitioned]]): only
     * fragmented cell directories are read back, each rewritten to
@@ -1724,7 +1720,7 @@ object Similarity {
     * upsert's purge and its append can have its tombstone dir deleted
     * mid-write (the delete is then silently lost) or folded before its
     * writer considers it committed. All mutators of one index path —
-    * delete, purge, compact, upsert, streaming maintainers — must be
+    * delete, purge, compact, upsert, append — must be
     * serialized by the caller (one maintenance job per index, the same
     * posture every LSM/iceberg-style store takes for compaction). Readers
     * are unaffected: serves only ever see (data ∖ tombstones) at some
@@ -1755,9 +1751,8 @@ object Similarity {
     * longer tiles the data — RETRAIN AND REBUILD: `writeIvfIndex(corpus,
     * path, quantizer = KMeansQuantizer)` refits centers on the current
     * distribution and rewrites the store (the rebuild IS the retrain
-    * path; it also voids the streaming high-water mark so a restarted
-    * ingest re-guards correctly). File-count skew with balanced rows is
-    * the OTHER disease (fragmentation) — cure with [[compactIvfIndex]].
+    * path). File-count skew with balanced rows is the OTHER disease
+    * (fragmentation) — cure with [[compactIvfIndex]].
     */
   def ivfIndexStats(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -1910,7 +1905,6 @@ object Similarity {
       graft.warehouse.AtomicPointer.write(s"$path/_M2", m2.toString)
       appendToMipsIndex(embeddings, path, overwrite = true)
     } finally { centroids.unpersist(); () }
-    graft.warehouse.AtomicPointer.delete(s"$path/_streaming_hwm")
   }
 
   /** Assign (augmented geometry) + int8-quantize (original floats) a batch
@@ -1979,8 +1973,6 @@ object Similarity {
       spark.read.parquet(s"$indexPath/centroids")
         .select(col("cell").cast("long"), col("c_emb"))
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-
-    def anchorM2: Double = m2
 
     /** The localized augmented-space centroid frame (a LocalRelation). */
     def centroids: DataFrame = {

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * unbounded keys). Merging is cell-wise ADDITION — associative and
   * commutative, so sketches of partitions/days combine to exactly the
   * whole-corpus sketch (NOT idempotent: a replayed append inflates, so a
-  * persisted CMS store needs the TAG dedup of
-  * [[graft.store.VersionedStore]], unlike the HLL store's register-max).
+  * persisted CMS store must append each batch once, unlike the HLL
+  * store's register-max).
   */
 object CountMin {
 

@@ -34,10 +34,9 @@ object CountStore {
         counts.schema.fields.last.dataType.catalogString)
   }
 
-  private def commit(counts: DataFrame, path: String, replace: Boolean,
-                     tag: Option[String] = None): Unit = {
+  private def commit(counts: DataFrame, path: String, replace: Boolean): Unit = {
     requireCountSchema(counts)
-    VersionedStore.commit(path, replace, tag)(s => counts.write.parquet(s"$s/counts"))
+    VersionedStore.commit(path, replace)(s => counts.write.parquet(s"$s/counts"))
   }
 
   /** Publish `counts` as the store's sole version (bootstrap / rebuild). */
@@ -45,21 +44,12 @@ object CountStore {
     commit(counts, path, replace = true)
 
   /** Append a batch's counts as a new version — NOTHING existing is read
-    * or rewritten; the merge is deferred to [[read]]'s sum. An optional
-    * `tag` (e.g. a streaming batch id) is committed atomically with the
-    * version; [[hasTag]] then makes a replayed append detectable, which is
-    * what turns at-least-once delivery into exactly-once counting — a
-    * double-appended histogram would silently DOUBLE-COUNT, the failure
-    * mode no read-side dedup can repair for additive state.
+    * or rewritten; the merge is deferred to [[read]]'s sum. Appending the
+    * same batch twice counts it twice: additive state has no read-side
+    * dedup, so each batch must be appended once.
     */
-  def append(counts: DataFrame, path: String, tag: Option[String] = None): Unit =
-    commit(counts, path, replace = false, tag)
-
-  /** Whether any COMMITTED version carries `tag` (the crash-window
-    * argument is [[graft.store.VersionedStore.hasTag]]'s).
-    */
-  def hasTag(path: String, tag: String): Boolean =
-    VersionedStore.hasTag(path, tag)
+  def append(counts: DataFrame, path: String): Unit =
+    commit(counts, path, replace = false)
 
   /** The summed view across all committed versions. */
   def read(spark: SparkSession, path: String): DataFrame = {

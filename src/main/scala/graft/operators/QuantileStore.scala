@@ -44,12 +44,10 @@ object QuantileStore {
     CountStore.write(histogram(df, keyCol, valueCol), path)
 
   /** Append a batch — nothing existing read or rewritten; the additive
-    * merge defers to serve time. `tag` gives streaming appends the
-    * exactly-once replay guard ([[CountStore.hasTag]]).
+    * merge defers to serve time.
     */
-  def append(df: DataFrame, keyCol: String, valueCol: String, path: String,
-             tag: Option[String] = None): Unit =
-    CountStore.append(histogram(df, keyCol, valueCol), path, tag)
+  def append(df: DataFrame, keyCol: String, valueCol: String, path: String): Unit =
+    CountStore.append(histogram(df, keyCol, valueCol), path)
 
   /** Interpolated percentiles per key from the merged store view: reads
     * |keys|·|buckets| histogram rows, never an event.

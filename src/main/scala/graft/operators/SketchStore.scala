@@ -14,9 +14,8 @@ import graft.store.VersionedStore
   * version without reading existing state, and the merge — register-wise
   * max under `hll_union_agg`, associative, commutative, and IDEMPOTENT —
   * is deferred to [[read]]. Idempotence is the property counts don't
-  * have: re-unioning the same sketch cannot inflate the estimate, while
-  * the exactly-once TAG protocol still prevents the split-day case where
-  * a replayed batch's rows were themselves re-sketched.
+  * have: re-appending a sketch of the same rows cannot inflate an
+  * estimate (spec-pinned).
   *
   * Layout convention: every column but the LAST is a key; the last column
   * is the binary HLL sketch (`hll_sketch_agg` output). At 100 TB each
@@ -40,16 +39,12 @@ object SketchStore {
   }
 
   /** Append a batch's sketches as a new version — nothing existing is read
-    * or rewritten. The optional `tag` commits atomically with the version
-    * (see [[CountStore.append]] for the replay argument).
+    * or rewritten.
     */
-  def append(sketches: DataFrame, path: String, tag: Option[String] = None): Unit = {
+  def append(sketches: DataFrame, path: String): Unit = {
     requireSketchSchema(sketches)
-    VersionedStore.commit(path, replace = false, tag)(s => sketches.write.parquet(s"$s/sketches"))
+    VersionedStore.commit(path, replace = false)(s => sketches.write.parquet(s"$s/sketches"))
   }
-
-  /** Whether any COMMITTED version carries `tag`. */
-  def hasTag(path: String, tag: String): Boolean = VersionedStore.hasTag(path, tag)
 
   /** The union-merged view across all committed versions: one row per key,
     * sketches merged register-wise (identical to having sketched all the

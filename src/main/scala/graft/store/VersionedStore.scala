@@ -13,8 +13,7 @@ import graft.warehouse.AtomicPointer
   *   - `CURRENT`: a newline list of the COMMITTED version dirs, oldest
   *     first, swapped atomically ([[AtomicPointer.write]]);
   *   - `v<N>/`: one version, holding whatever tables the store stages
-  *     into it (counts; buckets + shingles; postings + STATS), plus an
-  *     optional `TAG` naming the batch that committed it.
+  *     into it (counts; buckets + shingles; postings + STATS).
   *
   * A commit stages under the dot-prefixed `.staging-v<N>` (invisible to
   * [[vacuum]] and to listing tools), renames it to `v<N>`, then swaps the
@@ -39,26 +38,22 @@ private[graft] object VersionedStore {
       .getOrElse(Seq.empty)
 
   /** Commit one version: `stage` writes the version's tables into the
-    * staging dir it is handed; then the optional `tag` lands beside them
-    * (visible atomically WITH the version — the exactly-once bookkeeping
-    * of replayed streaming appends), the dir is published and the pointer
+    * staging dir it is handed; then the dir is published and the pointer
     * swaps. `replace = true` makes the new version the sole committed one
     * (bootstrap, rebuild, compaction fold); otherwise it is appended to
     * `base`, the committed list (a store may extend it, as the dedup index
     * adopts a pre-versioning flat layout as version `.`). Run every
     * precondition before calling: a failed check then stages nothing.
     */
-  def commit(path: String, replace: Boolean, tag: Option[String] = None,
+  def commit(path: String, replace: Boolean,
              base: Option[Seq[String]] = None)(stage: String => Unit): Unit = {
     val committed = base.getOrElse(committedVersions(path))
     val next = "v" + (committed.filter(_.matches("v\\d+"))
       .lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1)
     val staging = s"$path/.staging-$next"
-    // a crashed earlier attempt's leftovers (a stale TAG included) must
-    // not ride into this version
+    // a crashed earlier attempt's leftovers must not ride into this version
     AtomicPointer.deleteDir(staging)
     stage(staging)
-    tag.foreach(t => AtomicPointer.write(s"$staging/TAG", t))
     AtomicPointer.publishDir(staging, s"$path/$next")
     AtomicPointer.write(s"$path/$Pointer",
       ((if (replace) Seq.empty else committed) :+ next).mkString("", "\n", "\n"))
@@ -77,15 +72,6 @@ private[graft] object VersionedStore {
       committed.size
     }
   }
-
-  /** Whether any COMMITTED version carries `tag`. A crash between the
-    * publish and the pointer swap leaves an uncommitted orphan whose tag
-    * is invisible here, and the replayed commit re-stages the SAME version
-    * number, clobbering the orphan — so a replay lands exactly once.
-    */
-  def hasTag(path: String, tag: String): Boolean =
-    committedVersions(path).exists(v =>
-      AtomicPointer.read(s"$path/$v/TAG").map(_.trim).contains(tag))
 
   /** Every committed version's `table` as ONE parquet scan: one listing
     * and one set of scan tasks however many versions the store has

@@ -5,16 +5,15 @@ import java.util.EnumSet
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 
-/** Tiny atomic pointer / mark / lock files for path-based table formats —
+/** Tiny atomic pointer and claim files for path-based table formats —
   * the shared primitive behind:
   *   - the warehouse snapshot pointer (one commit step,
-  *     `ParquetWarehouse.commitSnapshot`) and the manifest pointer;
+  *     `ParquetWarehouse.commitSnapshot`), the manifest pointer and the
+  *     manifest commit claims ([[createExclusive]]);
   *   - [[graft.store.VersionedStore]]'s CURRENT version list (the count,
   *     sketch and quantile stores, the dedup corpus index and the search
   *     postings stores), and the version sweep under every vacuum
-  *     ([[graft.store.VersionedStore.sweep]]);
-  *   - the streaming replay high-water mark and writer lease (one guarded
-  *     sink, `StreamingOps.guardedSink`).
+  *     ([[graft.store.VersionedStore.sweep]]).
   *
   * Built on Hadoop's `FileContext` rather than `java.nio.file`, so the same
   * pointer machinery works on `file:`, `hdfs:`, and any other filesystem
@@ -27,8 +26,8 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
   * deployment caveat is inherent to every path-based pointer scheme and
   * documented here once, rather than on each call site.
   *
-  * All contents are small UTF-8 strings (a version list, a batch id, a
-  * lease) — metadata, never data.
+  * All contents are small UTF-8 strings (a version, a version list) —
+  * metadata, never data.
   */
 object AtomicPointer {
 
@@ -74,39 +73,30 @@ object AtomicPointer {
     ctx.rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
-  /** Create `path` with `content` ONLY if absent — the atomic lock/lease
-    * acquisition primitive (CREATE without OVERWRITE; the filesystem
-    * arbitrates the race). Returns false when the file already exists.
+  /** Create an empty file at `path` ONLY if absent — the atomic claim
+    * primitive: of racing creators exactly one gets true, every other
+    * gets false. On `file:` it is `java.nio`'s CREATE_NEW (O_EXCL), since
+    * Hadoop's local create checks for the file and then creates it, a
+    * race; elsewhere it is FileContext CREATE without OVERWRITE, which
+    * HDFS arbitrates in the namenode.
     */
-  def createExclusive(path: String, content: String,
-                      c: Configuration = conf()): Boolean = {
+  def createExclusive(path: String, c: Configuration = conf()): Boolean = {
     val p = new Path(path)
     val ctx = fc(p, c)
+    val q = ctx.makeQualified(p)
     try {
-      val out = ctx.create(p, EnumSet.of(CreateFlag.CREATE),
-        Options.CreateOpts.createParent())
-      try out.write(content.getBytes("UTF-8")) finally out.close()
+      if (q.toUri.getScheme == "file") {
+        val local = java.nio.file.Paths.get(q.toUri)
+        java.nio.file.Files.createDirectories(local.getParent)
+        java.nio.file.Files.createFile(local)
+      } else
+        ctx.create(q, EnumSet.of(CreateFlag.CREATE), Options.CreateOpts.createParent())
+          .close()
       true
     } catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
       case _: java.nio.file.FileAlreadyExistsException => false
     }
-  }
-
-  /** Delete a pointer file if present; false when absent. */
-  def delete(path: String, c: Configuration = conf()): Boolean = {
-    val p = new Path(path)
-    val ctx = fc(p, c)
-    if (!ctx.util.exists(p)) false else ctx.delete(p, false)
-  }
-
-  /** Modification time of a pointer file (for lease staleness); None when
-    * absent.
-    */
-  def mtime(path: String, c: Configuration = conf()): Option[Long] = {
-    val p = new Path(path)
-    val ctx = fc(p, c)
-    if (!ctx.util.exists(p)) None else Some(ctx.getFileStatus(p).getModificationTime)
   }
 
   /** Recursively delete a directory (version-dir garbage collection). */

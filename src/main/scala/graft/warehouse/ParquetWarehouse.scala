@@ -618,8 +618,8 @@ object ParquetWarehouse {
   /** The manifest snapshot the pointer currently publishes. Fails fast on
     * a non-manifested dir — scanning the data directory instead would
     * silently throw away the layout's contract. The pointer's first token
-    * is the version; an optional second token is the committing writer's
-    * tag (see [[manifestCommitTag]]).
+    * is the version (a pointer from an older build may carry a second
+    * token, which nothing reads).
     */
   def currentManifest(spark: SparkSession, path: String): DataFrame = {
     val v = currentManifestVersion(path)
@@ -628,20 +628,8 @@ object ParquetWarehouse {
     spark.read.parquet(s"$path/_manifests/${v.get}")
   }
 
-  private def pointerTokens(path: String): Option[Array[String]] =
-    AtomicPointer.read(s"$path/$ManifestPtr").map(_.trim.split("\\s+"))
-
   def currentManifestVersion(path: String): Option[String] =
-    pointerTokens(path).map(_.head)
-
-  /** The tag the LAST COMMITTED append carried (None for untagged
-    * commits). Because the tag rides the pointer itself — one atomic
-    * rename — a streaming writer can decide "did my crashed attempt
-    * already commit?" with no window between data commit and tag record:
-    * the commit IS the record.
-    */
-  def manifestCommitTag(path: String): Option[String] =
-    pointerTokens(path).flatMap(_.lift(1))
+    AtomicPointer.read(s"$path/$ManifestPtr").map(_.trim.split("\\s+").head)
 
   /** Transactional APPEND to a manifested table — the Iceberg
     * snapshot-commit shape without a catalog (scale layout #6's write
@@ -664,7 +652,7 @@ object ParquetWarehouse {
     * listing on the read path, O(new files) work.
     */
   def appendManifested(df: DataFrame, path: String, keyCol: String,
-                       files: Int = 4, tag: Option[String] = None): Unit = {
+                       files: Int = 4): Unit = {
     val spark = df.sparkSession
     val cur = currentManifest(spark, path)
     val freshIntervals = writeGeneration(spark, path, keyCol,
@@ -675,7 +663,7 @@ object ParquetWarehouse {
         .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
         .parquet(s"$path/data")
     }
-    publishNextManifest(path, cur.unionByName(freshIntervals), tag)
+    publishNextManifest(path, cur.unionByName(freshIntervals))
   }
 
   /** Land one generation of data files and return their manifest rows:
@@ -728,94 +716,27 @@ object ParquetWarehouse {
     * blocks the next append equally loudly; the error names the claim
     * file, and removing it (after confirming no writer is live) unblocks —
     * the deliberate single-writer-per-version posture every manifest-based
-    * table format takes, made explicit instead of assumed. One exception:
-    * a TAGGED writer (the streaming maintainer) re-takes a crashed claim
-    * whose recorded tag is its own — replay-after-crash re-appends instead
-    * of bricking the store, and reuse is still one logical writer per
-    * version.
+    * table format takes, made explicit instead of assumed. The claim is
+    * taken through [[AtomicPointer.createExclusive]] and is empty: it
+    * records only that the version is taken.
     */
-  private def publishNextManifest(path: String, rows: DataFrame,
-                                  tag: Option[String]): Unit = {
+  private def publishNextManifest(path: String, rows: DataFrame): Unit = {
     val base = currentManifestVersion(path) match {
       case Some(v) => v.drop(1).toInt
       case None => throw new IllegalStateException(
         s"publishNextManifest: $path is not a manifested table")
     }
     val target = base + 1
-    val claim = new org.apache.hadoop.fs.Path(manifestClaimFile(path, target))
-    val fs = claim.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    // Claim creation must be (a) atomic create-if-absent and (b) whole —
-    // a racer must never observe a created-but-not-yet-tagged claim
-    // (ADVICE r14 #1: Hadoop's LocalFileSystem implements create(…,
-    // overwrite=false) as exists-then-create — a TOCTOU — and tag bytes
-    // landed after creation, so a concurrent same-tag replay could read
-    // an EMPTY claim and misclassify a legitimate re-take as a conflict).
-    // On file:// the claim is therefore published by HARD-LINKING a fully
-    // written temp file into place: link creation is atomic and fails if
-    // the target exists (O_EXCL semantics WITH content). Non-local
-    // filesystems keep fs.create(overwrite=false) — atomic on HDFS and on
-    // object stores with conditional puts, and their create is not the
-    // local TOCTOU; content visibility there is governed by close().
-    val isLocalFs = {
-      val scheme = claim.toUri.getScheme
-      scheme == null || scheme == "file"
-    }
-    def createViaHadoop(): Boolean =
-      try {
-        val out = fs.create(claim, false)
-        try tag.foreach(t => out.write(t.getBytes("UTF-8"))) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    val claimed =
-      if (!isLocalFs) createViaHadoop()
-      else {
-        val p = java.nio.file.Paths.get(claim.toUri.getPath)
-        java.nio.file.Files.createDirectories(p.getParent)
-        val tmp = p.resolveSibling(s".claim-tmp-${java.util.UUID.randomUUID()}")
-        try {
-          java.nio.file.Files.write(tmp, tag.getOrElse("").getBytes("UTF-8"))
-          try { java.nio.file.Files.createLink(p, tmp); true }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-            // no-hardlink filesystem: degrade to O_EXCL create + write
-            // (atomic create, tag visible after — strictly better than
-            // the Hadoop local path it replaces)
-            case _: UnsupportedOperationException =>
-              try {
-                java.nio.file.Files.write(p, tag.getOrElse("").getBytes("UTF-8"),
-                  java.nio.file.StandardOpenOption.CREATE_NEW,
-                  java.nio.file.StandardOpenOption.WRITE)
-                true
-              } catch { case _: java.io.IOException => false }
-          }
-        } finally { java.nio.file.Files.deleteIfExists(tmp); () }
-      }
-    // A TAGGED writer may re-take its OWN crashed claim (the streaming
-    // maintainer's replay protocol: crash between claim and pointer swap
-    // must re-append, not brick the store — the tag identifies the one
-    // logical writer, so reuse is still single-writer-per-version). The
-    // read is guarded: if the claim cannot be opened (e.g. the create
-    // failed for an unrelated reason and no claim exists), the documented
-    // conflict message below surfaces instead of a raw read exception
-    // (ADVICE r14 #1).
-    val ownCrashedClaim = !claimed && tag.exists { t =>
-      try {
-        val in = fs.open(claim)
-        val content = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-        content == t
-      } catch { case _: java.io.IOException => false }
-    }
-    if (!claimed && !ownCrashedClaim)
+    val claim = manifestClaimFile(path, target)
+    if (!AtomicPointer.createExclusive(claim))
       throw new IllegalStateException(
-        s"manifested commit conflict: ${claim} is already claimed — either a " +
+        s"manifested commit conflict: $claim is already claimed — either a " +
           s"concurrent append committed v$target after this one read v$base " +
           "(retry from the new current manifest) or a crashed writer holds a " +
           "stale claim (remove the claim file after confirming no writer is live)")
     rows.coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_manifests/v$target")
-    AtomicPointer.write(s"$path/$ManifestPtr", s"v$target${tag.fold("")(" " + _)}")
+    AtomicPointer.write(s"$path/$ManifestPtr", s"v$target")
   }
 
   /** Small-file COMPACTION for the manifested layout — the maintenance
@@ -844,7 +765,7 @@ object ParquetWarehouse {
     * side; single-maintainer contract, same as [[compactPartitions]].
     */
   def compactManifested(spark: SparkSession, path: String, keyCol: String,
-                        files: Int = 8, tag: Option[String] = None): Unit = {
+                        files: Int = 8): Unit = {
     val live = currentManifest(spark, path)
       .select("file").collect().map(_.getString(0))
     val intervals = writeGeneration(spark, path, keyCol,
@@ -856,7 +777,7 @@ object ParquetWarehouse {
         .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
         .parquet(s"$path/data")
     }
-    publishNextManifest(path, intervals, tag)
+    publishNextManifest(path, intervals)
   }
 
   /** Reclaim a manifested table's dead bytes: data files NOT referenced

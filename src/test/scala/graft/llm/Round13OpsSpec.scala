@@ -118,37 +118,6 @@ class Round13OpsSpec extends SparkSpec {
       "filtered serve must draw neighbors from both appended generations")
   }
 
-  test("streamed maintenance of a metadata store: metaCols flow through; filtered serve matches batch build") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val small = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val (seedHalf, streamHalf) =
-      (small.filter(col("vec_id") % 2 === 0), small.filter(col("vec_id") % 2 === 1))
-    val root = java.nio.file.Files.createTempDirectory("graft-meta-stream").toString
-    Similarity.writeIvfIndex(seedHalf, s"$root/idx", metaCols = Seq("label"))
-    val stream = MemoryStream[(Long, Array[Float], Int)]
-    stream.addData(streamHalf.select("vec_id", "embedding", "label")
-      .as[(Long, Array[Float], Int)].collect().toSeq)
-    val q = graft.streaming.StreamingOps.ingestVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding", "label"),
-      s"$root/idx", s"$root/ckpt", metaCols = Seq("label"))
-    try q.processAllAvailable() finally q.stop()
-    // the streamed store serves the filtered query identically to a
-    // one-shot batch build over the full corpus (same centroids: the
-    // stream assigns against the stored seed-half quantizer — so compare
-    // against an index built from the same centroids via append)
-    val batchRoot = java.nio.file.Files.createTempDirectory("graft-meta-batch").toString
-    Similarity.writeIvfIndex(seedHalf, s"$batchRoot/idx", metaCols = Seq("label"))
-    Similarity.appendToIvfIndex(streamHalf, s"$batchRoot/idx", metaCols = Seq("label"))
-    val qs = small.filter(col("vec_id") % 100 === 0)
-    def serve(p: String) = Similarity.ivfTopKQuantizedFromIndex(
-      qs, p, k = 5, nProbe = Similarity.IvfCells, filter = Some(col("label") === 3))
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(serve(s"$root/idx") == serve(s"$batchRoot/idx"))
-    assert(serve(s"$root/idx").nonEmpty)
-  }
-
   test("stored filtered serve at full probe ≡ unfiltered serve over an index of the filtered corpus") {
     // quantization is per-row (scale from each vector's own max), so the
     // store contents for the filtered rows are IDENTICAL in both indexes;

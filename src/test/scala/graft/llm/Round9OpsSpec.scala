@@ -1,16 +1,12 @@
 package graft.llm
 
 import graft.SparkSpec
-import graft.streaming.StreamingOps
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Behavior tests for the round-9 scale work: IVF vectors-table compaction
   * (VERDICT r8 #1), the cell-occupancy drift report (#4), enforced
-  * broadcast-small ANN query contracts (#3), the streaming writer lock
-  * (#6), the reliable-checkpoint CC option (#7), and the ADVICE r8 fixes
-  * (vacuum rename→swap window, corrupt-mark degradation, within-batch key
-  * hygiene).
+  * broadcast-small ANN query contracts (#3), the reliable-checkpoint CC
+  * option (#7), and the ADVICE r8 vacuum rename→swap window fix.
   */
 class Round9OpsSpec extends SparkSpec {
 
@@ -58,27 +54,16 @@ class Round9OpsSpec extends SparkSpec {
     assert(fileScanPaths(served).exists(_.contains("/vectors")))
   }
 
-  test("streamed vector ingest with compactEvery folds small files and serves identically") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-ce").toString
-    Similarity.writeIvfIndex(embs.filter(col("vec_id") % 4 === 0), s"$root/idx")
-    def slice(r: Int) = embs.filter(col("vec_id") % 4 === r)
-      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.ingestVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckpt",
-      compactEvery = 2)
-    try {
-      (1 to 3).foreach { r => stream.addData(slice(r)); q.processAllAvailable() }
-    } finally q.stop()
-    // batchId 2 triggered a fold over batches 0-2's appends; batch 3 (one
-    // more file set) landed after — so no cell holds the full 4 file sets
-    val stats = Similarity.ivfIndexStats(spark, s"$root/idx")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(stats.forall(_._3 <= 2),
-      s"compactEvery must bound per-cell file growth: $stats")
-    assert(stats.map(_._2).sum == embs.count(), "no rows lost in the fold")
-    assert(topKRows(s"$root/idx").nonEmpty)
+  test("an IVF append's rows read the batch and the stored centroids, never the vectors table") {
+    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-append-scan").toString
+    Similarity.writeIvfIndex(embs.filter(col("vec_id") % 2 === 0), idx)
+    val rows = Similarity.ivfIndexRows(
+      embs.filter(col("vec_id") % 2 =!= 0).select("vec_id", "embedding"),
+      spark.read.parquet(s"$idx/centroids"))
+    val scanned = fileScanPaths(rows)
+    assert(scanned.exists(_.contains("embeddings.parquet")), s"scans: $scanned")
+    assert(!scanned.exists(_.contains(s"$idx/vectors")),
+      "an append must not scan the stored vectors")
   }
 
   // ------------------------------------------------ drift report (r8 #4)
@@ -158,88 +143,6 @@ class Round9OpsSpec extends SparkSpec {
       .as[Long].collect().toSet
     assert(!after.contains(424242L), "orphan contents must never surface")
     assert(Dedup.vacuumCorpusIndex(idx) == 0, "both versions committed — nothing to vacuum")
-  }
-
-  // ------------------------------------- corrupt mark degradation (ADVICE r8)
-
-  test("a corrupted high-water mark degrades to the Recover posture, not a crash") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hwm-corrupt")
-    val sink = root.resolve("sink"); val ckpt = root.resolve("ckpt")
-    java.nio.file.Files.createDirectories(sink)
-    java.nio.file.Files.createDirectories(ckpt)
-    java.nio.file.Files.writeString(ckpt.resolve("metadata"), """{"id":"q-abc"}""")
-    def freshGuard() = new StreamingOps.ReplayGuard(sink.toString, ckpt.toString)
-    // sane mark: batches at or below it Skip
-    java.nio.file.Files.writeString(sink.resolve("_streaming_hwm"), "q-abc 7")
-    assert(freshGuard().posture(7) == StreamingOps.Skip)
-    // matching qid, garbled batch field (hand-edited/corrupted): the old
-    // parse threw NumberFormatException inside EVERY micro-batch
-    java.nio.file.Files.writeString(sink.resolve("_streaming_hwm"), "q-abc notanumber")
-    assert(freshGuard().posture(7) == StreamingOps.Recover,
-      "an unreadable mark must fall back to the defensive posture")
-    // foreign lineage stays Recover too
-    java.nio.file.Files.writeString(sink.resolve("_streaming_hwm"), "other-query 99")
-    assert(freshGuard().posture(7) == StreamingOps.Recover)
-  }
-
-  // ------------------------------------------------ writer lock (r8 #6)
-
-  test("streaming writer lock: a second checkpoint on one sink fails fast; restarts and stale leases recover") {
-    val root = java.nio.file.Files.createTempDirectory("graft-sink-lock")
-    val sink = root.resolve("sink").toString
-    val a = new StreamingOps.ReplayGuard(sink, root.resolve("ckptA").toString)
-    a.acquireLock()
-    // a DIFFERENT checkpoint is a second concurrent writer — fail fast
-    val b = new StreamingOps.ReplayGuard(sink, root.resolve("ckptB").toString)
-    val e = intercept[IllegalStateException](b.acquireLock())
-    assert(e.getMessage.contains("locked by checkpoint"))
-    // the SAME checkpoint is the same logical writer restarting — allowed
-    new StreamingOps.ReplayGuard(sink, root.resolve("ckptA").toString).acquireLock()
-    // a dead writer's lease goes stale after the TTL and may be broken
-    val bStale = new StreamingOps.ReplayGuard(
-      sink, root.resolve("ckptB").toString, lockTtlMs = 0L)
-    bStale.acquireLock()
-    // ...and now A is the foreigner
-    val aBack = new StreamingOps.ReplayGuard(sink, root.resolve("ckptA").toString)
-    assert(intercept[IllegalStateException](aBack.acquireLock())
-      .getMessage.contains("locked by checkpoint"))
-  }
-
-  test("ingestVectorsStream on a locked sink fails fast end-to-end") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-lock").toString
-    Similarity.writeIvfIndex(embs, s"$root/idx")
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.ingestVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckptA")
-    try {
-      val e = intercept[IllegalStateException] {
-        StreamingOps.ingestVectorsStream(
-          stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckptB")
-      }
-      assert(e.getMessage.contains("one writer per sink"))
-    } finally q.stop()
-  }
-
-  // ------------------------------------- within-batch key hygiene (ADVICE r8)
-
-  test("a Fresh-posture batch violating the unique-key contract lands each key once") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-dupkey").toString
-    Similarity.writeIvfIndex(embs.filter(col("vec_id") % 2 === 0), s"$root/idx")
-    val rows = embs.filter(col("vec_id") % 2 =!= 0)
-      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.ingestVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckpt")
-    try {
-      stream.addData(rows.take(3)); q.processAllAvailable() // batch 0: Recover
-      // batch 1 (Fresh — the no-store-scan fast path) re-sends one key twice
-      stream.addData(rows.drop(3) ++ Seq(rows.last)); q.processAllAvailable()
-    } finally q.stop()
-    val stored = spark.read.parquet(s"$root/idx/vectors")
-    assert(stored.count() == stored.select("vec_id").distinct().count(),
-      "within-batch duplicate keys must not land twice")
   }
 
   // ------------------------------------- reliable-checkpoint CC loop (r8 #7)

@@ -6,9 +6,9 @@ import graft.store.StoreLayout
 import org.apache.spark.sql.functions._
 
 /** The sketch materialized view (e19's gate): split-build ≡ single-build
-  * estimates (HLL union is register-wise max), append-extends, exactly-once
-  * tags, compact/vacuum, accuracy vs the exact rolling count, and the
-  * no-event-rescan serve plan.
+  * estimates (HLL union is register-wise max), append-extends, a repeated
+  * append that inflates nothing, compact/vacuum, accuracy vs the exact
+  * rolling count, and the no-event-rescan serve plan.
   */
 class SketchStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -70,12 +70,16 @@ class SketchStoreSpec extends SparkSpec {
     assert(before < after && after == days.length.toLong)
   }
 
-  test("exactly-once tags: committed tag visible, absent tag not") {
+  test("a batch appended twice serves the estimates of one append") {
     val p = tmp()
-    SketchStore.write(Events.dailyUserSketches(events), p)
-    SketchStore.append(Events.dailyUserSketches(events), p, tag = Some("b7"))
-    assert(SketchStore.hasTag(p, "b7"))
-    assert(!SketchStore.hasTag(p, "b8"))
+    val half = events.filter(col("user_id") % 2 =!= 0)
+    SketchStore.write(Events.dailyUserSketches(events.filter(col("user_id") % 2 === 0)), p)
+    SketchStore.append(Events.dailyUserSketches(half), p)
+    def served() = Events.rollingDistinctUsersFromStore(spark, p)
+      .orderBy("win_day").collect().map(r => (r.getDate(0), r.getLong(1))).toSeq
+    val once = served()
+    SketchStore.append(Events.dailyUserSketches(half), p)
+    assert(served() == once, "union is idempotent: a repeated append inflates nothing")
   }
 
   test("compact folds versions; vacuum removes the old dirs; answers unchanged") {

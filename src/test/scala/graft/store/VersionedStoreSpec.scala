@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 
 /** One crash-replay fault matrix for the versioned-store core, run over
   * every store's own writer. Per store: an orphan `v<N+1>` with garbage
-  * contents (and a stale staging dir) is invisible to reads and to
-  * `hasTag`; the replayed append clobbers it and commits exactly once;
+  * contents (and a stale staging dir) is invisible to reads; the replayed
+  * append clobbers it, clears the staging dir and commits exactly once;
   * vacuum spares max+1 and reclaims replaced versions; and a failed
   * precondition stages nothing. Each store's merge semantics keep their
   * own specs.
@@ -21,15 +21,13 @@ class VersionedStoreSpec extends SparkSpec {
 
   /** One store's writer, read back as a canonical answer. Batch `i`'s
     * contents differ per `i`; `answer` must change if a batch landed
-    * twice or garbage surfaced. `tagged` stores commit the append's tag
-    * (the dedup index's appends take none).
+    * twice or garbage surfaced.
     */
   private case class Writer(
       name: String,
       tables: Seq[String],
-      tagged: Boolean,
       write: (Int, String) => Unit,
-      append: (Int, String, Option[String]) => Unit,
+      append: (Int, String) => Unit,
       answer: String => Seq[String],
       failingAppend: String => Unit,
       emptyAppend: String => Unit)
@@ -42,39 +40,39 @@ class VersionedStoreSpec extends SparkSpec {
   private val terms = Seq("spark", "merge")
 
   private val writers = Seq(
-    Writer("CountStore", Seq("counts"), tagged = true,
+    Writer("CountStore", Seq("counts"),
       (i, p) => CountStore.write(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p),
-      (i, p, t) => CountStore.append(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p, t),
+      (i, p) => CountStore.append(Seq((s"k$i", i + 1L), ("z", 1L)).toDF("k", "n"), p),
       p => CountStore.read(spark, p).collect().map(_.toString).sorted.toSeq,
       p => CountStore.append(Seq(("k", "not-a-count")).toDF("k", "n"), p),
       p => CountStore.append(Seq(("k", 1L)).toDF("k", "n").filter(lit(false)), p)),
-    Writer("SketchStore", Seq("sketches"), tagged = true,
+    Writer("SketchStore", Seq("sketches"),
       (i, p) => SketchStore.write(sketches(i), p),
-      (i, p, t) => SketchStore.append(sketches(i), p, t),
+      (i, p) => SketchStore.append(sketches(i), p),
       p => SketchStore.read(spark, p)
         .select(col("d"), hll_sketch_estimate(col("sk"))).collect().map(_.toString)
         .sorted.toSeq,
       p => SketchStore.append(Seq(("d", 1L)).toDF("d", "not_a_sketch"), p),
       p => SketchStore.append(sketches(0).filter(lit(false)), p)),
-    Writer("Dedup index", Seq("buckets", "shingles"), tagged = false,
+    Writer("Dedup index", Seq("buckets", "shingles"),
       (i, p) => Dedup.writeCorpusIndex(texts(i), p),
-      (i, p, _) => Dedup.appendToCorpusIndex(texts(i), p),
+      (i, p) => Dedup.appendToCorpusIndex(texts(i), p),
       p => (Dedup.indexShingles(spark, p).select(col("doc_id").cast("string")) union
         Dedup.indexBuckets(spark, p).select(concat(lit("b"), col("doc_id"), lit(":"),
           col("band"))))
         .collect().map(_.getString(0)).sorted.toSeq,
       p => Dedup.appendToCorpusIndex(texts(9).select("doc_id"), p),
       p => Dedup.appendToCorpusIndex(texts(9).filter(lit(false)), p)),
-    Writer("Search", Seq("postings"), tagged = true,
+    Writer("Search", Seq("postings"),
       (i, p) => Search.initIndex(texts(i), p, buckets = 8),
-      (i, p, t) => Search.appendToIndex(texts(i), p, buckets = 8, tag = t),
+      (i, p) => Search.appendToIndex(texts(i), p, buckets = 8),
       p => Search.searchAllIndexed(spark, p, terms, buckets = 8)
         .collect().map(_.toString).sorted.toSeq,
       p => Search.appendToIndex(texts(9), p, buckets = 16),
       p => Search.appendToIndex(texts(9).filter(lit(false)), p, buckets = 8)),
-    Writer("Search ranked", Seq("postings"), tagged = true,
+    Writer("Search ranked", Seq("postings"),
       (i, p) => Search.initRankedIndex(texts(i), p, buckets = 8),
-      (i, p, t) => Search.appendToRankedIndex(texts(i), p, buckets = 8, tag = t),
+      (i, p) => Search.appendToRankedIndex(texts(i), p, buckets = 8),
       p => Search.searchRankedIndexed(spark, p, terms, k = 100, buckets = 8)
         .collect().map(_.toString).sorted.toSeq,
       p => Search.appendToRankedIndex(texts(9), p, buckets = 16),
@@ -88,47 +86,43 @@ class VersionedStoreSpec extends SparkSpec {
     Files.createTempDirectory(s"graft-vstore-${name.replace(' ', '-')}").toString
 
   /** A fully-written version dir the pointer does not reference: garbage
-    * rows under every table name, plus a TAG.
+    * rows under every table name.
     */
-  private def plantOrphan(p: String, v: String, tables: Seq[String], tag: String): Unit = {
+  private def plantOrphan(p: String, v: String, tables: Seq[String]): Unit =
     tables.foreach(t =>
       Seq((999999L, "GARBAGE")).toDF("doc_id", "junk").write.parquet(s"$p/$v/$t"))
-    Files.writeString(Paths.get(p, v, "TAG"), tag)
-  }
 
   private def exists(p: String, name: String) = Files.exists(Paths.get(p, name))
 
   for (w <- writers) {
     test(s"fault matrix, ${w.name}: a garbage orphan is invisible; the replay commits once") {
       val clean = tmp(w.name)
-      w.write(0, clean); w.append(1, clean, Some("batch-1")); w.append(2, clean, Some("batch-2"))
+      w.write(0, clean); w.append(1, clean); w.append(2, clean)
       val expected = w.answer(clean)
 
       val p = tmp(w.name)
-      w.write(0, p); w.append(1, p, Some("batch-1"))
+      w.write(0, p); w.append(1, p)
       val committed = w.answer(p)
       // a crashed append of batch 2: renamed into v3 but the pointer never
       // swapped, plus a stale staging dir of an even earlier attempt
-      plantOrphan(p, "v3", w.tables, "batch-2")
+      plantOrphan(p, "v3", w.tables)
       Files.createDirectories(Paths.get(p, ".staging-v3"))
-      Files.writeString(Paths.get(p, ".staging-v3", "TAG"), "stale")
+      Files.writeString(Paths.get(p, ".staging-v3", "STALE"), "stale")
       assert(w.answer(p) == committed, "an uncommitted version leaked into reads")
-      assert(!VersionedStore.hasTag(p, "batch-2"), "an uncommitted version's tag is visible")
       assert(VersionedStore.committedVersions(p) == Seq("v1", "v2"))
 
-      w.append(2, p, Some("batch-2"))
+      w.append(2, p)
       assert(VersionedStore.committedVersions(p) == Seq("v1", "v2", "v3"))
       assert(w.answer(p) == expected, "the replay must land exactly once, garbage never")
-      assert(VersionedStore.hasTag(p, "batch-2") == w.tagged)
-      assert(!VersionedStore.hasTag(p, "stale"), "a stale staging dir rode into the commit")
+      assert(!exists(p, "v3/STALE"), "a stale staging dir rode into the commit")
       assert(!exists(p, ".staging-v3"))
     }
 
     test(s"fault matrix, ${w.name}: vacuum spares max+1 and reclaims replaced versions") {
       val p = tmp(w.name)
-      w.write(0, p); w.append(1, p, None)
+      w.write(0, p); w.append(1, p)
       // a commit caught between its rename and its pointer swap
-      plantOrphan(p, "v3", w.tables, "in-flight")
+      plantOrphan(p, "v3", w.tables)
       assert(VersionedStore.vacuum(p) == 0, "vacuum deleted a version above max committed")
       assert(exists(p, "v3"))
       // a rebuild lands on v3 (clobbering the orphan) and replaces v1, v2
@@ -145,7 +139,7 @@ class VersionedStoreSpec extends SparkSpec {
 
     test(s"read, ${w.name}: no Spark job, and Spark's inferred schema, empty version first") {
       val p = tmp(w.name)
-      w.write(0, p); w.emptyAppend(p); w.append(1, p, None)
+      w.write(0, p); w.emptyAppend(p); w.append(1, p)
       // the schema-only file of the empty version leads the scan
       val orders = Seq(Seq("v2", "v1", "v3"), Seq("v1", "v2", "v3"))
       for (t <- w.tables; vs <- orders) {
@@ -155,13 +149,13 @@ class VersionedStoreSpec extends SparkSpec {
         assert(df.schema == spark.read.parquet(vs.map(v => s"$p/$v/$t"): _*).schema, s"$t over $vs")
       }
       val plain = tmp(w.name)
-      w.write(0, plain); w.append(1, plain, None)
+      w.write(0, plain); w.append(1, plain)
       assert(w.answer(p) == w.answer(plain), "an empty version changed the answer")
     }
 
     test(s"fault matrix, ${w.name}: a failed precondition stages nothing") {
       val p = tmp(w.name)
-      w.write(0, p); w.append(1, p, Some("batch-1"))
+      w.write(0, p); w.append(1, p)
       val before = StoreLayout(p)
       val answer = w.answer(p)
       intercept[Exception](w.failingAppend(p))
@@ -219,7 +213,7 @@ class VersionedStoreSpec extends SparkSpec {
     val one = StoreLayout(p)
     assert(VersionedStore.compact(p)(_ => fail("one version: nothing to fold")) == 0)
     assert(StoreLayout(p) == one)
-    VersionedStore.commit(p, replace = false, tag = Some("b2"))(s =>
+    VersionedStore.commit(p, replace = false)(s =>
       Seq(2L).toDF("x").write.parquet(s"$s/t"))
     assert(VersionedStore.compact(p)(s =>
       VersionedStore.read(spark, p, "t").write.parquet(s"$s/t")) == 2)

@@ -353,81 +353,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("conversion-pair ingest: both crash windows leave the store exact") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def t(s: String) = Timestamp.valueOf(s)
-    val s1 = Seq((10L, t("2024-01-01 10:00:00"), 1L), (11L, t("2024-01-01 11:00:00"), 2L))
-    val p1 = Seq((20L, t("2024-01-02 10:00:00"), 1L), (21L, t("2024-01-03 11:00:00"), 2L))
-    val s2 = Seq((12L, t("2024-01-04 09:00:00"), 3L))
-    val p2 = Seq((22L, t("2024-01-05 09:00:00"), 3L))
-    def pairsIn(path: String): Set[(Long, Long)] =
-      spark.read.parquet(path).select("signup_id", "purchase_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = Set((10L, 20L), (11L, 21L), (12L, 22L))
-
-    // ---- crash window A: mark committed, Spark's commit log lost → the
-    // replayed delivery is SKIPPED outright
-    val rootA = java.nio.file.Files.createTempDirectory("graft-conv-a").toString
-    val sA = MemoryStream[(Long, Timestamp, Long)]
-    val pA = MemoryStream[(Long, Timestamp, Long)]
-    def runA(): Unit = {
-      val q = StreamingOps.ingestConversionPairsStream(
-        sA.toDF().toDF("event_id", "ts", "user_id"),
-        pA.toDF().toDF("event_id", "ts", "user_id"),
-        s"$rootA/store", s"$rootA/ckpt")
-      try q.processAllAvailable() finally q.stop()
-    }
-    sA.addData(s1); pA.addData(p1); runA()
-    sA.addData(s2); pA.addData(p2); runA()
-    assert(pairsIn(s"$rootA/store") == expected)
-    // day-partitioned on disk (the event-log layout): per-day pruning and
-    // compactPartitioned both hang off this
-    val dayDirs = new java.io.File(s"$rootA/store").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("conv_day=")).sorted
-    assert(dayDirs.toSeq == Seq("conv_day=2024-01-02", "conv_day=2024-01-03", "conv_day=2024-01-05"))
-    val oneDay = spark.read.parquet(s"$rootA/store")
-      .filter(col("conv_day") === lit(java.sql.Date.valueOf("2024-01-02")))
-    assert(oneDay.queryExecution.executedPlan.toString.linesIterator
-      .exists(l => l.contains("PartitionFilters") && l.contains("conv_day")),
-      "a one-day read must prune at listing time")
-    assert(oneDay.count() == 1)
-    val commits = new java.io.File(s"$rootA/ckpt/commits").listFiles()
-      .map(_.getName).filterNot(_.startsWith("."))
-    val last = commits.map(_.toLong).max
-    Seq(s"$last", s".$last.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$rootA/ckpt/commits/$f"))
-    }
-    runA()
-    assert(pairsIn(s"$rootA/store") == expected,
-      "a mark-skipped replay must not re-append")
-
-    // ---- crash window B: the append LANDED but the process died before
-    // the mark write (simulated: store pre-populated, no mark, fresh
-    // lineage) → the first delivery runs Recover and the pair-key
-    // anti-join appends nothing already stored
-    val rootB = java.nio.file.Files.createTempDirectory("graft-conv-b").toString
-    val batch1Pairs = StreamingOps.conversionPairsStream(
-        s1.toDF("event_id", "ts", "user_id"), p1.toDF("event_id", "ts", "user_id"))
-      .withColumn("pair_key", concat_ws(":", col("signup_id"), col("purchase_id")))
-      .withColumn("conv_day", to_date(col("purchase_ts")))
-    batch1Pairs.write.partitionBy("conv_day").parquet(s"$rootB/store")
-    val sB = MemoryStream[(Long, Timestamp, Long)]
-    val pB = MemoryStream[(Long, Timestamp, Long)]
-    def runB(): Unit = {
-      val q = StreamingOps.ingestConversionPairsStream(
-        sB.toDF().toDF("event_id", "ts", "user_id"),
-        pB.toDF().toDF("event_id", "ts", "user_id"),
-        s"$rootB/store", s"$rootB/ckpt")
-      try q.processAllAvailable() finally q.stop()
-    }
-    sB.addData(s1); pB.addData(p1); runB() // replayed delivery → Recover, anti-joined
-    assert(pairsIn(s"$rootB/store") == Set((10L, 20L), (11L, 21L)),
-      "a tag-detected replay must not duplicate pairs")
-    sB.addData(s2); pB.addData(p2); runB() // steady state appends
-    assert(pairsIn(s"$rootB/store") == expected)
-  }
-
   test("stateless curation stages run unchanged on a document stream (batch ≡ stream)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -577,539 +502,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("continuous deduped ingest: streamed micro-batches equal sequential batch ingestion") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    def part(r: Long) = docs.filter(col("doc_id") % 3 === r)
-    val initial = part(0)
-    val b1 = part(1).as[(Long, String)].collect().toSeq
-    val b2 = part(2).as[(Long, String)].collect().toSeq
-
-    val root = java.nio.file.Files.createTempDirectory("graft-ingest").toString
-    // streamed path: index seeded with the initial corpus, two micro-batches
-    graft.llm.Dedup.writeCorpusIndex(initial, s"$root/idx_s")
-    // compactEvery = 1: every batch folds the index's version dirs — the
-    // equality below simultaneously proves compaction changes no answers
-    // (the batch twin never compacts)
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingOps.ingestDedupedStream(
-      stream.toDF().toDF("doc_id", "text"),
-      s"$root/idx_s", s"$root/corpus_s", s"$root/ckpt", compactEvery = 1)
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val pointer = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/idx_s", "CURRENT")).trim
-    assert(!pointer.contains("\n"),
-      s"compactEvery=1 must leave a single folded version, got: $pointer")
-
-    // batch twin: same batches through the batch ops sequentially
-    graft.llm.Dedup.writeCorpusIndex(initial, s"$root/idx_b")
-    Seq(b1, b2).foreach { b =>
-      val survivors = graft.llm.Dedup
-        .dedupAgainstIndex(b.toDF("doc_id", "text"), s"$root/idx_b")
-        .localCheckpoint(true)
-      if (survivors.count() > 0) {
-        survivors.write.mode("append").parquet(s"$root/corpus_b")
-        graft.llm.Dedup.appendToCorpusIndex(survivors, s"$root/idx_b")
-      }
-    }
-
-    def corpus(p: String) = spark.read.parquet(p).as[(Long, String)].collect().toSet
-    val streamed = corpus(s"$root/corpus_s")
-    val batch = corpus(s"$root/corpus_b")
-    assert(streamed.nonEmpty && streamed.size < (b1.size + b2.size),
-      "ingest must admit survivors AND drop near-dups of the indexed corpus")
-    assert(streamed == batch, s"stream/batch ingest diverged: " +
-      s"only-stream=${(streamed -- batch).map(_._1)}, only-batch=${(batch -- streamed).map(_._1)}")
-    // the index extended identically too: batch 2's dups of batch-1
-    // SURVIVORS are dropped (cross-batch state lives in the store)
-    def indexedIds(p: String) = graft.llm.Dedup.indexShingles(spark, p)
-      .select("doc_id").as[Long].collect().toSet
-    assert(indexedIds(s"$root/idx_s") == indexedIds(s"$root/idx_b"))
-  }
-
-  test("streaming SCD2: stream equals batch-sequential truth; replay versions nothing") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.warehouse.{ParquetWarehouse, ScdDim}
-    val root = java.nio.file.Files.createTempDirectory("graft-scd-stream").toString
-    val b1 = Seq((1L, "a", "2026-01-01"), (2L, "b", "2026-01-01"))
-    val b2 = Seq((1L, "a2", "2026-02-01"), (2L, "b", "2026-02-01")) // 2 is a no-op
-
-    def dimRows() = ParquetWarehouse.readTable(spark, root, "dim")
-      .orderBy("bk", "effective_from")
-      .select(col("bk"), col("seg"), col("effective_from").cast("string"),
-        col("effective_to").cast("string"), col("is_current"))
-      .as[(Long, String, String, Option[String], Boolean)].collect().toSeq
-
-    val stream = MemoryStream[(Long, String, String)]
-    val q = StreamingOps.ingestScdDimStream(
-      stream.toDF().toDF("bk", "seg", "eff"),
-      root, s"$root/ckpt", Seq("bk"), Seq("seg"), "eff")
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-
-    val expected = Seq(
-      (1L, "a", "2026-01-01", Some("2026-02-01"), false),
-      (1L, "a2", "2026-02-01", None, true),
-      (2L, "b", "2026-01-01", None, true))
-    assert(dimRows() === expected)
-
-    // batch-sequential twin from the same deliveries
-    val dim0 = ScdDim.applyBatch(
-      ScdDim.initial(Seq.empty[(Long, String)].toDF("bk", "seg"), lit("2026-01-01")),
-      b1.map(r => (r._1, r._2)).toDF("bk", "seg"), Seq("bk"), Seq("seg"), lit("2026-01-01"))
-    val dimB = ScdDim.applyBatch(dim0,
-      b2.map(r => (r._1, r._2)).toDF("bk", "seg"), Seq("bk"), Seq("seg"), lit("2026-02-01"))
-    assert(dimB.count() === 3)
-
-    // crash replay: the same b2 re-delivered through a FRESH checkpoint
-    // (reprocessing) — SCD2's no-op rule must version NOTHING
-    val replay = MemoryStream[(Long, String, String)]
-    val q2 = StreamingOps.ingestScdDimStream(
-      replay.toDF().toDF("bk", "seg", "eff"),
-      root, s"$root/ckpt2", Seq("bk"), Seq("seg"), "eff")
-    try { replay.addData(b2); q2.processAllAvailable() } finally q2.stop()
-    assert(dimRows() === expected, "replayed batch must not create versions")
-  }
-
-  test("deduped ingest replay window: a batch re-delivered after a crash duplicates nothing") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val initial = docs.filter(col("doc_id") % 3 === 0)
-    val b1 = docs.filter(col("doc_id") % 3 === 1).as[(Long, String)].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    graft.llm.Dedup.writeCorpusIndex(initial, s"$root/idx")
-    // simulate the crash window: first delivery appended to the corpus but
-    // died BEFORE the index append
-    val survivors = graft.llm.Dedup
-      .dedupAgainstIndex(b1.toDF("doc_id", "text"), s"$root/idx")
-      .localCheckpoint(true)
-    val nSurvivors = survivors.count()
-    assert(nSurvivors > 0)
-    survivors.write.mode("append").parquet(s"$root/corpus")
-    // the replayed delivery arrives through the stream
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingOps.ingestDedupedStream(
-      stream.toDF().toDF("doc_id", "text"), s"$root/idx", s"$root/corpus", s"$root/ckpt")
-    try { stream.addData(b1); q.processAllAvailable() } finally q.stop()
-
-    val corpus = spark.read.parquet(s"$root/corpus")
-    assert(corpus.count() == nSurvivors, "replay must not duplicate corpus rows")
-    assert(corpus.select("doc_id").distinct().count() == nSurvivors)
-    // and the index caught up on the replay
-    val indexed = graft.llm.Dedup.indexShingles(spark, s"$root/idx")
-      .select("doc_id").as[Long].collect().toSet
-    assert(survivors.select("doc_id").as[Long].collect().forall(indexed.contains),
-      "replay must complete the interrupted index append")
-  }
-
-  test("vector ingest replay: a crash-replayed micro-batch does not duplicate index contents") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val half2rows = embs.filter(col("vec_id") % 2 =!= 0)
-      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-replay").toString
-    graft.llm.Similarity.writeIvfIndex(embs.filter(col("vec_id") % 2 === 0), s"$root/idx")
-    val stream = MemoryStream[(Long, Array[Float])]
-    def run(): Unit = {
-      val q = StreamingOps.ingestVectorsStream(
-        stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckpt")
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommitBatch0(): Unit = Seq("0", ".0.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    stream.addData(half2rows)
-    run()
-    // crash window A: appends + high-water mark committed, but the process
-    // died before Spark recorded the batch — erase the checkpoint commit so
-    // the restart re-delivers batchId 0; the guard skips it outright.
-    uncommitBatch0()
-    run()
-    // crash window B: appends landed but the process died BEFORE the mark
-    // write — erase commit AND mark; the restart's first delivery takes the
-    // defensive anti-join path and lands nothing twice.
-    uncommitBatch0()
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/idx/_streaming_hwm"))
-    run()
-    val vectors = spark.read.parquet(s"$root/idx/vectors")
-    assert(vectors.count() == embs.count(), "replayed vectors must not land twice")
-    assert(vectors.select("vec_id").distinct().count() == embs.count())
-  }
-
-  test("daily-sketch ingest: streamed store equals batch build; replays cannot inflate") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val events = graft.Tables.microsTs(
-      spark.read.parquet("/root/testdata/sf0.001/events.parquet"), "ts")
-      .select("user_id", "ts")
-    val rows = events.as[(Long, java.sql.Timestamp)].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-sk-stream").toString
-    val stream = MemoryStream[(Long, java.sql.Timestamp)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestDailySketchStream(
-        stream.toDF().toDF("user_id", "ts"), s"$root/store", s"$root/ckpt")
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    def served(): Seq[(String, Long)] =
-      graft.llm.Events.rollingDistinctUsersFromStore(spark, s"$root/store")
-        .orderBy("win_day")
-        .collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSeq
-    val (a, b) = rows.splitAt(rows.length / 2)
-    stream.addData(a); run()
-    stream.addData(b); run()
-    val expected = graft.llm.Events.rollingDistinctUsersSketch(events)
-      .orderBy("win_day")
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSeq
-    assert(served() == expected,
-      "two streamed appends must serve the single-pass estimates exactly")
-    // crash window A: mark committed, Spark commit log lost — guard skips
-    uncommit(1)
-    run()
-    assert(served() == expected)
-    // crash window B: append landed, process died before the mark — the TAG
-    // detects it; and even a hypothetical double-append could not inflate
-    // (union is register-wise max), which the direct double-append proves:
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/store/_streaming_hwm"))
-    run()
-    assert(served() == expected)
-    graft.operators.SketchStore.append(
-      graft.llm.Events.dailyUserSketches(b.toDF("user_id", "ts")), s"$root/store")
-    assert(served() == expected, "idempotent union: forced double-append changes nothing")
-  }
-
-  test("DSIR count ingest: streamed appends equal batch counts; replays never double-count") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-dsir-stream").toString
-    val stream = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestDsirCountsStream(
-        stream.toDF().toDF("doc_id", "text"), s"$root/store", s"$root/ckpt",
-        buckets = 256)
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    def view(): Map[Long, Long] =
-      graft.operators.CountStore.read(spark, s"$root/store")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (a, b) = rows.splitAt(rows.length / 2)
-    stream.addData(a); run()
-    stream.addData(b); run()
-    val expected = graft.llm.TextAnalysis.dsirBucketCounts(docs, 256)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(view() == expected, "two streamed appends must equal the batch histogram")
-    // crash window A: the mark committed but Spark's commit log was lost —
-    // the restart re-delivers the last batch; the guard skips it outright
-    uncommit(1)
-    run()
-    assert(view() == expected, "a mark-skipped replay must not re-append")
-    // crash window B: the append landed but the process died BEFORE the
-    // mark write — the restart's first delivery finds the batch TAG
-    // already committed in the store and appends nothing (additive state
-    // cannot be repaired downstream, so this is the critical window)
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/store/_streaming_hwm"))
-    run()
-    assert(view() == expected, "a tag-detected replay must not double-count")
-  }
-
-  test("quantile-histogram ingest: streamed percentiles equal the batch serve; replays never shift them") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .select("event_type", "value")
-    val rows = events.as[(String, Double)].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-q-stream").toString
-    val stream = MemoryStream[(String, Double)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestQuantilesStream(
-        stream.toDF().toDF("event_type", "value"), s"$root/store", s"$root/ckpt",
-        keyCol = "event_type", valueCol = "value")
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    def served(): Seq[(String, Int, Long, Double)] =
-      graft.operators.QuantileStore.serve(spark, s"$root/store", Seq(25, 50, 75, 90))
-        .orderBy("event_type", "pct")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val (a, b) = rows.splitAt(rows.length / 2)
-    stream.addData(a); run()
-    stream.addData(b); run()
-    val full = java.nio.file.Files.createTempDirectory("graft-q-full").toString
-    graft.operators.QuantileStore.write(events, "event_type", "value", full)
-    val expected = graft.operators.QuantileStore.serve(spark, full, Seq(25, 50, 75, 90))
-      .orderBy("event_type", "pct")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(served() == expected,
-      "two streamed appends must serve the one-shot percentiles exactly")
-    // crash window A: mark committed, Spark commit log lost — guard skips
-    uncommit(1)
-    run()
-    assert(served() == expected, "a mark-skipped replay must not re-append")
-    // crash window B: append landed, process died before the mark — the
-    // TAG detects it (a double-appended histogram shifts every rank)
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/store/_streaming_hwm"))
-    run()
-    assert(served() == expected, "a tag-detected replay must not double-count")
-  }
-
-  test("manifested-table ingest: streamed appends serve point probes; replays never double rows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.warehouse.ParquetWarehouse
-    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .select("o_orderkey", "o_totalprice")
-    val rows = orders.as[(Long, Double)].collect().toSeq.sortBy(_._1)
-    val root = java.nio.file.Files.createTempDirectory("graft-manifest-stream").toString
-    val store = s"$root/store"
-    // the streaming maintainer appends; the table must pre-exist (v1)
-    val (seed, rest) = rows.splitAt(rows.length / 3)
-    ParquetWarehouse.writeManifested(
-      seed.toDF("o_orderkey", "o_totalprice"), store, "o_orderkey", files = 2)
-    val stream = MemoryStream[(Long, Double)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestManifestedStream(
-        stream.toDF().toDF("o_orderkey", "o_totalprice"), store, "o_orderkey",
-        s"$root/ckpt", files = 2)
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    // bounded probe (five keys spanning seed + both batches) plus the
-    // manifest's exact row accounting — a doubled or dropped batch moves
-    // the n_rows total even where the probe keys miss it
-    val probeKeys = Seq(rows.head._1, rows(rows.length / 4)._1,
-      rows(rows.length / 2)._1, rows(3 * rows.length / 4)._1, rows.last._1).distinct
-    val probeExpect = rows.filter(r => probeKeys.contains(r._1))
-    def served(): (Seq[(Long, Double)], Long) = (
-      ParquetWarehouse.manifestProbe(spark, store, "o_orderkey", probeKeys)
-        .as[(Long, Double)].collect().toSeq.sortBy(_._1),
-      ParquetWarehouse.currentManifest(spark, store)
-        .agg(sum("n_rows")).head().getLong(0))
-    val want = (probeExpect, rows.length.toLong)
-    val (b1, b2) = rest.splitAt(rest.length / 2)
-    stream.addData(b1); run()
-    stream.addData(b2); run()
-    assert(served() == want, "seed + two streamed batches serve every row exactly once")
-    // crash window A: the mark committed but Spark's commit log was lost —
-    // the restart re-delivers the last batch; the guard skips it outright
-    uncommit(1)
-    run()
-    assert(served() == want, "a mark-skipped replay must not re-append")
-    // crash window B: the POINTER swap landed (data committed) but the
-    // process died before the mark write — the replay finds its own tag ON
-    // the pointer and only re-commits the mark; a blind re-append would
-    // double every row of the batch
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$store/_streaming_hwm"))
-    assert(ParquetWarehouse.manifestCommitTag(store).contains("batch-1"))
-    run()
-    assert(served() == want, "a tag-detected replay must not double rows")
-    // crash window C (the manifested-specific one): data files landed but
-    // the POINTER never swapped — the files are orphans; the replay
-    // re-appends fresh files and commits them, rows exactly once
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$store/_streaming_hwm"))
-    // roll the pointer back to the pre-batch-1 manifest (v2 = batch 0's
-    // commit), stranding batch 1's files exactly as a pre-swap crash would
-    graft.warehouse.AtomicPointer.write(s"$store/_MANIFEST_CURRENT", "v2 batch-0")
-    run()
-    assert(served() == want,
-      "a pre-swap crash replay must re-land the batch exactly once (orphans invisible)")
-    // the stranded orphans are reclaimable and reclaim changes nothing served
-    val (orphans, _) = ParquetWarehouse.vacuumManifested(spark, store)
-    assert(orphans >= 2, s"the stranded attempt's files must reclaim, got $orphans")
-    assert(served() == want)
-  }
-
-  test("steady-state vector ingest plans no scan over the stored vectors table") {
-    implicit val sqlCtx = spark.sqlContext
-    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-steady").toString
-    graft.llm.Similarity.writeIvfIndex(embs, s"$root/idx")
-    val batch = embs.select("vec_id", "embedding")
-    // steady state: the appended rows are a pure function of the batch
-    val fresh = StreamingOps.ingestVectorRows(batch, s"$root/idx", recover = false)
-    assert(!fileScanPaths(fresh).exists(_.contains("/idx/vectors")),
-      "steady-state micro-batch must not scan the store's key column")
-    // the full append frame reads only the (≤cells-row) centroids table
-    val appended = graft.llm.Similarity.ivfIndexRows(
-      fresh, spark.read.parquet(s"$root/idx/centroids"))
-    assert(!fileScanPaths(appended).exists(_.contains("/idx/vectors")))
-    // the crash-recovery delivery is the ONLY one that pays the key scan
-    val recover = StreamingOps.ingestVectorRows(batch, s"$root/idx", recover = true)
-    assert(fileScanPaths(recover).exists(_.contains("/idx/vectors")))
-  }
-
-  test("steady-state deduped ingest executes no scan over the corpus store") {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val initial = docs.filter(col("doc_id") % 3 === 0)
-    val b1 = docs.filter(col("doc_id") % 3 === 1).as[(Long, String)].collect().toSeq
-    val b2 = docs.filter(col("doc_id") % 3 === 2).as[(Long, String)].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-steady").toString
-    graft.llm.Dedup.writeCorpusIndex(initial, s"$root/idx")
-    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        fileScanPaths(qe.analyzed).foreach(p => scanned.add(p))
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val stream = MemoryStream[(Long, String)]
-      val q = StreamingOps.ingestDedupedStream(
-        stream.toDF().toDF("doc_id", "text"), s"$root/idx", s"$root/corpus", s"$root/ckpt")
-      try {
-        stream.addData(b1); q.processAllAvailable() // batch 0: Recover posture
-        scanned.clear()
-        stream.addData(b2); q.processAllAvailable() // batch 1: steady state
-      } finally q.stop()
-      // listener events post asynchronously — wait for batch 1's evidence
-      // (the semantic dedup's index scan) before asserting an absence
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      def sawIndexScan = scanned.asScala.exists(p => p.contains("/idx/") && p.contains("buckets"))
-      while (!sawIndexScan && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(sawIndexScan, "expected the index bucket scan to be captured")
-      assert(!scanned.asScala.exists(_.contains(s"$root/corpus")),
-        "steady-state micro-batch must not scan the corpus store's key column")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("ReplayGuard: skip at-or-below the mark, anti-join only on the first delivery after restart") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-guard").toString
-    def checkpoint(id: String): String = {
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-guard-ckpt-$id")
-      java.nio.file.Files.writeString(ckpt.resolve("metadata"), s"""{"id":"$id"}""")
-      ckpt.toString
-    }
-    val ckptA = checkpoint("query-a")
-    val g1 = new StreamingOps.ReplayGuard(dir, ckptA)
-    assert(g1.posture(0L) == StreamingOps.Recover, "first-ever delivery is defensively idempotent")
-    g1.commit(0L)
-    assert(g1.posture(1L) == StreamingOps.Fresh, "later in-run deliveries are guaranteed unseen")
-    g1.commit(1L)
-    // restart after a crash between the mark write and the checkpoint
-    // commit: batch 1 replays and is skipped; batch 2 is then fresh
-    val g2 = new StreamingOps.ReplayGuard(dir, ckptA)
-    assert(g2.posture(1L) == StreamingOps.Skip)
-    assert(g2.posture(2L) == StreamingOps.Fresh)
-    g2.commit(2L)
-    // restart after a crash before the mark write: batch 3 recovers
-    val g3 = new StreamingOps.ReplayGuard(dir, ckptA)
-    assert(g3.posture(3L) == StreamingOps.Recover)
-    // a NEW checkpoint lineage renumbers batches from 0: the old mark must
-    // NOT suppress them (an unscoped mark would silently drop every batch
-    // up to the old high-water — data loss)
-    val g4 = new StreamingOps.ReplayGuard(dir, checkpoint("query-b"))
-    assert(g4.posture(0L) == StreamingOps.Recover,
-      "a mark from another checkpoint lineage must never Skip")
-    assert(g4.posture(1L) == StreamingOps.Fresh)
-  }
-
-  test("vector ingest after a checkpoint reset lands new data instead of skipping it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val part1 = embs.filter(col("vec_id") % 4 === 1)
-      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
-    val part2 = embs.filter(col("vec_id") % 4 === 2)
-      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-reset").toString
-    graft.llm.Similarity.writeIvfIndex(embs.filter(col("vec_id") % 4 === 0), s"$root/idx")
-    def ingest(rows: Seq[(Long, Array[Float])]): Unit = {
-      val stream = MemoryStream[(Long, Array[Float])]
-      stream.addData(rows)
-      val q = StreamingOps.ingestVectorsStream(
-        stream.toDF().toDF("vec_id", "embedding"), s"$root/idx", s"$root/ckpt")
-      try q.processAllAvailable() finally q.stop()
-    }
-    ingest(part1)
-    // operational reset: the checkpoint is lost; a NEW stream (same path)
-    // renumbers micro-batches from 0 — the high-water mark left by the old
-    // lineage must not suppress the new batch 0
-    def rmdir(p: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    rmdir(s"$root/ckpt")
-    ingest(part2)
-    val stored = spark.read.parquet(s"$root/idx/vectors")
-      .select("vec_id").as[Long].collect().toSet
-    assert(part2.map(_._1).forall(stored.contains),
-      "post-reset batches must land (stale mark would silently drop them)")
-    assert(stored.size == embs.filter(col("vec_id") % 4 =!= 3).count(),
-      "no duplicates either — the reset lineage recovers idempotently")
-  }
-
-  test("continuous vector ingest: streamed index contents equal the batch-built index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val half1 = embs.filter(col("vec_id") % 2 === 0)
-    val half2rows = embs.filter(col("vec_id") % 2 =!= 0)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-ingest").toString
-    graft.llm.Similarity.writeIvfIndex(half1, s"$root/idx_s")
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.ingestVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding"), s"$root/idx_s", s"$root/ckpt")
-    try {
-      stream.addData(half2rows.take(half2rows.size / 2)); q.processAllAvailable()
-      stream.addData(half2rows.drop(half2rows.size / 2)); q.processAllAvailable()
-    } finally q.stop()
-
-    // batch twin with the same initial centroids (same corpus + seed)
-    graft.llm.Similarity.writeIvfIndex(half1, s"$root/idx_b")
-    graft.llm.Similarity.appendToIvfIndex(
-      half2rows.toDF("vec_id", "embedding"), s"$root/idx_b")
-
-    def rows(p: String) = spark.read.parquet(p)
-      .select(col("vec_id"), col("cell").cast("long"), col("scale"), col("q"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2).toString,
-        r.getSeq[Int](3).mkString(","))).toSet
-    val streamed = rows(s"$root/idx_s/vectors")
-    assert(streamed.size == embs.count(), "every vector lands in the streamed index exactly once")
-    assert(streamed == rows(s"$root/idx_b/vectors"),
-      "streamed index contents must equal the batch-built index")
-  }
-
   test("late events beyond the watermark are dropped from finalized windows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1165,116 +557,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed event-log landing: day-partitioned store equals the batch write, dups dropped") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val b1 = Seq(
-      ev(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-      ev(2, "2024-01-02 11:00:00", 2, "click", 2.0),
-      ev(2, "2024-01-02 11:00:00", 2, "click", 99.0)) // within-batch dup key
-    val b2 = Seq(
-      ev(3, "2024-01-02 12:00:00", 1, "view", 3.0),
-      ev(4, "2024-01-03 09:00:00", 3, "purchase", 4.0))
-    val root = java.nio.file.Files.createTempDirectory("graft-evingest").toString
-    val stream = MemoryStream[EventRow]
-    val q = StreamingOps.ingestEventsStream(
-      stream.toDF(), s"$root/store", s"$root/ckpt")
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val stored = spark.read.parquet(s"$root/store")
-    assert(stored.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-    // day-partitioned on disk: one directory per event date
-    val dirs = new java.io.File(s"$root/store").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("event_date=")).sorted
-    assert(dirs.toSeq == Seq("event_date=2024-01-01", "event_date=2024-01-02", "event_date=2024-01-03"))
-    // a one-day read prunes at listing time
-    val oneDay = stored.filter(col("event_date") === lit(java.sql.Date.valueOf("2024-01-02")))
-    val plan = oneDay.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("event_date")))
-    assert(oneDay.count() == 2)
-    // first arrival's payload survived the within-batch dedup
-    assert(stored.filter(col("event_id") === 2).select("value").as[Double].collect().toSeq == Seq(2.0))
-  }
-
-  test("event-log ingest replay: a crash-replayed micro-batch does not duplicate the store") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val b1 = Seq(
-      ev(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-      ev(2, "2024-01-02 11:00:00", 2, "click", 2.0))
-    val root = java.nio.file.Files.createTempDirectory("graft-evreplay").toString
-    // crash window: the first delivery's append landed but the high-water
-    // mark never committed
-    b1.toDF().withColumn("event_date", to_date(col("ts")))
-      .write.partitionBy("event_date").parquet(s"$root/store")
-    val stream = MemoryStream[EventRow]
-    val q = StreamingOps.ingestEventsStream(stream.toDF(), s"$root/store", s"$root/ckpt")
-    try {
-      stream.addData(b1); q.processAllAvailable() // replayed delivery → Recover, pruned to b1's days
-      stream.addData(Seq(ev(3, "2024-01-02 12:00:00", 1, "view", 3.0)))
-      q.processAllAvailable() // steady state appends
-    } finally q.stop()
-    val stored = spark.read.parquet(s"$root/store")
-    assert(stored.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L),
-      "replay must not duplicate, steady state must append")
-  }
-
-  test("MIPS vector ingest: streamed index equals batch twin; anchor violation fails the stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val half1 = embs.filter(col("vec_id") % 2 === 0)
-    // the streamed half scales down 0.9×, so every appended norm sits
-    // inside the anchor M² the build half froze
-    val half2rows = embs.filter(col("vec_id") % 2 =!= 0)
-      .select("vec_id", "embedding")
-      .as[(Long, Array[Float])].collect().toSeq
-      .map { case (id, e) => (id, e.map(x => x * 0.9f)) }
-
-    val root = java.nio.file.Files.createTempDirectory("graft-mips-ingest").toString
-    graft.llm.Similarity.writeMipsIndex(half1, s"$root/idx_s")
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.ingestMipsVectorsStream(
-      stream.toDF().toDF("vec_id", "embedding"), s"$root/idx_s", s"$root/ckpt")
-    try {
-      stream.addData(half2rows.take(half2rows.size / 2)); q.processAllAvailable()
-      stream.addData(half2rows.drop(half2rows.size / 2)); q.processAllAvailable()
-    } finally q.stop()
-
-    graft.llm.Similarity.writeMipsIndex(half1, s"$root/idx_b")
-    graft.llm.Similarity.appendToMipsIndex(
-      half2rows.toDF("vec_id", "embedding"), s"$root/idx_b")
-
-    def rows(p: String) = spark.read.parquet(p)
-      .select(col("vec_id"), col("cell").cast("long"), col("scale"), col("q"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2).toString,
-        r.getSeq[Int](3).mkString(","))).toSet
-    val streamed = rows(s"$root/idx_s/vectors")
-    assert(streamed.size == embs.count(), "every vector lands exactly once")
-    assert(streamed == rows(s"$root/idx_b/vectors"),
-      "streamed MIPS index contents must equal the batch-built index")
-
-    // a batch with a vector LONGER than the frozen anchor must fail the
-    // query loudly — silent mis-geometry is the failure mode the sidecar
-    // contract exists to prevent (own index + checkpoint: the writer
-    // lease correctly refuses a second checkpoint on idx_s)
-    graft.llm.Similarity.writeMipsIndex(half1, s"$root/idx_v")
-    val bad = MemoryStream[(Long, Array[Float])]
-    val q2 = StreamingOps.ingestMipsVectorsStream(
-      bad.toDF().toDF("vec_id", "embedding"), s"$root/idx_v", s"$root/ckpt2")
-    try {
-      bad.addData(half2rows.take(1).map { case (id, e) =>
-        (id + 900000000L, e.map(x => x * 10f)) })
-      val err = intercept[Exception] { q2.processAllAvailable() }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Nil else t.getMessage +: chain(t.getCause)
-      assert(chain(err).exists(m => m != null && m.contains("exceeds the index anchor")),
-        s"expected the anchor violation to surface, got: ${chain(err)}")
-    } finally q2.stop()
-  }
-
   test("session windows merge across micro-batches and finalize past the watermark (e05 streaming twin)") {
     // substantiates the Events.sessionWindows claim that the SAME operator
     // runs stateful under Structured Streaming: a later micro-batch must
@@ -1310,90 +592,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("ranked postings ingest: streamed BM25 store equals one-shot; replays never inflate stats") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    val terms = Seq("spark", "join", "window")
-    val root = java.nio.file.Files.createTempDirectory("graft-ranked-stream").toString
-    val stream = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestRankedPostingsStream(
-        stream.toDF().toDF("doc_id", "text"), s"$root/idx", s"$root/ckpt",
-        buckets = 32)
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    def served(): Seq[(Long, Double)] =
-      graft.llm.Search.searchRankedIndexed(spark, s"$root/idx", terms, k = 20, buckets = 32)
-        .orderBy("doc_id").as[(Long, Double)].collect().toSeq
-    val (a, b) = rows.splitAt(rows.length / 2)
-    stream.addData(a); run()
-    stream.addData(b); run()
-    val oneShot = java.nio.file.Files.createTempDirectory("graft-ranked-1shot").toString
-    graft.llm.Search.writeRankedIndex(docs, oneShot, buckets = 32)
-    val expected = graft.llm.Search.searchRanked(spark, oneShot, terms, k = 20, buckets = 32)
-      .orderBy("doc_id").as[(Long, Double)].collect().toSeq
-    assert(expected.nonEmpty)
-    assert(served() == expected, "two streamed appends must equal the one-shot ranked index")
-    // crash window A: mark committed, Spark commit log lost — guard skips
-    uncommit(1)
-    run()
-    assert(served() == expected, "a mark-skipped replay must not re-append")
-    // crash window B: append landed, process died before the mark — a
-    // double-append would inflate tf AND the stats sidecar (idf/avgdl
-    // would silently shift for every query); the committed TAG detects it
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/idx/_streaming_hwm"))
-    run()
-    assert(served() == expected, "a tag-detected replay must not inflate the ranked store")
-  }
-
-  test("postings ingest: streamed index equals one-shot build; replays never double tf") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    val terms = Seq("spark", "window", "merge")
-    val root = java.nio.file.Files.createTempDirectory("graft-postings-stream").toString
-    val stream = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = StreamingOps.ingestPostingsStream(
-        stream.toDF().toDF("doc_id", "text"), s"$root/idx", s"$root/ckpt",
-        buckets = 32)
-      try q.processAllAvailable() finally q.stop()
-    }
-    def uncommit(id: Long): Unit = Seq(s"$id", s".$id.crc").foreach { f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f"))
-    }
-    def served(): Seq[(Long, Long)] =
-      graft.llm.Search.searchAllIndexed(spark, s"$root/idx", terms, buckets = 32)
-        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    val (a, b) = rows.splitAt(rows.length / 2)
-    stream.addData(a); run()
-    stream.addData(b); run()
-    val expected = graft.llm.Search.searchAllDirect(docs, terms)
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    assert(expected.nonEmpty, "fixture corpus must contain conjunctive matches")
-    assert(served() == expected, "two streamed appends must equal the one-shot index")
-    // crash window A: mark committed, Spark commit log lost — guard skips
-    uncommit(1)
-    run()
-    assert(served() == expected, "a mark-skipped replay must not re-append")
-    // crash window B: append landed, process died before the mark — the
-    // committed batch TAG detects it (additive tf cannot be repaired
-    // downstream, so this is the critical window)
-    uncommit(1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/idx/_streaming_hwm"))
-    run()
-    assert(served() == expected, "a tag-detected replay must not double tf")
-  }
-
   test("streaming JSONL quarantine: corrupt lines surface through the stream too") {
     import graft.etl.JsonlExtract
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-quar").toString
@@ -1408,37 +606,5 @@ class StreamingSpec extends SparkSpec {
       assert(quarantined.length == 1)
       assert(quarantined(0).getAs[String]("_corrupt_record").contains("broken"))
     } finally q.stop()
-  }
-
-  test("every guarded maintainer refuses a sink another live checkpoint holds, before any query starts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-lock-matrix").toString
-    def in() = MemoryStream[EventRow].toDF()
-    def m(name: String)(start: (String, String) => Any) = name -> start
-    val maintainers = Seq(
-      m("conversion-pairs")((s, c) =>
-        StreamingOps.ingestConversionPairsStream(in(), in(), s, c)),
-      m("deduped")((s, c) => StreamingOps.ingestDedupedStream(in(), s, s"$s-corpus", c)),
-      m("dsir-counts")((s, c) => StreamingOps.ingestDsirCountsStream(in(), s, c)),
-      m("quantiles")((s, c) =>
-        StreamingOps.ingestQuantilesStream(in(), s, c, "user_id", "value")),
-      m("postings")((s, c) => StreamingOps.ingestPostingsStream(in(), s, c)),
-      m("manifested")((s, c) => StreamingOps.ingestManifestedStream(in(), s, "event_id", c)),
-      m("ranked-postings")((s, c) => StreamingOps.ingestRankedPostingsStream(in(), s, c)),
-      m("daily-sketch")((s, c) => StreamingOps.ingestDailySketchStream(in(), s, c)),
-      m("vectors")((s, c) => StreamingOps.ingestVectorsStream(in(), s, c)),
-      m("mips-vectors")((s, c) => StreamingOps.ingestMipsVectorsStream(in(), s, c)),
-      m("events")((s, c) => StreamingOps.ingestEventsStream(in(), s, c)))
-    val active = spark.streams.active.length
-    maintainers.foreach { case (name, start) =>
-      val sink = s"$root/$name/sink"
-      new StreamingOps.ReplayGuard(sink, s"$root/$name/ckpt-holder").acquireLock()
-      val ckpt = s"$root/$name/ckpt"
-      val e = intercept[IllegalStateException](start(sink, ckpt))
-      assert(e.getMessage.contains("locked by checkpoint"), name)
-      assert(spark.streams.active.length === active, s"$name started a query")
-      assert(!new java.io.File(ckpt).exists, s"$name wrote its checkpoint")
-    }
   }
 }

@@ -301,6 +301,47 @@ class ManifestSpec extends SparkSpec {
     }
   }
 
+  test("createExclusive: of racing creators exactly one wins, with or without a scheme") {
+    withTmp { root =>
+      for (claim <- Seq(s"$root/a/.claim-v2", s"file://$root/b/.claim-v2")) {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val wins = new java.util.concurrent.atomic.AtomicInteger()
+        val racers = (1 to 8).map { _ =>
+          val t = new Thread(() => {
+            start.await()
+            if (AtomicPointer.createExclusive(claim)) wins.incrementAndGet()
+          })
+          t.start(); t
+        }
+        start.countDown()
+        racers.foreach(_.join())
+        assert(wins.get == 1, s"$claim: ${wins.get} creators won")
+        assert(!AtomicPointer.createExclusive(claim))
+      }
+    }
+  }
+
+  test("a taken claim fails the append by name and is left byte-identical") {
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    withTmp { root =>
+      val path = s"$root/orders_m"
+      ParquetWarehouse.writeManifested(
+        orders.filter(col("o_orderkey") % 2 === 0), path, "o_orderkey", files = 2)
+      val claim = java.nio.file.Paths.get(ParquetWarehouse.manifestClaimFile(path, 2))
+      java.nio.file.Files.createDirectories(claim.getParent)
+      java.nio.file.Files.writeString(claim, "held by another writer")
+      val held = java.nio.file.Files.readAllBytes(claim)
+      val e = intercept[IllegalStateException] {
+        ParquetWarehouse.appendManifested(
+          orders.filter(col("o_orderkey") % 2 === 1), path, "o_orderkey", files = 2)
+      }
+      assert(e.getMessage.contains(claim.toString), s"claim not named: ${e.getMessage}")
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(claim), held),
+        "a failed append must leave the claim as it found it")
+      assert(ParquetWarehouse.currentManifestVersion(path).contains("v1"))
+    }
+  }
+
   test("concurrent committers: the claim gate fails the loser loudly, losing nothing (VERDICT r13 #7)") {
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val mm = orders.agg(min("o_orderkey"), max("o_orderkey")).head()
